@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ontology_data import PREDICATE_PHRASES, surfaces
+from .session import local_df
 
 __all__ = ["documents_interleaved", "interleave_docs", "spans_exploded",
            "explode_spans", "corpus_ctes", "N_SURF"]
@@ -50,12 +51,15 @@ N_SURF = len(surfaces())
 
 
 def _doc_str(d: Column) -> Column:
-    return F.concat(F.lit("DOC:"), F.lpad(d.cast("string"), 6, "0"))
+    """DOC:<id>, zero-padded to six digits. lpad truncates longer
+    strings, so ids of seven or more digits are left unpadded."""
+    s = d.cast("string")
+    return F.concat(F.lit("DOC:"),
+                    F.when(F.length(s) < 6, F.lpad(s, 6, "0")).otherwise(s))
 
 
 def _surf_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(i, s) for i, s in enumerate(surfaces())], "idx int, s string")
+    return local_df(spark, list(enumerate(surfaces())), "idx int, s string")
 
 
 def documents_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -204,7 +208,9 @@ def corpus_ctes() -> str:
 {surf_values},
 d0 AS (
   SELECT doc_id AS d,
-         'DOC:' || lpad(CAST(doc_id AS VARCHAR), 6, '0') AS doc,
+         'DOC:' || CASE WHEN length(CAST(doc_id AS VARCHAR)) < 6
+                        THEN lpad(CAST(doc_id AS VARCHAR), 6, '0')
+                        ELSE CAST(doc_id AS VARCHAR) END AS doc,
          text, CAST(n_chars AS INT) AS nc
   FROM documents
 ),

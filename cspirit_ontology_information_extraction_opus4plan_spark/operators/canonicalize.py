@@ -32,14 +32,23 @@ explicit (SURVEY §4.1). Lineage is truncated with an eager
 localCheckpoint every round (the checkpointed frame also serves the
 convergence count), else the loop's plan doubles per iteration.
 
-At local test scale the graph is dimension-sized; the loop, salting and
-checkpoint cadence are exactly what runs on the cluster-size graph.
+Size check: connected_components first collects nodes and edges with
+``limit(localgraph.ROW_BOUND + 1).toArrow()``. If each has at most
+ROW_BOUND rows — an ontology-sized graph, the canonical_mapping case —
+it is solved in the driver (localgraph.components: np.unique
+factorisation, np.minimum.at hooking and pointer jumping) and returned
+as a local relation, in the few jobs of the two collections instead of
+two localCheckpoints and a count per round. Larger graphs run the loop
+above: it stays because it is the only path for a cluster-size graph
+that does not fit in one process. Both paths give the same mapping.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import localgraph
 
 __all__ = ["equivalence_edges", "equivalence_star_edges",
            "connected_components", "canonical_mapping", "canonical_triples",
@@ -124,7 +133,16 @@ def connected_components(
     max_iter: int = 25,
 ) -> DataFrame:
     """nodes(id) x edges(src,dst) -> (id, component) where component is the
-    min node id reachable. Deterministic; converges in O(diameter) rounds."""
+    min node id reachable. Deterministic; converges in O(log diameter)
+    rounds. Endpoints are compared as the node id type. A graph with at
+    most localgraph.ROW_BOUND nodes and edges is solved in the driver;
+    a larger one runs the distributed loop below."""
+    id_type = nodes.schema["id"].dataType
+    edges = edges.select(F.col("src").cast(id_type),
+                         F.col("dst").cast(id_type))
+    solved = localgraph.components(nodes, edges)
+    if solved is not None:
+        return solved
     sym = (edges.select("src", "dst")
            .unionByName(edges.select(F.col("dst").alias("src"),
                                      F.col("src").alias("dst"))))

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import ontology_data as OD
+from ..session import local_df
 
 GAZ_SCHEMA = ("surface string, term_id string, match_kind string, "
               "namespace string, ontology_id string, rank int")
@@ -35,12 +36,12 @@ RELS_SCHEMA = ("id string, subject string, predicate string, object string, "
 
 def terms_df(spark: SparkSession) -> DataFrame:
     rows = [tuple(t.values()) for t in OD.terms()]
-    return spark.createDataFrame(rows, TERMS_SCHEMA)
+    return local_df(spark, rows, TERMS_SCHEMA)
 
 
 def relationships_df(spark: SparkSession) -> DataFrame:
     rows = [tuple(r.values()) for r in OD.relationships()]
-    return spark.createDataFrame(rows, RELS_SCHEMA)
+    return local_df(spark, rows, RELS_SCHEMA)
 
 
 def gazetteer_df(spark: SparkSession) -> DataFrame:
@@ -57,7 +58,7 @@ def gazetteer_df(spark: SparkSession) -> DataFrame:
          g["ontology_id"], OD.MATCH_KIND_RANK[g["match_kind"]])
         for g in OD.gazetteer()
     ]
-    return spark.createDataFrame(rows, GAZ_SCHEMA)
+    return local_df(spark, rows, GAZ_SCHEMA)
 
 
 def gazetteer_from_terms(terms: DataFrame) -> DataFrame:

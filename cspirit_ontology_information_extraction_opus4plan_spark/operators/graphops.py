@@ -31,8 +31,12 @@ Scale notes (10^12-doc corpus => 10^8-10^9 node graph):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..ontology_data import INVERSE_PREDICATES
+from ..session import local_df
+from . import localgraph
 
 __all__ = ["undirected_entity_edges", "triangle_stats", "ffl_motifs",
            "two_hop_counts", "pagerank_fixed", "predicate_path_stats",
@@ -880,6 +884,12 @@ def bgp_conjunctive(triples: DataFrame,
     return px.join(pz, "x").select("x", "y", "z").distinct()
 
 
+def _inverse_df(spark: SparkSession) -> DataFrame:
+    """The closed inverse map (predicate, inverse) as a local relation."""
+    return local_df(spark, sorted(INVERSE_PREDICATES.items()),
+                    "predicate string, inverse string")
+
+
 def inverse_consistency(triples: DataFrame) -> DataFrame:
     """Extraction-symmetry QC against the reference's closed inverse
     map (models.py:1597-1614 via ontology_data.INVERSE_PREDICATES):
@@ -896,10 +906,7 @@ def inverse_consistency(triples: DataFrame) -> DataFrame:
     edge against the store (hash-partitioned on the edge key)."""
     pe = (triples.select("subject", "predicate", "object").distinct()
           .localCheckpoint(eager=True))
-    from ..ontology_data import INVERSE_PREDICATES
-    spark = pe.sparkSession
-    inv = spark.createDataFrame(
-        sorted(INVERSE_PREDICATES.items()), ["predicate", "inverse"])
+    inv = _inverse_df(pe.sparkSession)
     exp = pe.join(F.broadcast(inv), "predicate")
     hit = (exp.join(pe.toDF("object", "inverse", "subject"),
                     ["subject", "inverse", "object"], "left_semi")
@@ -948,6 +955,41 @@ def bgp_optional(triples: DataFrame, p1: str = BGP_P1,
 TRANSITIVE_PREDICATES = ("is_a", "part_of")
 
 
+def _doubling_closure(base: DataFrame, p: str, max_iter: int) -> DataFrame:
+    """Distributed transitive closure of base(subject, object) for
+    kg_entailment. DOUBLING, not frontier-extend-by-one: composing the
+    round-k frontier with the ACCUMULATED closure on both sides covers
+    path lengths up to 2^k, so convergence takes O(log diameter) rounds
+    — the same pointer-jumping argument as connected_components. The
+    linear frontier∘base recurrence hit max_iter on sf0.1's
+    extraction-artifact is_a chains (diameter > 32); a web-scale KG
+    makes O(diameter) sequential rounds a non-starter outright."""
+    base = base.persist()
+    closed, frontier, done = base, base, False
+    for _it in range(max_iter + 1):  # +1 verification round
+        fwd = (frontier.join(closed.toDF("object", "hop"), "object")
+               .select("subject", F.col("hop").alias("object")))
+        bwd = (closed.join(frontier.toDF("object", "hop"), "object")
+               .select("subject", F.col("hop").alias("object")))
+        nxt = (fwd.unionByName(bwd)
+               .distinct()
+               .join(closed, ["subject", "object"], "left_anti")
+               .localCheckpoint(eager=True))
+        if nxt.isEmpty():
+            done = True
+            break
+        closed = (closed.unionByName(nxt)
+                  .localCheckpoint(eager=True))
+        frontier = nxt
+    base.unpersist()
+    if not done:
+        raise RuntimeError(
+            f"kg_entailment transitive closure of {p!r} still "
+            f"growing after max_iter={max_iter} productive rounds "
+            f"plus one verification round")
+    return closed
+
+
 def kg_entailment(triples: DataFrame, max_iter: int = 32) -> DataFrame:
     """OWL/RDFS-style forward-chaining materialization over the
     extracted triple store — the entailment step a KG-construction
@@ -974,28 +1016,34 @@ def kg_entailment(triples: DataFrame, max_iter: int = 32) -> DataFrame:
 
     Inferred edges already asserted in the store are suppressed by a
     final left_anti join; a triple derivable by both rules keeps one
-    row per rule (provenance is part of the key). The transitive
-    closure is a DOUBLING fixpoint (frontier composed with the
-    accumulated closure on both sides — O(log diameter) rounds, the
-    pointer-jumping argument) with the frontier-fixpoint hygiene of
-    dependency_closure — localCheckpoint per round to cut lineage,
-    left_anti dedup against the accumulated set, hard error on
-    non-convergence — and tolerates cycles (the accumulated set is
-    finite, so the frontier drains). Closure state is bounded by the
-    per-predicate edge set (ontology-linked entities), never the
-    corpus; the inverse map is a constants-sized broadcast."""
+    row per rule (provenance is part of the key).
+
+    Size check: the canonical bases of all families are collected in one
+    job (localgraph.closures). If they hold at most
+    localgraph.ROW_BOUND rows, each family touching at most
+    localgraph.NODE_BOUND nodes is closed in the driver by boolean
+    matrix squaring — the ontology-sized case, where the distributed
+    loop's cost is two localCheckpoints and an isEmpty job per round,
+    not data. Any other family runs _doubling_closure, a DOUBLING
+    fixpoint (frontier composed with the accumulated closure on both
+    sides — O(log diameter) rounds, the pointer-jumping argument) with
+    the frontier-fixpoint hygiene of dependency_closure —
+    localCheckpoint per round to cut lineage, left_anti dedup against
+    the accumulated set, hard error on non-convergence. It stays
+    because it is the only path for closures too large for one
+    process. Both paths tolerate cycles and give the same set. The
+    inverse rule and the final anti-join against the store stay in
+    Spark; the inverse map is a constants-sized broadcast."""
     pe = (triples.select("subject", "predicate", "object").distinct()
           .localCheckpoint(eager=True))
-    from ..ontology_data import INVERSE_PREDICATES
-    spark = pe.sparkSession
-    inv = spark.createDataFrame(
-        sorted(INVERSE_PREDICATES.items()), ["predicate", "inverse"])
+    inv = _inverse_df(pe.sparkSession)
     inv_new = (pe.join(F.broadcast(inv), "predicate")
                .select(F.col("object").alias("subject"),
                        F.col("inverse").alias("predicate"),
                        F.col("subject").alias("object"),
                        F.lit("inverse").alias("rule")))
     parts = [inv_new]
+    bases = {}
     for p in TRANSITIVE_PREDICATES:
         q = INVERSE_PREDICATES.get(p)
         base = pe.filter(F.col("predicate") == p).select("subject",
@@ -1005,38 +1053,12 @@ def kg_entailment(triples: DataFrame, max_iter: int = 32) -> DataFrame:
                 pe.filter(F.col("predicate") == q)
                 .select(F.col("object").alias("subject"),
                         F.col("subject").alias("object"))).distinct()
-        base = base.persist()
-        # DOUBLING closure, not frontier-extend-by-one: composing the
-        # round-k frontier with the ACCUMULATED closure on both sides
-        # covers path lengths up to 2^k, so convergence takes
-        # O(log diameter) rounds — the same pointer-jumping argument
-        # as connected_components. The linear frontier∘base recurrence
-        # hit max_iter on sf0.1's extraction-artifact is_a chains
-        # (diameter > 32); a web-scale KG makes O(diameter) sequential
-        # rounds a non-starter outright. Output is the identical
-        # closure set either way (oracle parity unchanged).
-        closed, frontier, done = base, base, False
-        for _it in range(max_iter + 1):  # +1 verification round
-            fwd = (frontier.join(closed.toDF("object", "hop"), "object")
-                   .select("subject", F.col("hop").alias("object")))
-            bwd = (closed.join(frontier.toDF("object", "hop"), "object")
-                   .select("subject", F.col("hop").alias("object")))
-            nxt = (fwd.unionByName(bwd)
-                   .distinct()
-                   .join(closed, ["subject", "object"], "left_anti")
-                   .localCheckpoint(eager=True))
-            if nxt.isEmpty():
-                done = True
-                break
-            closed = (closed.unionByName(nxt)
-                      .localCheckpoint(eager=True))
-            frontier = nxt
-        base.unpersist()
-        if not done:
-            raise RuntimeError(
-                f"kg_entailment transitive closure of {p!r} still "
-                f"growing after max_iter={max_iter} productive rounds "
-                f"plus one verification round")
+        bases[p] = base
+    solved = localgraph.closures(bases)
+    for p, base in bases.items():
+        q = INVERSE_PREDICATES.get(p)
+        closed = (solved[p] if p in solved
+                  else _doubling_closure(base, p, max_iter))
         parts.append(closed.select(
             "subject", F.lit(p).alias("predicate"), "object",
             F.lit("transitive").alias("rule")))
@@ -1087,10 +1109,7 @@ def kg_entailment_delta(old: DataFrame, delta: DataFrame,
            .join(po, ["subject", "predicate", "object"], "left_anti")
            .localCheckpoint(eager=True))
     pall = po.unionByName(pd_)
-    from ..ontology_data import INVERSE_PREDICATES
-    spark = po.sparkSession
-    inv = spark.createDataFrame(
-        sorted(INVERSE_PREDICATES.items()), ["predicate", "inverse"])
+    inv = _inverse_df(po.sparkSession)
 
     def _inv_rows(frame: DataFrame) -> DataFrame:
         return (frame.join(F.broadcast(inv), "predicate")
@@ -1215,10 +1234,7 @@ def kg_entailment_retract(old: DataFrame, removed: DataFrame,
     rm = (removed.select(*key3).distinct()
           .join(pa, key3, "left_semi"))
     pk = pa.join(rm, key3, "left_anti").localCheckpoint(eager=True)
-    from ..ontology_data import INVERSE_PREDICATES
-    spark = pa.sparkSession
-    inv = spark.createDataFrame(
-        sorted(INVERSE_PREDICATES.items()), ["predicate", "inverse"])
+    inv = _inverse_df(pa.sparkSession)
 
     def _canon(frame: DataFrame, p: str, q: str | None) -> DataFrame:
         base = (frame.filter(F.col("predicate") == p)

@@ -441,7 +441,6 @@ def _lzw_decode(data: bytes, min_code_size: int) -> list[int]:
         # the encoder wrote it
         if len(table) == (1 << width) - 1 and width < 12:
             width += 1
-    return list(out)
 
 
 def gif_encode(frames: list[list[int]], w: int, h: int) -> bytes:
@@ -504,6 +503,8 @@ def gif_decode(data: bytes) -> tuple[int, int, list[list[int]]]:
             pos += 3 * n
         if iflags & 0x40:
             raise ValueError("interlaced GIF not supported")
+        if pal is None:
+            raise ValueError("GIF frame has no color table")
         min_code = data[pos]
         pos += 1
         stream = bytearray()
@@ -578,7 +579,7 @@ def sample_frames(media_with_content: DataFrame,
             for doc_id, pos, ref, content in zip(
                     pdf["doc_id"], pdf["pos"], pdf["media_ref"],
                     pdf["content"]):
-                w, h, frames = gif_decode(bytes(content))
+                _, _, frames = gif_decode(bytes(content))
                 n = len(frames)
                 stride = -(-n // max_frames)  # ceil
                 for idx in range(0, n, stride):
@@ -588,7 +589,7 @@ def sample_frames(media_with_content: DataFrame,
                     rows["n_frames"].append(n)
                     rows["frame_idx"].append(idx)
                     rows["mean_gray"].append(
-                        round(sum(frames[idx]) / (w * h), 6))
+                        round(sum(frames[idx]) / len(frames[idx]), 6))
             out = pd.DataFrame(rows)
             out["pos"] = out["pos"].astype("int32")
             for k in ("n_frames", "frame_idx"):

@@ -788,7 +788,8 @@ def _has_directed_cycle(rels: DataFrame, max_iter: int = 32) -> DataFrame:
     a directed cycle exists (the reference's DFS cycle check,
     validators.py:_check_circular_dependencies, reports cycles iff this
     is 1 — its cycle COUNT is a DFS-order artifact we deliberately do
-    not reproduce). O(longest acyclic chain) rounds, dimension-sized."""
+    not reproduce). O(longest acyclic chain) rounds, dimension-sized;
+    a chain longer than max_iter raises rather than pass for a cycle."""
     e = (rels.select(F.col("subject").alias("src"),
                      F.col("object").alias("dst"))
          .distinct().localCheckpoint(eager=True))
@@ -802,6 +803,12 @@ def _has_directed_cycle(rels: DataFrame, max_iter: int = 32) -> DataFrame:
         if n2 == n:
             break
         e, n = e2, n2
+    else:
+        if n:
+            raise RuntimeError(
+                f"_has_directed_cycle: Kahn peeling still removing edges "
+                f"after max_iter={max_iter} rounds ({n} left) — raise "
+                f"max_iter")
     return e.sparkSession.range(1).select(
         F.lit(1 if n > 0 else 0).alias("has_cycles"))
 

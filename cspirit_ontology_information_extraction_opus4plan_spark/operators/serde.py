@@ -147,7 +147,7 @@ def infer_csv_types(files: DataFrame) -> DataFrame:
 NT_SUBJ_URI = r"^<urn:ont:([^>]+)>"
 NT_PRED = r"<urn:pred:([^>]+)>"
 NT_OBJ_URI = r" <urn:ont:([^>]+)> \.$"
-NT_OBJ_LIT = r' "((?:[^"\\]|\\.)*)"(?:@[A-Za-z-]+|\^\^<[^>]+>)? \.$'
+NT_OBJ_LIT = r' "((?:[^"\\]|\\.)*)"(?:@[A-Za-z0-9-]+|\^\^<[^>]+>)? \.$'
 NT_SUBJ_BNODE = r"^_:(\S+)"
 
 
@@ -178,7 +178,7 @@ TTL_SUBJ = r"^ont:(\S+)"
 TTL_SUBJ_BNODE = r"^_:(\S+)"
 TTL_PRED = r" pred:(\S+) "
 TTL_OBJ_URI = r" ont:(\S+) \.$"
-TTL_OBJ_LIT = r' "((?:[^"\\]|\\.)*)"(?:@[A-Za-z-]+|\^\^<[^>]+>)? \.$'
+TTL_OBJ_LIT = r' "((?:[^"\\]|\\.)*)"(?:@[A-Za-z0-9-]+|\^\^<[^>]+>)? \.$'
 
 
 def _uncurie(local: F.Column) -> F.Column:

@@ -10,7 +10,24 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
+
+
+def _host_cpus() -> int:
+    """Cores this process may run on (cgroup/affinity aware)."""
+    return len(os.sched_getaffinity(0))
+
+
+def _host_driver_memory() -> str:
+    """A quarter of the host's RAM: local mode runs the executors inside
+    the driver JVM, and the Python workers need the rest."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f
+                  if line.startswith("MemTotal:"))
+    return f"{max(1024, kb // 1024 // 4)}m"
 
 
 def get_spark(
@@ -19,12 +36,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus())
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # match parallelism; a real cluster would use ~2-3x total cores,
         # AQE coalesces the excess at runtime anyway
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
+        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
         shuffle_partitions = cpus if n == "*" else int(n)
     builder = (
         SparkSession.builder.master(master)
@@ -36,7 +53,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM")
+                or _host_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -45,3 +63,17 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """Constant rows (tuples) -> a DataFrame planned as LocalTableScan.
+
+    ``createDataFrame(list_of_tuples)`` plans a Python-RDD scan (``Scan
+    ExistingRDD``): every scan runs a Python task, and a broadcast of it
+    costs a job. Built from Arrow, the table is a local relation that the
+    driver scans and broadcasts without a job."""
+    arrow_schema = to_arrow_schema(_parse_datatype_string(schema))
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema))

@@ -14,24 +14,31 @@ from cspirit_ontology_information_extraction_opus4plan_spark.operators.gazetteer
     terms_df,
 )
 
+from .conftest import kernel_paths
+
 
 @pytest.fixture(scope="module")
-def mapping(spark):
-    return {r["id"]: r["canonical_id"]
-            for r in canonical_mapping(terms_df(spark)).collect()}
+def mappings(spark):
+    """The ontology's canonical mapping, computed on each kernel path."""
+    return {path: {r["id"]: r["canonical_id"]
+                   for r in canonical_mapping(terms_df(spark)).collect()}
+            for path in kernel_paths()}
 
 
-def test_mapping_total_and_idempotent(spark, mapping):
+def test_mapping_total_and_idempotent(spark, mappings):
     """Every term maps; canonical ids are fixpoints (comp(comp(x))==comp(x));
-    canonical id is the min of its own component (deterministic)."""
+    canonical id is the min of its own component (deterministic); both
+    kernel paths give the same mapping."""
     n_terms = terms_df(spark).count()
+    assert mappings["driver"] == mappings["distributed"]
+    mapping = mappings["driver"]
     assert len(mapping) == n_terms
     for tid, comp in mapping.items():
         assert mapping[comp] == comp
         assert comp <= tid
 
 
-def test_shared_synonym_merges(mapping):
+def test_shared_synonym_merges(mappings):
     """glucose (CHEBI:10001) and fructose share synonym 'hexose sugar'
     (ontology_data._SYNONYMS) -> same component (1:N synonym index,
     reference models.py:2886)."""
@@ -39,10 +46,11 @@ def test_shared_synonym_merges(mapping):
         ontology_data as OD,
     )
     by_name = {t["name"]: t["id"] for t in OD.terms()}
-    assert mapping[by_name["glucose"]] == mapping[by_name["fructose"]]
+    for mapping in mappings.values():
+        assert mapping[by_name["glucose"]] == mapping[by_name["fructose"]]
 
 
-def test_replaced_by_merges(mapping):
+def test_replaced_by_merges(mappings):
     """Obsolete terms join their replacement's component
     (Term.replaced_by, models.py:246)."""
     from cspirit_ontology_information_extraction_opus4plan_spark import (
@@ -50,8 +58,9 @@ def test_replaced_by_merges(mapping):
     )
     obs = [t for t in OD.terms() if t["is_obsolete"]]
     assert obs, "fixture must contain obsolete terms"
-    for t in obs:
-        assert mapping[t["id"]] == mapping[t["replaced_by"]]
+    for mapping in mappings.values():
+        for t in obs:
+            assert mapping[t["id"]] == mapping[t["replaced_by"]]
 
 
 def test_cc_on_path_graph(spark):
@@ -61,11 +70,49 @@ def test_cc_on_path_graph(spark):
     nodes = spark.createDataFrame([(f"N:{i}",) for i in range(7)], "id string")
     edges = spark.createDataFrame(
         [(f"N:{i}", f"N:{i+1}") for i in range(5)], "src string, dst string")
-    for salt in (1, 4):
-        got = {r["id"]: r["canonical_id"]
-               for r in connected_components(
-                   nodes, edges, salt_buckets=salt).collect()}
-        assert got == {**{f"N:{i}": "N:0" for i in range(6)}, "N:6": "N:6"}
+    for _path in kernel_paths():
+        for salt in (1, 4):
+            got = {r["id"]: r["canonical_id"]
+                   for r in connected_components(
+                       nodes, edges, salt_buckets=salt).collect()}
+            assert got == {**{f"N:{i}": "N:0" for i in range(6)},
+                           "N:6": "N:6"}
+
+
+def test_cc_cycle_isolated_nulls_and_outside_endpoints(spark):
+    """A cycle whose min id is not where the edges start, an isolated
+    node, an edge to a node outside ``nodes`` (it must not bridge two
+    components through that outsider), null endpoints and a null node
+    id: both kernel paths give the same answer."""
+    nodes = spark.createDataFrame(
+        [("c3",), ("c1",), ("c2",), ("iso",), ("x1",), ("x2",), (None,)],
+        "id string")
+    edges = spark.createDataFrame(
+        [("c3", "c2"), ("c2", "c1"), ("c1", "c3"),
+         ("x1", "ghost"), ("ghost", "x2"),
+         ("iso", None), (None, "c1"), (None, None)],
+        "src string, dst string")
+    want = {("c1", "c1"), ("c2", "c1"), ("c3", "c1"), ("iso", "iso"),
+            ("x1", "x1"), ("x2", "x2"), (None, None)}
+    for _path in kernel_paths():
+        rows = connected_components(nodes, edges).collect()
+        assert len(rows) == len(want)
+        assert {(r["id"], r["canonical_id"]) for r in rows} == want
+
+
+def test_cc_kernel_path_switch(spark):
+    """As shipped, an ontology-sized graph is solved in the driver and
+    comes back as a local relation; with the bounds at 0 the distributed
+    loop runs instead."""
+    nodes = spark.createDataFrame([("a",), ("b",)], "id string")
+    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
+    plans = {}
+    for path in kernel_paths():
+        cc = connected_components(nodes, edges)
+        plans[path] = cc._jdf.queryExecution().executedPlan().toString()
+        assert {tuple(r) for r in cc.collect()} == {("a", "a"), ("b", "a")}
+    assert plans["driver"].strip().startswith("LocalTableScan")
+    assert "LocalTableScan" not in plans["distributed"]
 
 
 def test_edges_are_ordered_unique(spark):
@@ -89,11 +136,12 @@ def test_incremental_components_merges_and_passthrough(spark):
     new_ids = spark.createDataFrame([("A",), ("Q",)], "id string")
     new_edges = spark.createDataFrame(
         [("A", "C"), ("B", "E")], "src string, dst string")
-    got = {r["id"]: r["canonical_id"]
-           for r in incremental_components(old, new_ids,
-                                           new_edges).collect()}
-    assert got == {"A": "A", "B": "A", "C": "A", "D": "A", "E": "A",
-                   "Z": "Z", "Q": "Q"}
+    for _path in kernel_paths():
+        got = {r["id"]: r["canonical_id"]
+               for r in incremental_components(old, new_ids,
+                                               new_edges).collect()}
+        assert got == {"A": "A", "B": "A", "C": "A", "D": "A", "E": "A",
+                       "Z": "Z", "Q": "Q"}
 
 
 def test_decremental_components_resolves_splits(spark):
@@ -118,18 +166,19 @@ def test_decremental_components_resolves_splits(spark):
          term("T8", "delta", ["s9"]),
          term("T9", "epsilon", ["s9"])],
         TERMS_SCHEMA)
-    old = canonical_mapping(terms)
-    assert {r["canonical_id"] for r in old.collect()} == {"T1", "T8"}
-
     removed = spark.createDataFrame([("T2",)], "id string")
-    got = {r["id"]: r["canonical_id"]
-           for r in decremental_components(old, terms, removed).collect()}
-    # T2 gone; the chain split: T1 and T3 now own separate components
-    assert set(got) == {"T1", "T3", "T8", "T9"}
-    assert got["T1"] == "T1" and got["T3"] == "T3"
-    assert got["T8"] == "T8" and got["T9"] == "T8"
-    # parity with the full recompute over surviving terms
-    want = {r["id"]: r["canonical_id"]
-            for r in canonical_mapping(
-                terms.filter(terms["id"] != "T2")).collect()}
-    assert got == want
+    for _path in kernel_paths():
+        old = canonical_mapping(terms)
+        assert {r["canonical_id"] for r in old.collect()} == {"T1", "T8"}
+        got = {r["id"]: r["canonical_id"]
+               for r in decremental_components(old, terms,
+                                               removed).collect()}
+        # T2 gone; the chain split: T1 and T3 now own separate components
+        assert set(got) == {"T1", "T3", "T8", "T9"}
+        assert got["T1"] == "T1" and got["T3"] == "T3"
+        assert got["T8"] == "T8" and got["T9"] == "T8"
+        # parity with the full recompute over surviving terms
+        want = {r["id"]: r["canonical_id"]
+                for r in canonical_mapping(
+                    terms.filter(terms["id"] != "T2")).collect()}
+        assert got == want

@@ -135,6 +135,30 @@ def test_gif_rejects_garbage_and_interlace():
         MM.gif_decode(bytes(good))
 
 
+def test_gif_without_color_table_raises():
+    enc = MM.gif_encode([[1] * 4], 2, 2)
+    # drop the global color table: clear its flag and its 768 bytes
+    bare = enc[:10] + bytes([0x00]) + enc[11:13] + enc[13 + 768:]
+    with pytest.raises(ValueError, match="color table"):
+        MM.gif_decode(bare)
+
+
+def test_sample_frames_mean_over_sub_screen_frame(spark):
+    """A frame smaller than the logical screen: the mean is over the
+    frame's own pixels, not the screen area."""
+    import struct
+
+    px = [10, 20, 30, 40, 50, 60]
+    gif = bytearray(MM.gif_encode([px], 3, 2))
+    gif[6:10] = struct.pack("<HH", 8, 8)     # logical screen 8x8
+    media = spark.createDataFrame(
+        [("DOC:1", 2, "media/x.gif", bytes(gif))],
+        "doc_id string, pos int, media_ref string, content binary")
+    row = MM.sample_frames(media).first()
+    assert row["n_frames"] == 1
+    assert row["mean_gray"] == pytest.approx(sum(px) / len(px))
+
+
 def test_sample_frames_real_decode_parity(spark, sf_dir):
     """Planted-frame parity: for sampled refs, re-synthesize the GIF
     in the test, decode it independently, and check the query's

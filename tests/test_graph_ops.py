@@ -28,6 +28,23 @@ def test_cycle_chains_ignores_acyclic_edges(spark):
     assert OA.cycle_chains(edges).count() == 0
 
 
+def test_has_directed_cycle_raises_when_peeling_runs_out(spark):
+    """An acyclic chain longer than max_iter cannot be peeled in time:
+    that must raise, not report a cycle. With enough rounds the chain is
+    acyclic, and closing it into a ring makes it cyclic."""
+    import pytest
+
+    n = 40
+    chain = [(f"K:{i}", f"K:{i + 1}") for i in range(n)]
+    rels = spark.createDataFrame(chain, "subject string, object string")
+    with pytest.raises(RuntimeError, match="max_iter=32"):
+        OA._has_directed_cycle(rels)
+    assert OA._has_directed_cycle(rels, max_iter=64).first()[0] == 0
+    ring = spark.createDataFrame(chain + [(f"K:{n}", "K:0")],
+                                 "subject string, object string")
+    assert OA._has_directed_cycle(ring).first()[0] == 1
+
+
 # --- triple-store maintenance ops (round 3) ---------------------------------
 
 

@@ -4,6 +4,8 @@ from cspirit_ontology_information_extraction_opus4plan_spark.operators import (
     graphops,
 )
 
+from .conftest import kernel_paths
+
 
 def _edges(spark, pairs):
     return spark.createDataFrame(
@@ -276,12 +278,13 @@ def test_kg_entailment_joint_fixpoint(spark):
     # transitive (a part_of c) AND its flip (c has_part a); plus the
     # one-step inverses (b has_part a) and (b part_of c)
     t = _pt(spark, [("a", "part_of", "b"), ("c", "has_part", "b")])
-    out = {(r.subject, r.predicate, r.object, r.rule)
-           for r in graphops.kg_entailment(t).collect()}
-    assert ("a", "part_of", "c", "transitive") in out
-    assert ("c", "has_part", "a", "transitive") in out
-    assert ("b", "has_part", "a", "inverse") in out
-    assert ("b", "part_of", "c", "inverse") in out
+    for _path in kernel_paths():
+        out = {(r.subject, r.predicate, r.object, r.rule)
+               for r in graphops.kg_entailment(t).collect()}
+        assert ("a", "part_of", "c", "transitive") in out
+        assert ("c", "has_part", "a", "transitive") in out
+        assert ("b", "has_part", "a", "inverse") in out
+        assert ("b", "part_of", "c", "inverse") in out
 
 
 def test_kg_entailment_suppresses_asserted_and_tolerates_cycles(spark):
@@ -291,11 +294,34 @@ def test_kg_entailment_suppresses_asserted_and_tolerates_cycles(spark):
         ("p", "regulates", "q"), ("q", "regulated_by", "p"),
         ("u", "is_a", "v"), ("v", "is_a", "u"),
     ])
-    out = {(r.subject, r.predicate, r.object, r.rule)
-           for r in graphops.kg_entailment(t).collect()}
-    assert not any(s in ("p", "q") for (s, _, _, _) in out)
-    assert ("u", "is_a", "u", "transitive") in out
-    assert ("v", "is_a", "v", "transitive") in out
+    for _path in kernel_paths():
+        out = {(r.subject, r.predicate, r.object, r.rule)
+               for r in graphops.kg_entailment(t).collect()}
+        assert not any(s in ("p", "q") for (s, _, _, _) in out)
+        assert ("u", "is_a", "u", "transitive") in out
+        assert ("v", "is_a", "v", "transitive") in out
+
+
+def test_kg_entailment_node_bound_is_per_family(monkeypatch, spark):
+    """A family over localgraph.NODE_BOUND nodes falls back to the
+    distributed loop while a smaller one stays in the driver; the mixed
+    run equals both single-path runs."""
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators import (  # noqa: E501
+        localgraph,
+    )
+
+    t = _pt(spark, [("a", "is_a", "b"), ("b", "is_a", "c"),
+                    ("c", "is_a", "d"), ("d", "is_a", "b"),
+                    ("x", "part_of", "y"), ("z", "has_part", "y")])
+
+    def run():
+        return {tuple(r) for r in graphops.kg_entailment(t).collect()}
+
+    want = [run() for _path in kernel_paths()]
+    monkeypatch.setattr(localgraph, "NODE_BOUND", 3)
+    assert run() == want[0] == want[1]
+    assert ("b", "is_a", "b", "transitive") in want[0]
+    assert ("x", "part_of", "z", "transitive") in want[0]
 
 
 def test_entailment_delta_emits_only_delta_consequences(spark):
@@ -450,9 +476,10 @@ def test_entailment_retract_rederives_surviving_paths(spark):
     assert all(s != "b" or o != "c" for s, _, o, _ in got)  # gone
     # exact parity with the full recompute over surviving edges
     surviving = old.where("NOT (subject = 'b' AND object = 'c')")
-    want = {(r["subject"], r["predicate"], r["object"], r["rule"])
-            for r in graphops.kg_entailment(surviving).collect()}
-    assert got == want
+    for _path in kernel_paths():
+        want = {(r["subject"], r["predicate"], r["object"], r["rule"])
+                for r in graphops.kg_entailment(surviving).collect()}
+        assert got == want
 
 
 def test_node2vec_walks_replay_pure_python(spark):

@@ -12,7 +12,7 @@ import pytest
 
 import __spark_entry__ as E
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, kernel_path
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -51,13 +51,33 @@ def test_every_query_has_an_oracle():
     assert not missing, f"queries without oracle_sql: {missing}"
 
 
-@pytest.mark.parametrize("name", sorted(_QUERIES))
-def test_query_matches_oracle(name, spark, duck):
+def _check(name, spark, duck):
     got = _normalize(_QUERIES[name](spark, SF_DIR).toPandas())
     want = _normalize(duck.execute(_ORACLES[name]).df())
     assert list(got.columns) == list(want.columns)
     assert len(got) == len(want), f"{len(got)} vs {len(want)} rows"
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+@pytest.mark.parametrize("name", sorted(_QUERIES))
+def test_query_matches_oracle(name, spark, duck):
+    _check(name, spark, duck)
+
+
+# queries whose answer runs through connected_components or kg_entailment
+GRAPH_KERNEL_QUERIES = [
+    "canonical_entities", "canonical_entities_delta",
+    "canonical_entities_retract", "canonical_component_sizes",
+    "canonical_triples", "doc_neardup_resolve", "kg_entailment",
+    "kg_rule_mining"]
+
+
+@pytest.mark.parametrize("name", GRAPH_KERNEL_QUERIES)
+def test_graph_query_matches_oracle_distributed(name, spark, duck):
+    """test_query_matches_oracle runs these on the in-driver kernels
+    (operators/localgraph.py); this runs them on the distributed loops."""
+    with kernel_path("distributed"):
+        _check(name, spark, duck)
 
 
 def test_bench_roster_queries_all_exist():

@@ -115,3 +115,28 @@ def test_no_self_loops_and_closed_vocabulary(spark, sf_dir):
     assert all(r.subject != r.object for r in rows)
     assert all(r.predicate in OD.PREDICATES for r in rows)
     assert all(r.triple_id.startswith("TRP:") for r in rows)
+
+
+def test_doc_ids_of_seven_digits_stay_distinct(spark):
+    """lpad truncates: padding 1000017 to six characters gave 100001, the
+    id of another document. Ids of six or more digits are left unpadded,
+    in the Spark span synthesis and in its DuckDB twin (corpus_ctes)."""
+    import duckdb
+
+    from cspirit_ontology_information_extraction_opus4plan_spark.corpus import (  # noqa: E501
+        corpus_ctes,
+        interleave_docs,
+    )
+    flat = pd.DataFrame({"doc_id": [1_000_017, 100_001, 7],
+                         "text": ["a", "b", "c"], "n_chars": [1, 1, 1]})
+    want = {"DOC:1000017", "DOC:100001", "DOC:000007"}
+    got = {r.doc_id for r in interleave_docs(
+        spark.createDataFrame(flat)).collect()}
+    assert got == want
+    assert {r["doc_id"] for r in oracle.expected_spans(flat)} == want
+    con = duckdb.connect()
+    con.register("documents", flat)
+    duck = {d for (d,) in con.execute(
+        f"WITH {corpus_ctes()} SELECT DISTINCT doc_id FROM spans").fetchall()}
+    con.close()
+    assert duck == want

@@ -918,3 +918,20 @@ def test_unpartitioned_windows_stay_on_the_allowlist():
         if n:
             found[str(path.relative_to(root))] = n
     assert found == _UNPARTITIONED_WINDOW_ALLOWLIST, found
+
+
+def test_constant_tables_are_local_relations(spark):
+    """The ontology dimension tables plan as LocalTableScan (scanned and
+    broadcast by the driver without a job), never as a Python-RDD scan."""
+    from cspirit_ontology_information_extraction_opus4plan_spark.corpus import (  # noqa: E501
+        _surf_df,
+    )
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators.gazetteer import (  # noqa: E501
+        gazetteer_df,
+        relationships_df,
+        terms_df,
+    )
+    for build in (terms_df, relationships_df, gazetteer_df, _surf_df):
+        plan = _plan(build(spark))
+        assert "LocalTableScan" in plan, build.__name__
+        assert "ExistingRDD" not in plan, build.__name__

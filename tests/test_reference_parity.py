@@ -651,7 +651,7 @@ _URI_POOL = [f"{_FZ}t{i}" for i in range(5)]
 _PRED_POOL = [f"{_FZ}p{i}" for i in range(4)]
 _BNODES = ["b0", "b1", "b2"]
 _DT_POOL = [f"{_XSD}token", f"{_XSD}anyURI", f"{_FZ}custom"]
-_LANGS = ["en", "en-GB", "de"]
+_LANGS = ["en", "en-GB", "de", "es-419"]
 _LIT_ALPHA = 'ab z09.:#<>&\'"\\\n\t\u00e9'
 
 _lit_text = hst.text(alphabet=_LIT_ALPHA, max_size=12)

@@ -159,3 +159,23 @@ def test_obo_roundtrip_hostile_values(spark):
         assert back[tid]['name'] == name, tid
         assert back[tid]['definition'] == dfn, tid
         assert back[tid]['n_synonyms'] == 2, tid
+
+
+def test_line_parsers_accept_digit_lang_subtags(spark):
+    """BCP 47 subtags may be digits (es-419, de-1996): the literal branch
+    of the per-line N-Triples and Turtle parsers keeps such objects."""
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators.serde import (  # noqa: E501
+        parse_ntriples,
+        parse_turtle,
+    )
+
+    nt = spark.createDataFrame(
+        [('<urn:ont:A_1> <urn:pred:label> "hola"@es-419 .',),
+         ('<urn:ont:A_1> <urn:pred:label> "Farbe"@de-1996 .',)], "line string")
+    ttl = spark.createDataFrame(
+        [('ont:A_1 pred:label "hola"@es-419 .',),
+         ('ont:A_1 pred:label "Farbe"@de-1996 .',)], "line string")
+    for parse, lines in ((parse_ntriples, nt), (parse_turtle, ttl)):
+        got = {(r["object"], r["object_type"])
+               for r in parse(lines).collect()}
+        assert got == {("hola", "literal"), ("Farbe", "literal")}
