@@ -16,11 +16,6 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
 
-def _host_cpus() -> int:
-    """Cores this process may run on (cgroup/affinity aware)."""
-    return len(os.sched_getaffinity(0))
-
-
 def _host_driver_memory() -> str:
     """A quarter of the host's RAM: local mode runs the executors inside
     the driver JVM, and the Python workers need the rest."""
@@ -36,7 +31,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus())
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # match parallelism; a real cluster would use ~2-3x total cores,
