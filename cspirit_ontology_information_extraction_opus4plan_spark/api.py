@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from . import decorations as DE
 from .corpus import spans_exploded
+from .extraction import triples_from_docs
 from .ontology_data import CLOSURE_SEEDS
 from .operators import content_stats as CS
 from .operators import ontology_algebra as OA
@@ -25,7 +26,7 @@ from .operators.canonicalize import (canonical_mapping, canonical_triples,
 from .operators.gazetteer import gazetteer_df, relationships_df, terms_df
 from .operators.linking import link_mentions
 from .operators.ner import detect_mentions
-from .operators.relations import dedup_triples, extract_triples
+from .operators.relations import dedup_triples
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -36,8 +37,10 @@ def _linked_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def triples_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spans = spans_exploded(spark, sf_dir)
-    return extract_triples(spans, _linked_mentions(spark, sf_dir))
+    """Per-span triples of the corpus in `sf_dir` (the flagship path;
+    composed once, in extraction.triples_from_docs)."""
+    return triples_from_docs(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 # --- individual queries ----------------------------------------------------

@@ -24,6 +24,13 @@ Scale notes:
   * NER applies to kind in ('text','figure','table') — captions contribute
     mentions (figure/table caption extraction, pdf_parser.py:1356,
     xml_parser.py:2302/2372); references do not.
+  * the triples path (extraction.triples_from_docs) hands detect_mentions
+    only relation spans (relations.relation_spans), because no other
+    span can hold a triple endpoint. Mention queries (ner_mentions,
+    entity_linking, kwic, relink, ...) report every mention, so they
+    call detect_mentions on the full span table.
+  * m_off counts code points of the lower-cased text (Python str), the
+    unit extract_triples measures the phrase offset in.
 """
 
 from __future__ import annotations

@@ -16,6 +16,11 @@ Python despite being "stage 2", because the phrase grammar is regular):
     confidence = 1.0 if both matched by canonical name else 0.9
   drop subject.term_id == object.term_id (models.py:1083)
 
+The span rule is relation_spans. The triples composition
+(extraction.triples_from_docs) applies it to the NER input too, so only
+these spans cross into Python: the (doc_id, pos) inner join below would
+drop the mentions of any other span anyway.
+
 Deterministic ids: content-addressed `TRP:<md5>` over the semantic key —
 never monotonically_increasing_id (nondeterministic across retries; breaks
 resume + P/R equality, SURVEY §2.5). The reference's iteration-order
@@ -40,6 +45,17 @@ def _phrase_to_pred():
     return F.create_map(*m)
 
 
+def relation_spans(spans: DataFrame) -> DataFrame:
+    """The spans a triple can come from: kind 'text' with exactly one
+    predicate phrase in the lower-cased text. extract_triples' span side
+    and the NER input of extraction.triples_from_docs both go through
+    this one filter, so the two sides of the (doc_id, pos) join cannot
+    drift apart. A map-side JVM filter: no shuffle, no Python."""
+    return spans.filter(
+        (F.col("kind") == "text")
+        & (F.regexp_count(F.lower("text"), F.lit(PHRASE_PATTERN)) == 1))
+
+
 def extract_triples(spans: DataFrame, linked_mentions: DataFrame) -> DataFrame:
     """spans (exploded) + linked mentions -> one triple row per
     (text span, phrase) with resolved subject/object.
@@ -51,20 +67,17 @@ def extract_triples(spans: DataFrame, linked_mentions: DataFrame) -> DataFrame:
     # all matching happens on lower(text): the NER stage lowercases
     # before scanning, so mention m_off and phrase p0 must share the
     # lowercased coordinate system (and the phrase vocabulary is
-    # lowercase — raw-text matching would miss 'Regulates'). p0 comes
-    # from regexp_instr of the SAME word-bounded pattern that selected
-    # the phrase — locate(phrase, text) would anchor to an earlier
-    # in-word occurrence ('is a' inside 'axis aligns'). The docstring's
-    # exactly-one-phrase rule is enforced with regexp_count, not
-    # silently first-match.
+    # lowercase — raw-text matching would miss 'Regulates'), and the
+    # same unit: m_off counts code points (Python str), regexp_instr
+    # UTF-16 units (one extra per emoji before the phrase). So p0 is the
+    # code-point length of the text before the SAME word-bounded pattern
+    # that selected the phrase (locate(phrase, text) would anchor to an
+    # earlier in-word occurrence: 'is a' inside 'axis aligns').
     lc = F.lower("text")
-    ts = (spans
-          .filter(F.col("kind") == "text")
+    ts = (relation_spans(spans)
           .withColumn("lc", lc)
           .withColumn("phrase", F.regexp_extract("lc", PHRASE_PATTERN, 1))
-          .filter(F.col("phrase") != "")
-          .filter(F.regexp_count("lc", F.lit(PHRASE_PATTERN)) == 1)
-          .withColumn("p0", F.regexp_instr("lc", F.lit(PHRASE_PATTERN)) - 1)
+          .withColumn("p0", F.length(F.split("lc", PHRASE_PATTERN, 2)[0]))
           .select("doc_id", "pos", "text", "phrase", "p0",
                   F.length("phrase").alias("plen")))
 

@@ -99,7 +99,9 @@ def _validate_existing_markers(spark: SparkSession, out_dir: str,
                                n_parts: int) -> None:
     """A marker written under a different n_parts means the existing
     partition layout is incompatible — resuming would mix pmod-K and
-    pmod-N data (duplicates + losses) while reporting success. Refuse."""
+    pmod-N data (duplicates + losses) while reporting success. Refuse.
+    Every marker is read: runs with different --parts can each have
+    left markers, in any sort order."""
     ckpt = f"{out_dir.rstrip('/')}/{CKPT_DIR}"
     for name in sorted(fs_list_names(spark, ckpt)):
         if not name.endswith(".json"):
@@ -111,7 +113,6 @@ def _validate_existing_markers(spark: SparkSession, out_dir: str,
                 f"checkpoints in {out_dir} were written with "
                 f"n_parts={prev}, but this run uses n_parts={n_parts}; "
                 f"clear the output directory or rerun with --parts {prev}")
-        return  # all markers share one run config; first one suffices
 
 
 def completed_partitions(spark: SparkSession, out_dir: str,

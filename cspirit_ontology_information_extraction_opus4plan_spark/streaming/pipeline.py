@@ -7,7 +7,10 @@ writes in plans/checkpointing.py. This module is the *incremental
 ingestion* face of the same engine: new document files landing in a
 directory flow through the identical NER -> link -> extract stages via
 ``foreachBatch`` — one code path for batch and streaming, which is the
-Spark-idiomatic way to run a batch-defined pipeline continuously.
+Spark-idiomatic way to run a batch-defined pipeline continuously. Every
+micro-batch calls ``extraction.triples_from_docs``, as the batch
+``api.triples_df`` does, so a micro-batch too sends only the spans that
+can yield a triple through NER.
 
 Exactly-once: the stream checkpoint (WAL + source offsets) makes each
 input file processed once, and each micro-batch writes to its own
@@ -30,23 +33,11 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..corpus import explode_spans, interleave_docs
-from ..operators.gazetteer import gazetteer_df
+from ..extraction import triples_from_docs
 from ..plans.checkpointing import fs_list_names
-from ..operators.linking import link_mentions
-from ..operators.ner import detect_mentions
-from ..operators.relations import extract_triples
 
 DOCS_SCHEMA = ("doc_id bigint, text string, lang string, source string, "
                "n_chars bigint")
-
-
-def triples_from_docs(docs: DataFrame) -> DataFrame:
-    """Flat documents -> triples; shared by batch and every micro-batch."""
-    spans = explode_spans(interleave_docs(docs))
-    linked = link_mentions(detect_mentions(spans),
-                           gazetteer_df(docs.sparkSession))
-    return extract_triples(spans, linked)
 
 
 def stream_triples(spark: SparkSession, input_dir: str, out_dir: str,

@@ -18,7 +18,10 @@ On a real cluster, size --parts so each partition holds a few hundred MB
 of output (the resume granularity AND the retry blast radius). The
 corpus-level 7-tuple dedup and the connected-components canonical
 rewrite remain downstream views over this table (api.q_triples_dedup,
-api.q_canonical_triples).
+api.q_canonical_triples). --publish and --entail read the table just
+written (relations.dedup_triples over --out), so neither reruns span
+synthesis, NER, linking or relation extraction, and after a resume both
+cover every partition, not only the ones this run wrote.
 """
 
 from __future__ import annotations
@@ -34,8 +37,15 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from cspirit_ontology_information_extraction_opus4plan_spark import api  # noqa: E402
+from cspirit_ontology_information_extraction_opus4plan_spark.operators.graphops import (  # noqa: E402
+    kg_entailment,
+)
+from cspirit_ontology_information_extraction_opus4plan_spark.operators.relations import (  # noqa: E402
+    dedup_triples,
+)
 from cspirit_ontology_information_extraction_opus4plan_spark.plans.checkpointing import (  # noqa: E402
     materialize_triples,
+    publish_graph_layout,
 )
 from cspirit_ontology_information_extraction_opus4plan_spark.session import (  # noqa: E402
     get_spark,
@@ -87,18 +97,12 @@ def main(argv: list[str] | None = None) -> int:
         summary = materialize_triples(
             spark, api.triples_df(spark, args.sf_dir), args.out,
             sf_dir=args.sf_dir, n_parts=args.parts)
+        if args.publish or args.entail:
+            store = dedup_triples(spark.read.parquet(args.out))
         if args.publish:
-            from cspirit_ontology_information_extraction_opus4plan_spark.plans.checkpointing import (  # noqa: E501
-                publish_graph_layout,
-            )
-            summary["publish"] = publish_graph_layout(
-                api.q_triples_dedup(spark, args.sf_dir), args.publish)
+            summary["publish"] = publish_graph_layout(store, args.publish)
         if args.entail:
-            from cspirit_ontology_information_extraction_opus4plan_spark.operators.graphops import (  # noqa: E501
-                kg_entailment,
-            )
-            inferred = kg_entailment(api.q_triples_dedup(spark,
-                                                         args.sf_dir))
+            inferred = kg_entailment(store)
             # predicate-partitioned like the serving layout: entailment
             # consumers (SPARQL patterns) filter on predicate
             (inferred.repartition("predicate")

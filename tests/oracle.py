@@ -91,9 +91,12 @@ _PRED = dict(PHRASES)
 
 
 def expected_triples(span_rows: list[dict]) -> list[dict]:
-    """Reference-semantics relation extraction: subject = mention ending
-    closest before the phrase, object = mention starting closest after,
-    no self-loops, confidence 1.0 iff both name-matches."""
+    """Reference-semantics relation extraction over every text span with
+    exactly one predicate phrase in its lower-cased text (the rule in
+    operators/relations.py): subject = mention ending closest before the
+    phrase, object = mention starting closest after, no self-loops,
+    confidence 1.0 iff both name-matches. Offsets are Python string
+    indices (code points), as for the mentions."""
     link = _best_candidate()
     mentions_by_span: dict[tuple, list] = {}
     for m in expected_mentions(span_rows):
@@ -102,9 +105,10 @@ def expected_triples(span_rows: list[dict]) -> list[dict]:
     for r in span_rows:
         if r["kind"] != "text":
             continue
-        pm = _PHRASE_PAT.search(r["text"])
-        if not pm:
+        found = list(_PHRASE_PAT.finditer(r["text"].lower()))
+        if len(found) != 1:
             continue
+        pm = found[0]
         p0, plen = pm.start(1), len(pm.group(1))
         ms = mentions_by_span.get((r["doc_id"], r["pos"]), [])
         subj_c = [m for m in ms if m["m_off"] + len(m["surface"]) <= p0]

@@ -140,3 +140,42 @@ def test_doc_ids_of_seven_digits_stay_distinct(spark):
         f"WITH {corpus_ctes()} SELECT DISTINCT doc_id FROM spans").fetchall()}
     con.close()
     assert duck == want
+
+
+# texts for the relation-span rule: base text is span 0 of each document
+RULE_TEXTS = [
+    # astral prefix: two UTF-16 units per emoji, one code point each
+    "😀😀 abscisate accumulates in abscission here",
+    "abscisate accumulates in abscission here",
+    # an emoji between the subject and the phrase and before the object
+    "abscisate 😀 accumulates in 😀😀 abscission",
+    # upper-case phrase: matched on the lower-cased text
+    "abscisate Accumulates In abscission here",
+    # two phrases: not a relation span
+    "abscisate accumulates in abscission and glucose regulates abscission",
+    # no phrase
+    "abscisate and abscission",
+]
+
+
+def test_relation_span_rule_matches_oracle(spark):
+    """triples_from_docs against the pandas oracle on spans with an astral
+    prefix, an upper-case phrase and two phrases: the relation-span filter
+    in front of NER keeps exactly the spans the oracle extracts from, and
+    mention and phrase offsets share one unit."""
+    from cspirit_ontology_information_extraction_opus4plan_spark.extraction import (  # noqa: E501
+        triples_from_docs,
+    )
+    flat = pd.DataFrame({"doc_id": range(1, len(RULE_TEXTS) + 1),
+                         "text": RULE_TEXTS,
+                         "n_chars": [len(t) for t in RULE_TEXTS]})
+    cols = ["doc_id", "pos", "subject", "predicate", "object",
+            "confidence", "evidence"]
+    got = sorted(tuple(r) for r in triples_from_docs(
+        spark.createDataFrame(flat)).select(*cols).collect())
+    want = sorted(tuple(r[c] for c in cols) for r in
+                  oracle.expected_triples(oracle.expected_spans(flat)))
+    assert got == want
+    base = {(d, s, p, o) for d, pos, s, p, o, _, _ in got if pos == 0}
+    edge = ("CHEBI:10039", "accumulates_in", "GO:20011")
+    assert base == {(f"DOC:{d:06d}",) + edge for d in (1, 2, 3, 4)}

@@ -56,6 +56,43 @@ def test_no_cartesian_products(triples_plan):
     assert "BroadcastNestedLoopJoin" not in triples_plan
 
 
+def _subtree(plan: str, node: str) -> list[str]:
+    """The line of the first `node` operator in a plan tree string and
+    every line below it that is nested deeper (its child subtree)."""
+    lines = plan.splitlines()
+    i = next(k for k, ln in enumerate(lines) if node in ln)
+
+    def depth(ln: str) -> int:
+        return re.match(r"[^A-Za-z]*", ln).end()
+
+    sub = [lines[i]]
+    for ln in lines[i + 1:]:
+        if depth(ln) <= depth(lines[i]):
+            break
+        sub.append(ln)
+    return sub
+
+
+def _phrase_filter_below_python(plan: str) -> bool:
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators.relations import (  # noqa: E501
+        PHRASE_PATTERN,
+    )
+    return any("Filter" in ln and PHRASE_PATTERN in ln
+               for ln in _subtree(plan, "MapInPandas"))
+
+
+def test_triples_ner_reads_only_relation_spans(triples_plan):
+    """The relation-span filter (regexp_count over the phrase pattern)
+    sits below the one MapInPandas, so other spans never reach Python."""
+    assert _phrase_filter_below_python(triples_plan)
+
+
+def test_ner_mentions_scans_every_span(spark, sf_dir):
+    plan = _plan(api.q_ner_mentions(spark, sf_dir))
+    assert plan.count("MapInPandas") == 1
+    assert not _phrase_filter_below_python(plan)
+
+
 # --- plan shapes of the newer operator families -----------------------------
 
 

@@ -7,6 +7,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from cspirit_ontology_information_extraction_opus4plan_spark import api
 from cspirit_ontology_information_extraction_opus4plan_spark.plans import (
     checkpointing as CK,
@@ -58,6 +60,22 @@ def test_kill_and_resume_identical(spark, sf_dir, tmp_path):
     s4 = CK.materialize_triples(spark, triples, part,
                                 sf_dir=sf_dir, n_parts=N_PARTS)
     assert s4["written"] == []
+
+
+def test_marker_with_other_n_parts_refused_in_any_position(spark, sf_dir,
+                                                          tmp_path):
+    """A marker left by a run with another n_parts is refused even when
+    it is not the first marker in sort order."""
+    out = tmp_path / "mixed"
+    ckpt = out / CK.CKPT_DIR
+    ckpt.mkdir(parents=True)
+    for k, n in [(0, N_PARTS), (1, N_PARTS), (5, N_PARTS // 2)]:
+        (ckpt / f"part_{k:05d}.json").write_text(json.dumps(
+            {"part_id": k, "status": "complete",
+             "lineage": {"n_parts": n}}))
+    with pytest.raises(ValueError, match=f"n_parts={N_PARTS // 2}"):
+        CK.materialize_triples(spark, api.triples_df(spark, sf_dir),
+                               str(out), sf_dir=sf_dir, n_parts=N_PARTS)
 
 
 def test_graph_serving_layout(spark, sf_dir, tmp_path):
