@@ -11,8 +11,11 @@ The sandbox's driver corpus (/root/testdata/sf*/documents.parquet) is flat
 interleaved table from it **deterministically** — a pure function of
 (doc_id, text, n_chars) — implemented twice from the same spec:
 
-  * :func:`documents_interleaved` — Spark column expressions (JVM-only,
-    whole-stage codegen, zero Python on the path);
+  * :func:`documents_interleaved` — Spark SQL expression text held as
+    module constants (JVM-only, whole-stage codegen, zero Python on the
+    path). Text, not a tree of `F.*` calls: the plan is built on every
+    call and every streaming micro-batch, and each `F.*` node is a
+    driver->JVM round trip;
   * :func:`corpus_ctes` — the equivalent DuckDB SQL CTE prefix, so the
     driver's oracle can rebuild the identical table.
 
@@ -38,24 +41,92 @@ text reconstruction, parsers/xml_parser.py:1263-1347).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ontology_data import PREDICATE_PHRASES, surfaces
 from .session import local_df
 
 __all__ = ["documents_interleaved", "interleave_docs", "spans_exploded",
-           "explode_spans", "corpus_ctes", "N_SURF"]
+           "explode_spans", "corpus_ctes", "spark_sql_str", "N_SURF"]
 
 N_SURF = len(surfaces())
 
 
-def _doc_str(d: Column) -> Column:
-    """DOC:<id>, zero-padded to six digits. lpad truncates longer
-    strings, so ids of seven or more digits are left unpadded."""
-    s = d.cast("string")
-    return F.concat(F.lit("DOC:"),
-                    F.when(F.length(s) < 6, F.lpad(s, 6, "0")).otherwise(s))
+def spark_sql_str(s: str) -> str:
+    """`s` as a Spark SQL string literal. Spark reads backslash escapes
+    inside literals ('\\b' is a backspace), so backslashes are doubled
+    and quotes escaped; sql_quote below is the DuckDB form and would
+    corrupt a regex such as relations.PHRASE_PATTERN."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# Span synthesis as Spark SQL expression text, built once at import.
+# interleave_docs runs on every call and on every streaming micro-batch;
+# from text, its plan costs a few driver->JVM calls instead of one per
+# expression node. Moduli are pmod (floor, as Python's %), so a negative
+# doc id still picks its surfaces like the pandas oracle.
+_DOC_KEYS = (
+    "doc_id AS d",
+    # DOC:<id> zero-padded to six digits, longer ids left whole; the IF
+    # keeps the column nullable, as the table's schema has it
+    "IF(doc_id IS NULL, NULL, format_string('DOC:%06d', doc_id)) AS doc_id",
+    "text",
+    "CAST(n_chars AS INT) AS nc",
+    f"CAST(pmod(doc_id, {N_SURF}) AS INT) AS i_subj",
+    f"CAST(pmod(doc_id * 7 + 3, {N_SURF}) AS INT) AS i_obj",
+    f"CAST(pmod(doc_id + 1, {N_SURF}) AS INT) AS i_fig",
+    f"CAST(pmod(doc_id + 2, {N_SURF}) AS INT) AS i_tab",
+    f"CAST(pmod(doc_id + 4, {N_SURF}) AS INT) AS i_ref",
+)
+_SURF_JOINS = tuple((key, "s_" + key[2:]) for key in
+                    ("i_subj", "i_obj", "i_fig", "i_tab", "i_ref"))
+
+
+def _span(kind: str, text: str, media: str, off: str,
+          when: str | None = None) -> str:
+    span = (f"named_struct('kind', '{kind}', 'text', {text}, "
+            f"'media_ref', {media}, 'offset', CAST({off} AS INT))")
+    return span if when is None else f"CASE WHEN {when} THEN {span} END"
+
+
+_MEDIA = "concat('media/DOC', CAST(d AS STRING), '/{}')"
+_SPANS = ", ".join((
+    _span("text", "text", "''", "0"),
+    _span("text", "sentence", "''", "off1"),
+    _span("figure", "figcap", _MEDIA.format("fig1.png"), "off2",
+          "pmod(d, 3) = 0"),
+    _span("table", "tabcap", _MEDIA.format("tab1.parquet"), "off3",
+          "pmod(d, 4) = 0"),
+    _span("reference", "refcit", "''", "off4", "pmod(d, 5) = 1"),
+))
+
+# One select in dependency order: each alias may use the ones before it
+# (lateral column aliases), so every generated text and offset is
+# computed once, as the withColumn chain it replaces did.
+_SPAN_EXPRS = (
+    "doc_id",
+    "CASE WHEN pmod(d, 5) = 0 THEN 'glucose' ELSE s_subj END AS subj",
+    "CASE pmod(d, 7) " + " ".join(
+        f"WHEN {i} THEN {spark_sql_str(ph)}"
+        for i, (ph, _) in enumerate(PREDICATE_PHRASES)) + " END AS phrase",
+    "concat(subj, ' ', phrase, ' ', s_obj, '.') AS sentence",
+    "concat('figure 1. microscopy of ', s_fig, ' distribution in sample ', "
+    "CAST(d AS STRING), '.') AS figcap",
+    "concat('table 1. quantification of ', s_tab, ' levels across ', "
+    "CAST(pmod(d, 7) + 2 AS STRING), ' conditions.') AS tabcap",
+    "concat('smith j, doe a (', CAST(pmod(d, 30) + 1990 AS STRING), "
+    "'). studies on ', s_ref, '. journal of synthetic data, ', "
+    "CAST(pmod(d, 50) + 1 AS STRING), '(2), 100-110. doi:10.1234/jsd.', "
+    "CAST(d AS STRING)) AS refcit",
+    "nc + 1 AS off1",
+    "off1 + length(sentence) + 1 AS off2",
+    "off2 + CASE WHEN pmod(d, 3) = 0 THEN length(figcap) + 1 ELSE 0 END "
+    "AS off3",
+    "off3 + CASE WHEN pmod(d, 4) = 0 THEN length(tabcap) + 1 ELSE 0 END "
+    "AS off4",
+    f"filter(array({_SPANS}), x -> x IS NOT NULL) AS spans",
+)
 
 
 def _surf_df(spark: SparkSession) -> DataFrame:
@@ -76,88 +147,12 @@ def interleave_docs(docs: DataFrame) -> DataFrame:
     """Span synthesis over an already-loaded flat documents DataFrame —
     the entry point the Structured Streaming path shares (foreachBatch
     hands us a batch DataFrame, not a directory)."""
-    spark = docs.sparkSession
-    surf = _surf_df(spark)
-    n = N_SURF
-    d = F.col("doc_id")
-
-    base = docs.select(
-        d.alias("d"), _doc_str(d).alias("doc_id"), "text",
-        F.col("n_chars").cast("int").alias("nc"),
-        (d % n).cast("int").alias("i_subj"),
-        ((d * 7 + 3) % n).cast("int").alias("i_obj"),
-        ((d + 1) % n).cast("int").alias("i_fig"),
-        ((d + 2) % n).cast("int").alias("i_tab"),
-        ((d + 4) % n).cast("int").alias("i_ref"),
-    )
-    for key, out in [("i_subj", "s_subj"), ("i_obj", "s_obj"),
-                     ("i_fig", "s_fig"), ("i_tab", "s_tab"),
-                     ("i_ref", "s_ref")]:
-        sd = surf.withColumnRenamed("idx", key + "_k").withColumnRenamed("s", out)
-        base = base.join(F.broadcast(sd), base[key] == sd[key + "_k"], "inner") \
-                   .drop(key, key + "_k")
-
-    d = F.col("d")
-    phrase = None
-    for i, (ph, _) in enumerate(PREDICATE_PHRASES):
-        phrase = (F.when(d % 7 == i, F.lit(ph)) if phrase is None
-                  else phrase.when(d % 7 == i, F.lit(ph)))
-    base = base.withColumn(
-        "subj", F.when(d % 5 == 0, F.lit("glucose")).otherwise(F.col("s_subj"))
-    ).withColumn("phrase", phrase)
-
-    # generated texts, each materialized once as a named column
-    base = base.withColumn(
-        "sentence",
-        F.concat("subj", F.lit(" "), "phrase", F.lit(" "), "s_obj", F.lit(".")))
-    base = base.withColumn(
-        "figcap",
-        F.concat(F.lit("figure 1. microscopy of "), "s_fig",
-                 F.lit(" distribution in sample "), d.cast("string"), F.lit("."))
-    ).withColumn(
-        "tabcap",
-        F.concat(F.lit("table 1. quantification of "), "s_tab",
-                 F.lit(" levels across "), (d % 7 + 2).cast("string"),
-                 F.lit(" conditions."))
-    ).withColumn(
-        "refcit",
-        F.concat(F.lit("smith j, doe a ("), (d % 30 + 1990).cast("string"),
-                 F.lit("). studies on "), "s_ref",
-                 F.lit(". journal of synthetic data, "),
-                 (d % 50 + 1).cast("string"),
-                 F.lit("(2), 100-110. doi:10.1234/jsd."), d.cast("string")))
-
-    nc = F.col("nc")
-    base = base.withColumn("off1", nc + F.lit(1))
-    base = base.withColumn("off2", F.col("off1") + F.length("sentence") + 1)
-    base = base.withColumn(
-        "off3", F.col("off2")
-        + F.when(d % 3 == 0, F.length("figcap") + 1).otherwise(0))
-    base = base.withColumn(
-        "off4", F.col("off3")
-        + F.when(d % 4 == 0, F.length("tabcap") + 1).otherwise(0))
-
-    def span(kind, text, media, off):
-        return F.struct(
-            F.lit(kind).alias("kind"), text.alias("text"),
-            media.alias("media_ref"), off.cast("int").alias("offset"))
-
-    empty = F.lit("")
-    s0 = span("text", F.col("text"), empty, F.lit(0))
-    s1 = span("text", F.col("sentence"), empty, F.col("off1"))
-    s2 = F.when(d % 3 == 0, span(
-        "figure", F.col("figcap"),
-        F.concat(F.lit("media/DOC"), d.cast("string"), F.lit("/fig1.png")),
-        F.col("off2")))
-    s3 = F.when(d % 4 == 0, span(
-        "table", F.col("tabcap"),
-        F.concat(F.lit("media/DOC"), d.cast("string"), F.lit("/tab1.parquet")),
-        F.col("off3")))
-    s4 = F.when(d % 5 == 1, span("reference", F.col("refcit"), empty,
-                                 F.col("off4")))
-
-    spans = F.filter(F.array(s0, s1, s2, s3, s4), lambda x: x.isNotNull())
-    return base.select("doc_id", spans.alias("spans"))
+    surf = _surf_df(docs.sparkSession)
+    base = docs.selectExpr(*_DOC_KEYS)
+    for key, out in _SURF_JOINS:
+        base = base.join(F.broadcast(surf.toDF(key + "_k", out)),
+                         F.expr(f"{key} = {key}_k"))
+    return base.selectExpr(*_SPAN_EXPRS).select("doc_id", "spans")
 
 
 def spans_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -167,9 +162,9 @@ def spans_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def explode_spans(nested: DataFrame) -> DataFrame:
-    return nested.select(
-        "doc_id", F.posexplode("spans").alias("pos", "s")
-    ).select("doc_id", "pos", "s.kind", "s.text", "s.media_ref", "s.offset")
+    return nested.selectExpr("doc_id", "posexplode(spans) AS (pos, s)") \
+        .selectExpr("doc_id", "pos", "s.kind", "s.text", "s.media_ref",
+                    "s.`offset`")
 
 
 # ---------------------------------------------------------------------------
@@ -194,6 +189,12 @@ def sql_quote(s) -> str:
 _values, _q = sql_values, sql_quote  # internal aliases
 
 
+def _pmod(e: str, k: int) -> str:
+    """Floor modulo (Spark's pmod, Python's %) in DuckDB, whose % keeps
+    the sign of the dividend."""
+    return f"(({e}) % {k} + {k}) % {k}"
+
+
 def corpus_ctes() -> str:
     """SQL CTE prefix (no leading WITH) defining:
     surf(idx,s) -> aug (per-doc surfaces + generated texts) -> spans
@@ -207,24 +208,21 @@ def corpus_ctes() -> str:
     return f"""
 {surf_values},
 d0 AS (
-  SELECT doc_id AS d,
-         'DOC:' || CASE WHEN length(CAST(doc_id AS VARCHAR)) < 6
-                        THEN lpad(CAST(doc_id AS VARCHAR), 6, '0')
-                        ELSE CAST(doc_id AS VARCHAR) END AS doc,
+  SELECT doc_id AS d, printf('DOC:%06d', doc_id) AS doc,
          text, CAST(n_chars AS INT) AS nc
   FROM documents
 ),
 aug AS (
   SELECT d0.*,
-    CASE WHEN d % 5 = 0 THEN 'glucose' ELSE ss.s END AS subj,
+    CASE WHEN {_pmod('d', 5)} = 0 THEN 'glucose' ELSE ss.s END AS subj,
     so.s AS obj, sf_.s AS figterm, st.s AS tabterm, sr.s AS refterm,
-    CASE CAST(d % 7 AS INT) {phrase_case} END AS phrase
+    CASE CAST({_pmod('d', 7)} AS INT) {phrase_case} END AS phrase
   FROM d0
-  JOIN surf ss  ON ss.idx  = d % {n}
-  JOIN surf so  ON so.idx  = (d * 7 + 3) % {n}
-  JOIN surf sf_ ON sf_.idx = (d + 1) % {n}
-  JOIN surf st  ON st.idx  = (d + 2) % {n}
-  JOIN surf sr  ON sr.idx  = (d + 4) % {n}
+  JOIN surf ss  ON ss.idx  = {_pmod('d', n)}
+  JOIN surf so  ON so.idx  = {_pmod('d * 7 + 3', n)}
+  JOIN surf sf_ ON sf_.idx = {_pmod('d + 1', n)}
+  JOIN surf st  ON st.idx  = {_pmod('d + 2', n)}
+  JOIN surf sr  ON sr.idx  = {_pmod('d + 4', n)}
 ),
 aug2 AS (
   SELECT aug.*,
@@ -232,10 +230,11 @@ aug2 AS (
     'figure 1. microscopy of ' || figterm || ' distribution in sample '
       || CAST(d AS VARCHAR) || '.' AS figcap,
     'table 1. quantification of ' || tabterm || ' levels across '
-      || CAST(d % 7 + 2 AS VARCHAR) || ' conditions.' AS tabcap,
-    'smith j, doe a (' || CAST(d % 30 + 1990 AS VARCHAR) || '). studies on '
+      || CAST({_pmod('d', 7)} + 2 AS VARCHAR) || ' conditions.' AS tabcap,
+    'smith j, doe a (' || CAST({_pmod('d', 30)} + 1990 AS VARCHAR)
+      || '). studies on '
       || refterm || '. journal of synthetic data, '
-      || CAST(d % 50 + 1 AS VARCHAR)
+      || CAST({_pmod('d', 50)} + 1 AS VARCHAR)
       || '(2), 100-110. doi:10.1234/jsd.' || CAST(d AS VARCHAR) AS refcit
   FROM aug
 ),
@@ -248,19 +247,19 @@ sp AS (
   SELECT doc, d, 2, 'figure', figcap,
          'media/DOC' || CAST(d AS VARCHAR) || '/fig1.png',
          nc + 1 + length(sentence) + 1
-  FROM aug2 WHERE d % 3 = 0
+  FROM aug2 WHERE {_pmod('d', 3)} = 0
   UNION ALL
   SELECT doc, d, 3, 'table', tabcap,
          'media/DOC' || CAST(d AS VARCHAR) || '/tab1.parquet',
          nc + 1 + length(sentence) + 1
-           + CASE WHEN d % 3 = 0 THEN length(figcap) + 1 ELSE 0 END
-  FROM aug2 WHERE d % 4 = 0
+           + CASE WHEN {_pmod('d', 3)} = 0 THEN length(figcap) + 1 ELSE 0 END
+  FROM aug2 WHERE {_pmod('d', 4)} = 0
   UNION ALL
   SELECT doc, d, 4, 'reference', refcit, '',
          nc + 1 + length(sentence) + 1
-           + CASE WHEN d % 3 = 0 THEN length(figcap) + 1 ELSE 0 END
-           + CASE WHEN d % 4 = 0 THEN length(tabcap) + 1 ELSE 0 END
-  FROM aug2 WHERE d % 5 = 1
+           + CASE WHEN {_pmod('d', 3)} = 0 THEN length(figcap) + 1 ELSE 0 END
+           + CASE WHEN {_pmod('d', 4)} = 0 THEN length(tabcap) + 1 ELSE 0 END
+  FROM aug2 WHERE {_pmod('d', 5)} = 1
 ),
 spans AS (
   SELECT doc AS doc_id,

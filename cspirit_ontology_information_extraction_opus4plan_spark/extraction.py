@@ -6,6 +6,12 @@ streaming micro-batch call `triples_from_docs`. Only relation spans
 (`relations.relation_spans`) cross into Python, because extract_triples
 inner-joins mentions to those same spans on (doc_id, pos); mention
 queries call `detect_mentions` on the full span table instead.
+
+The plan is built anew on every call, so once per pass and once per
+micro-batch. Span synthesis, linking and relation extraction therefore
+compose it from Spark SQL expression text held as module constants: a
+few driver->JVM calls per step instead of one per expression node
+(about 450 calls per build, down from about 3,700).
 """
 
 from __future__ import annotations

@@ -35,19 +35,17 @@ def link_mentions(mentions: DataFrame, gaz: DataFrame) -> DataFrame:
     """mentions(doc_id,pos,kind,m_off,surface) x gaz(surface,term_id,
     match_kind,rank,...) -> winning candidate per mention:
     argmax(rank), tie -> min term_id (encoded as struct-min over
-    (-rank, term_id, match_kind) — total order, deterministic)."""
+    (-rank, term_id, match_kind) — total order, deterministic). Written
+    as SQL text: the triples path rebuilds this plan on every call."""
     cand = (mentions.repartition("doc_id", "pos")
             .join(F.broadcast(gaz), "surface", "inner"))
     return (cand
             .groupBy("doc_id", "pos", "m_off", "kind", "surface")
-            .agg(F.min(F.struct(
-                (-F.col("rank")).alias("neg_rank"),
-                F.col("term_id"),
-                F.col("match_kind"))).alias("b"))
-            .select("doc_id", "pos", "m_off", "kind", "surface",
-                    F.col("b.term_id").alias("term_id"),
-                    F.col("b.match_kind").alias("match_kind"),
-                    (-F.col("b.neg_rank")).alias("rank")))
+            .agg(F.expr("min(struct(-rank AS neg_rank, term_id, match_kind)) "
+                        "AS b"))
+            .selectExpr("doc_id", "pos", "m_off", "kind", "surface",
+                        "b.term_id AS term_id", "b.match_kind AS match_kind",
+                        "-b.neg_rank AS rank"))
 
 
 def _coherence_scored(mentions: DataFrame, gaz: DataFrame,

@@ -33,16 +33,52 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..corpus import spark_sql_str
 from ..ontology_data import PREDICATE_PHRASES, alternation
 
 PHRASE_PATTERN = r"\b(" + alternation([p for p, _ in PREDICATE_PHRASES]) + r")\b"
 
+# The extraction plan as Spark SQL expression text, built once at import:
+# it is rebuilt on every call and every streaming micro-batch, and text
+# costs a few driver->JVM calls where a tree of F.* calls costs one per
+# node (see corpus.py).
+_P = spark_sql_str(PHRASE_PATTERN)
+RELATION_SPAN = f"kind = 'text' AND regexp_count(lower(text), {_P}) = 1"
 
-def _phrase_to_pred():
-    m = []
-    for ph, pred in PREDICATE_PHRASES:
-        m.extend([F.lit(ph), F.lit(pred)])
-    return F.create_map(*m)
+# all matching happens on lower(text): the NER stage lowercases before
+# scanning, so mention m_off and phrase p0 must share the lowercased
+# coordinate system (and the phrase vocabulary is lowercase — raw-text
+# matching would miss 'Regulates'), and the same unit: m_off counts code
+# points (Python str), regexp_instr UTF-16 units (one extra per emoji
+# before the phrase). So p0 is the code-point length of the text before
+# the SAME word-bounded pattern that selected the phrase (locate(phrase,
+# text) would anchor to an earlier in-word occurrence: 'is a' inside
+# 'axis aligns'). Later aliases use earlier ones (lateral aliases).
+_PHRASE_EXPRS = (
+    "doc_id", "pos", "text", "lower(text) AS lc",
+    f"regexp_extract(lc, {_P}, 1) AS phrase",
+    f"length(split(lc, {_P}, 2)[0]) AS p0",
+    "length(phrase) AS plen",
+)
+_MENTION = "struct(m_off, term_id, match_kind)"
+_PICK = (
+    f"max(CASE WHEN m_off + length(surface) <= p0 THEN {_MENTION} END) AS s",
+    f"min(CASE WHEN m_off >= p0 + plen + 1 THEN {_MENTION} END) AS o",
+)
+_PREDICATE = "map(" + ", ".join(
+    f"{spark_sql_str(ph)}, {spark_sql_str(pred)}"
+    for ph, pred in PREDICATE_PHRASES) + ")[phrase]"
+_TRIPLE_EXPRS = (
+    "doc_id", "pos", "s.term_id AS subject", f"{_PREDICATE} AS predicate",
+    "o.term_id AS object", "'uri' AS subject_type", "'uri' AS object_type",
+    "CAST(NULL AS STRING) AS object_datatype",
+    "CAST(NULL AS STRING) AS object_language",
+    "CASE WHEN s.match_kind = 'name' AND o.match_kind = 'name' THEN 1.0D "
+    "ELSE 0.9D END AS confidence",
+    "text AS evidence",
+    "concat('TRP:', md5(concat_ws('|', doc_id, pos, subject, predicate, "
+    "object))) AS triple_id",
+)
 
 
 def relation_spans(spans: DataFrame) -> DataFrame:
@@ -51,9 +87,7 @@ def relation_spans(spans: DataFrame) -> DataFrame:
     and the NER input of extraction.triples_from_docs both go through
     this one filter, so the two sides of the (doc_id, pos) join cannot
     drift apart. A map-side JVM filter: no shuffle, no Python."""
-    return spans.filter(
-        (F.col("kind") == "text")
-        & (F.regexp_count(F.lower("text"), F.lit(PHRASE_PATTERN)) == 1))
+    return spans.filter(RELATION_SPAN)
 
 
 def extract_triples(spans: DataFrame, linked_mentions: DataFrame) -> DataFrame:
@@ -64,58 +98,13 @@ def extract_triples(spans: DataFrame, linked_mentions: DataFrame) -> DataFrame:
     an equi-join on (doc_id, pos) with the mention table, then a single
     hash aggregate using conditional struct-min/max (max_by/min_by on
     m_off) — one shuffle on (doc_id, pos), no window, no Python."""
-    # all matching happens on lower(text): the NER stage lowercases
-    # before scanning, so mention m_off and phrase p0 must share the
-    # lowercased coordinate system (and the phrase vocabulary is
-    # lowercase — raw-text matching would miss 'Regulates'), and the
-    # same unit: m_off counts code points (Python str), regexp_instr
-    # UTF-16 units (one extra per emoji before the phrase). So p0 is the
-    # code-point length of the text before the SAME word-bounded pattern
-    # that selected the phrase (locate(phrase, text) would anchor to an
-    # earlier in-word occurrence: 'is a' inside 'axis aligns').
-    lc = F.lower("text")
-    ts = (relation_spans(spans)
-          .withColumn("lc", lc)
-          .withColumn("phrase", F.regexp_extract("lc", PHRASE_PATTERN, 1))
-          .withColumn("p0", F.length(F.split("lc", PHRASE_PATTERN, 2)[0]))
-          .select("doc_id", "pos", "text", "phrase", "p0",
-                  F.length("phrase").alias("plen")))
-
-    m = linked_mentions.select("doc_id", "pos", "m_off", "surface",
-                               "term_id", "match_kind")
-    j = ts.join(m, ["doc_id", "pos"], "inner")
-
-    subj_cond = (F.col("m_off") + F.length("surface")) <= F.col("p0")
-    obj_cond = F.col("m_off") >= (F.col("p0") + F.col("plen") + 1)
-    picked = (j.groupBy("doc_id", "pos", "text", "phrase")
-              .agg(
-        F.max(F.when(subj_cond, F.struct(
-            F.col("m_off"), F.col("term_id"), F.col("match_kind")))).alias("s"),
-        F.min(F.when(obj_cond, F.struct(
-            F.col("m_off"), F.col("term_id"), F.col("match_kind")))).alias("o"),
-    ).filter(F.col("s").isNotNull() & F.col("o").isNotNull()))
-
-    out = (picked
-           .withColumn("predicate", _phrase_to_pred()[F.col("phrase")])
-           .select(
-               "doc_id", "pos",
-               F.col("s.term_id").alias("subject"),
-               "predicate",
-               F.col("o.term_id").alias("object"),
-               F.lit("uri").alias("subject_type"),
-               F.lit("uri").alias("object_type"),
-               F.lit(None).cast("string").alias("object_datatype"),
-               F.lit(None).cast("string").alias("object_language"),
-               F.when((F.col("s.match_kind") == "name")
-                      & (F.col("o.match_kind") == "name"), F.lit(1.0))
-                .otherwise(F.lit(0.9)).alias("confidence"),
-               F.col("text").alias("evidence"))
-           .filter(F.col("subject") != F.col("object")))
-
-    return out.withColumn(
-        "triple_id",
-        F.concat(F.lit("TRP:"), F.md5(F.concat_ws(
-            "|", "doc_id", "pos", "subject", "predicate", "object"))))
+    ts = relation_spans(spans).selectExpr(*_PHRASE_EXPRS)
+    return (ts.join(linked_mentions, ["doc_id", "pos"])
+            .groupBy("doc_id", "pos", "text", "phrase")
+            .agg(*map(F.expr, _PICK))
+            .filter("s IS NOT NULL AND o IS NOT NULL")
+            .selectExpr(*_TRIPLE_EXPRS)
+            .filter("subject != object"))
 
 
 def dedup_triples(triples: DataFrame) -> DataFrame:

@@ -13,7 +13,8 @@ machinery (ParseResult parsers/__init__.py:392, ProgressReporter :234)
     mid-job kill leaves partial partitions that the next run simply
     overwrites);
   * a checkpoint marker per completed partition carrying lineage
-    (inputs, parameters) + metrics (row count, wall time) — JSON
+    (inputs, parameters) + metrics (row count, observed inside the
+    write job; wall time) — JSON
     files beside the output, read/written through Hadoop's
     FileSystem API so hdfs:///s3a:// output paths work; a bigger
     deployment would keep rows in an Iceberg `checkpoints` table
@@ -31,7 +32,7 @@ from __future__ import annotations
 import json
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 CKPT_DIR = "_checkpoints"
@@ -69,11 +70,15 @@ def _fs_read_json(spark: SparkSession, path: str) -> dict:
 
 def _fs_write_json_atomic(spark: SparkSession, path: str,
                           obj: dict) -> None:
-    """Write to <path>.tmp then rename — the same atomic-publish
-    contract the local os.replace gave, through the output path's own
-    filesystem."""
     fs, dst = _fs(spark, path)
-    _, tmp = _fs(spark, path + ".tmp")
+    _write_json_atomic(fs, dst, obj)
+
+
+def _write_json_atomic(fs, dst, obj: dict) -> None:
+    """Write to <dst>.tmp then rename — the same atomic-publish
+    contract the local os.replace gave, through the output path's own
+    filesystem (`fs`, `dst`: a Hadoop FileSystem and Path)."""
+    tmp = dst.suffix(".tmp")
     out = fs.create(tmp, True)
     try:
         out.write(bytearray(json.dumps(obj).encode("utf-8")))
@@ -82,17 +87,27 @@ def _fs_write_json_atomic(spark: SparkSession, path: str,
     if fs.exists(dst):
         fs.delete(dst, False)
     if not fs.rename(tmp, dst):
-        raise IOError(f"atomic publish failed: rename {path}.tmp -> "
-                      f"{path}")
+        raise IOError(f"atomic publish failed: rename {tmp} -> {dst}")
+
+
+def observe_counts(df: DataFrame, agg: str) -> tuple[DataFrame,
+                                                     Observation]:
+    """`df` with the SQL aggregate `agg` (`<expr> AS <name>`) observed,
+    and the Observation whose `.get[name]` holds it once an action on
+    that frame has run. It is computed in the stage that runs `df`:
+    attach it after the last exchange, and a write counts its rows in
+    its own result stage, with no job reading the output back."""
+    obs = Observation()
+    return df.observe(obs, F.expr(agg)), obs
 
 
 def with_part_id(df: DataFrame, n_parts: int) -> DataFrame:
-    return df.withColumn(
-        "part_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int"))
+    return df.selectExpr(
+        "*", f"CAST(pmod(xxhash64(doc_id), {n_parts}) AS INT) AS part_id")
 
 
-def _marker_path(out_dir: str, part_id: int) -> str:
-    return f"{out_dir.rstrip('/')}/{CKPT_DIR}/part_{part_id:05d}.json"
+def _marker_name(part_id: int) -> str:
+    return f"part_{part_id:05d}.json"
 
 
 def _validate_existing_markers(spark: SparkSession, out_dir: str,
@@ -118,8 +133,7 @@ def _validate_existing_markers(spark: SparkSession, out_dir: str,
 def completed_partitions(spark: SparkSession, out_dir: str,
                          n_parts: int) -> list[int]:
     have = set(fs_list_names(spark, f"{out_dir.rstrip('/')}/{CKPT_DIR}"))
-    return [k for k in range(n_parts)
-            if f"part_{k:05d}.json" in have]
+    return [k for k in range(n_parts) if _marker_name(k) in have]
 
 
 def pending_partitions(spark: SparkSession, out_dir: str,
@@ -145,50 +159,37 @@ def materialize_triples(
     Returns a summary dict {written: [...], skipped: [...], rows: n}."""
     t0 = time.time()
     _validate_existing_markers(spark, out_dir, n_parts)
-    pending = pending_partitions(spark, out_dir, n_parts)
-    if only_parts is not None:
-        pending = [k for k in pending if k in only_parts]
     done = completed_partitions(spark, out_dir, n_parts)
+    pending = [k for k in range(n_parts) if k not in done
+               and (only_parts is None or k in only_parts)]
     if not pending:
         return {"written": [], "skipped": done, "rows": 0, "wall_s": 0.0}
 
     parted = with_part_id(triples, n_parts) \
-        .filter(F.col("part_id").isin(pending))
+        .filter(f"part_id IN ({', '.join(map(str, pending))})")
 
-    # one job, dynamic partition overwrite -> idempotent per partition
-    (parted
-     .repartition(len(pending), "part_id")
-     .write
+    # one job, dynamic partition overwrite -> idempotent per partition;
+    # the per-partition row counts come from that job's result stage
+    written, obs = observe_counts(
+        parted.repartition(len(pending), "part_id"),
+        "array(" + ", ".join(f"count_if(part_id = {k})" for k in pending)
+        + ") AS n")
+    (written.write
      .partitionBy("part_id")
      .option("partitionOverwriteMode", "dynamic")
      .mode("overwrite")
      .parquet(out_dir))
-
-    # per-partition metrics from the written files (cheap scan of counts).
-    # An all-empty input writes no parquet files at all (only the
-    # partition dirs are absent), and reading the bare directory raises
-    # (unable to infer schema) — that run is still complete with zero
-    # rows and must publish its markers. The empty case is detected
-    # explicitly (no part_id=* dirs at the output location) instead of
-    # a blanket except: a transient/corruption read error must
-    # propagate, not be recorded as a successful zero-row run.
-    has_data = any(name.startswith("part_id=")
-                   for name in fs_list_names(spark, out_dir))
-    if has_data:
-        counts = {
-            r["part_id"]: r["n"]
-            for r in spark.read.parquet(out_dir)
-            .filter(F.col("part_id").isin(pending))
-            .groupBy("part_id").agg(F.count("*").alias("n")).collect()
-        }
-    else:
-        counts = {}
+    counts = dict(zip(pending, obs.get["n"]))
     wall = round(time.time() - t0, 3)
+    # the filesystem and the Path class are resolved once: each lookup
+    # is a driver->JVM call, and every marker would repeat them
+    fs, ckpt = _fs(spark, f"{out_dir.rstrip('/')}/{CKPT_DIR}")
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
     for k in pending:
         marker = {
             "part_id": k,
             "status": "complete",
-            "metrics": {"n_rows": int(counts.get(k, 0)),
+            "metrics": {"n_rows": int(counts[k]),
                         "run_wall_s": wall},
             "lineage": {
                 "input_sf_dir": sf_dir,
@@ -198,7 +199,7 @@ def materialize_triples(
                                              time.gmtime()),
             },
         }
-        _fs_write_json_atomic(spark, _marker_path(out_dir, k), marker)
+        _write_json_atomic(fs, hpath(ckpt, _marker_name(k)), marker)
 
     return {"written": pending, "skipped": done,
             "rows": int(sum(counts.values())), "wall_s": wall}
@@ -240,8 +241,10 @@ def publish_graph_layout(triples: DataFrame, out_dir: str,
     pruning, clustering, bounded file count — are what the test gates.
     Returns {n_predicates, n_files, rows}."""
     bucket = F.pmod(F.xxhash64("subject"), F.lit(files_per_predicate))
-    (triples
-     .repartition(F.col("predicate"), bucket.alias("sb"))
+    written, obs = observe_counts(
+        triples.repartition(F.col("predicate"), bucket.alias("sb")),
+        "count(1) AS rows")
+    (written
      .sortWithinPartitions("predicate", "subject", "object")
      .write.mode("overwrite")
      .option("maxRecordsPerFile", max_records_per_file)
@@ -254,6 +257,5 @@ def publish_graph_layout(triples: DataFrame, out_dir: str,
         sum(1 for f in fs_list_names(spark, f"{out_dir}/{d}")
             if f.endswith(".parquet"))
         for d in pred_dirs)
-    back = spark.read.parquet(out_dir)
     return {"n_predicates": len(pred_dirs), "n_files": n_files,
-            "rows": back.count()}
+            "rows": obs.get["rows"]}

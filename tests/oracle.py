@@ -76,7 +76,7 @@ def expected_mentions(span_rows: list[dict]) -> list[dict]:
     pat = _pat()
     out = []
     for r in span_rows:
-        if r["kind"] not in ("text", "figure", "table"):
+        if r["kind"] not in ("text", "figure", "table") or not r["text"]:
             continue
         for m in pat.finditer(r["text"].lower()):
             out.append({"doc_id": r["doc_id"], "pos": r["pos"],
@@ -103,7 +103,7 @@ def expected_triples(span_rows: list[dict]) -> list[dict]:
         mentions_by_span.setdefault((m["doc_id"], m["pos"]), []).append(m)
     out = []
     for r in span_rows:
-        if r["kind"] != "text":
+        if r["kind"] != "text" or not r["text"]:
             continue
         found = list(_PHRASE_PAT.finditer(r["text"].lower()))
         if len(found) != 1:

@@ -142,6 +142,87 @@ def test_doc_ids_of_seven_digits_stay_distinct(spark):
     assert duck == want
 
 
+# hostile documents: ids at the padding edges, a negative id, one above
+# 2**31; null, empty and astral-only text; phrases in upper case
+HOSTILE = pd.DataFrame({
+    "doc_id": [0, 999_999, 1_000_000, -7, -12, 2**31 + 5],
+    "text": ["abscisate ACCUMULATES IN abscission here", None, "",
+             "\U0001F600\U0001F600\U0001F600",
+             "abscisate accumulates in abscission",
+             "glucose Regulates abscission"],
+    "n_chars": [40, 0, 0, 3, 35, 28],
+})
+
+
+def test_hostile_docs_match_duckdb_and_oracle(spark):
+    """Span synthesis on hostile documents equals its DuckDB twin
+    (corpus_ctes) and the pandas oracle, and triples_from_docs equals
+    the oracle's triples: no document is dropped or renamed by one
+    engine alone."""
+    import duckdb
+
+    from cspirit_ontology_information_extraction_opus4plan_spark.corpus import (  # noqa: E501
+        corpus_ctes,
+        explode_spans,
+        interleave_docs,
+    )
+    from cspirit_ontology_information_extraction_opus4plan_spark.extraction import (  # noqa: E501
+        triples_from_docs,
+    )
+    cols = ["doc_id", "pos", "kind", "text", "media_ref", "offset"]
+    docs = spark.createDataFrame(HOSTILE)
+    got = sorted(tuple(r) for r in explode_spans(interleave_docs(docs))
+                 .select(*cols).collect())
+    want = sorted(tuple(r[c] for c in cols)
+                  for r in oracle.expected_spans(HOSTILE))
+    con = duckdb.connect()
+    con.register("documents", HOSTILE)
+    quoted = ", ".join(f'"{c}"' for c in cols)
+    duck = sorted(con.execute(
+        f"WITH {corpus_ctes()} SELECT {quoted} FROM spans").fetchall())
+    con.close()
+    assert got == duck
+    assert got == want
+    assert len({r[0] for r in got}) == len(HOSTILE)
+
+    tcols = ["doc_id", "pos", "subject", "predicate", "object",
+             "confidence", "evidence"]
+    got_t = sorted(tuple(r) for r in triples_from_docs(docs)
+                   .select(*tcols).collect())
+    want_t = sorted(tuple(r[c] for c in tcols) for r in
+                    oracle.expected_triples(oracle.expected_spans(HOSTILE)))
+    assert got_t == want_t
+    # both upper-case phrases and the negative id yield their base triple
+    assert {(d, p) for d, pos, _, p, _, _, _ in got_t if pos == 0} == {
+        ("DOC:000000", "accumulates_in"), ("DOC:-00012", "accumulates_in"),
+        (f"DOC:{2**31 + 5}", "regulates")}
+
+
+def test_spark_sql_str_round_trips(spark):
+    """spark_sql_str(s) read back by Spark SQL is s: backslashes (the
+    \\b of every word-bounded pattern), quotes and astral characters
+    survive."""
+    from cspirit_ontology_information_extraction_opus4plan_spark.corpus import (  # noqa: E501
+        spark_sql_str,
+    )
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators.ner import (  # noqa: E501
+        ner_pattern,
+    )
+    from cspirit_ontology_information_extraction_opus4plan_spark import (
+        ontology_data as OD,
+    )
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators.relations import (  # noqa: E501
+        PHRASE_PATTERN,
+    )
+    strings = ([PHRASE_PATTERN, ner_pattern(), "it's", "a\\b", "\\\\b",
+                "a\\", "\\'", "''", "\U0001F600 \U00010348 \u00e9"]
+               + [ph for ph, _ in OD.PREDICATE_PHRASES]
+               + [pred for _, pred in OD.PREDICATE_PHRASES] + OD.surfaces())
+    row = spark.sql("SELECT " + ", ".join(
+        f"{spark_sql_str(s)} AS c{i}" for i, s in enumerate(strings))).first()
+    assert list(row) == strings
+
+
 # texts for the relation-span rule: base text is span 0 of each document
 RULE_TEXTS = [
     # astral prefix: two UTF-16 units per emoji, one code point each

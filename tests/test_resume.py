@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 
 from cspirit_ontology_information_extraction_opus4plan_spark import api
@@ -22,6 +23,18 @@ def _rows(spark, path):
     return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
 
 
+def _assert_markers_exact(out, parts):
+    """Every marker of `parts` carries the row count of its part_id=
+    directory (0 where the partition wrote no file)."""
+    for k in parts:
+        with open(os.path.join(out, CK.CKPT_DIR, f"part_{k:05d}.json")) as f:
+            marker = json.load(f)
+        part_dir = os.path.join(out, f"part_id={k}")
+        n = (pq.read_table(part_dir).num_rows if os.path.isdir(part_dir)
+             else 0)
+        assert marker["metrics"]["n_rows"] == n, k
+
+
 def test_kill_and_resume_identical(spark, sf_dir, tmp_path):
     triples = api.triples_df(spark, sf_dir)
 
@@ -30,6 +43,8 @@ def test_kill_and_resume_identical(spark, sf_dir, tmp_path):
     s1 = CK.materialize_triples(spark, triples, full,
                                 sf_dir=sf_dir, n_parts=N_PARTS)
     assert sorted(s1["written"]) == list(range(N_PARTS))
+    _assert_markers_exact(full, range(N_PARTS))
+    assert s1["rows"] == len(_rows(spark, full)) > 0
 
     # interrupted run: only half the partitions complete ("kill")
     part = str(tmp_path / "part")
@@ -37,6 +52,7 @@ def test_kill_and_resume_identical(spark, sf_dir, tmp_path):
                                 n_parts=N_PARTS,
                                 only_parts=list(range(N_PARTS // 2)))
     assert sorted(s2["written"]) == list(range(N_PARTS // 2))
+    _assert_markers_exact(part, range(N_PARTS // 2))
     assert CK.pending_partitions(spark, part, N_PARTS) == \
         list(range(N_PARTS // 2, N_PARTS))
 
@@ -45,6 +61,8 @@ def test_kill_and_resume_identical(spark, sf_dir, tmp_path):
                                 sf_dir=sf_dir, n_parts=N_PARTS)
     assert sorted(s3["written"]) == list(range(N_PARTS // 2, N_PARTS))
     assert sorted(s3["skipped"]) == list(range(N_PARTS // 2))
+    _assert_markers_exact(part, range(N_PARTS))
+    assert s2["rows"] + s3["rows"] == s1["rows"]
 
     # identical final content
     assert _rows(spark, part) == _rows(spark, full)
@@ -54,12 +72,23 @@ def test_kill_and_resume_identical(spark, sf_dir, tmp_path):
         marker = json.load(f)
     assert marker["status"] == "complete"
     assert marker["lineage"]["input_sf_dir"] == sf_dir
-    assert marker["metrics"]["n_rows"] >= 0
 
     # fully-resumed table: another run is a no-op
     s4 = CK.materialize_triples(spark, triples, part,
                                 sf_dir=sf_dir, n_parts=N_PARTS)
     assert s4["written"] == []
+
+
+def test_zero_row_input_publishes_every_marker(spark, sf_dir, tmp_path):
+    """An input with no rows writes no partition files, yet the run is
+    complete: every marker is published with n_rows 0."""
+    out = str(tmp_path / "empty")
+    s = CK.materialize_triples(spark, api.triples_df(spark, sf_dir).limit(0),
+                               out, sf_dir=sf_dir, n_parts=N_PARTS)
+    assert sorted(s["written"]) == list(range(N_PARTS))
+    assert s["rows"] == 0
+    _assert_markers_exact(out, range(N_PARTS))
+    assert CK.pending_partitions(spark, out, N_PARTS) == []
 
 
 def test_marker_with_other_n_parts_refused_in_any_position(spark, sf_dir,
