@@ -202,14 +202,14 @@ def test_spark_sql_str_round_trips(spark):
     """spark_sql_str(s) read back by Spark SQL is s: backslashes (the
     \\b of every word-bounded pattern), quotes and astral characters
     survive."""
+    from cspirit_ontology_information_extraction_opus4plan_spark import (
+        ontology_data as OD,
+    )
     from cspirit_ontology_information_extraction_opus4plan_spark.corpus import (  # noqa: E501
         spark_sql_str,
     )
     from cspirit_ontology_information_extraction_opus4plan_spark.operators.ner import (  # noqa: E501
         ner_pattern,
-    )
-    from cspirit_ontology_information_extraction_opus4plan_spark import (
-        ontology_data as OD,
     )
     from cspirit_ontology_information_extraction_opus4plan_spark.operators.relations import (  # noqa: E501
         PHRASE_PATTERN,
