@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import decorations as DE
-from .corpus import spans_exploded
+from .corpus import DOCS_SCHEMA, spans_exploded
 from .extraction import triples_from_docs
 from .ontology_data import CLOSURE_SEEDS
 from .operators import content_stats as CS
@@ -32,15 +32,14 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
 def _linked_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spans = spans_exploded(spark, sf_dir)
-    return link_mentions(detect_mentions(spans), gazetteer_df(spark))
+    return link_mentions(detect_mentions(spans_exploded(spark, sf_dir)))
 
 
 def triples_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-span triples of the corpus in `sf_dir` (the flagship path;
     composed once, in extraction.triples_from_docs)."""
-    return triples_from_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return triples_from_docs(spark.read.schema(DOCS_SCHEMA).parquet(
+        f"{sf_dir}/documents.parquet"))
 
 
 # --- individual queries ----------------------------------------------------

@@ -37,6 +37,10 @@ Offsets are cumulative character positions (strictly increasing); array
 order == document order — the per-row invariant is span-sequence equality
 on (kind, text, media_ref, order) (reference preserves document order in
 text reconstruction, parsers/xml_parser.py:1263-1347).
+
+Identity is per input row: each row is one document, and nothing derived
+from it is matched with another row's, so two rows that share a doc_id
+yield the multiset union of what each yields alone (no join on doc_id).
 """
 
 from __future__ import annotations
@@ -51,6 +55,10 @@ __all__ = ["documents_interleaved", "interleave_docs", "spans_exploded",
            "explode_spans", "corpus_ctes", "spark_sql_str", "N_SURF"]
 
 N_SURF = len(surfaces())
+
+# the flat documents table; reading with it skips a schema-inference job
+DOCS_SCHEMA = ("doc_id bigint, text string, lang string, source string, "
+               "n_chars bigint")
 
 
 def spark_sql_str(s: str) -> str:
@@ -205,6 +213,9 @@ def corpus_ctes() -> str:
         [(str(i), _q(s)) for i, s in enumerate(surf)], "surf", ["idx", "s"])
     phrase_case = " ".join(
         f"WHEN {i} THEN {_q(ph)}" for i, (ph, _) in enumerate(PREDICATE_PHRASES))
+    # pos per row, in closed form: 1 per optional span before it
+    fig = f"CAST({_pmod('d', 3)} = 0 AS INT)"
+    tab = f"CAST({_pmod('d', 4)} = 0 AS INT)"
     return f"""
 {surf_values},
 d0 AS (
@@ -239,31 +250,30 @@ aug2 AS (
   FROM aug
 ),
 sp AS (
-  SELECT doc, d, 0 AS seq, 'text' AS kind, text AS stext, '' AS media_ref,
+  SELECT doc, 0 AS pos, 'text' AS kind, text AS stext, '' AS media_ref,
          0 AS off FROM aug2
   UNION ALL
-  SELECT doc, d, 1, 'text', sentence, '', nc + 1 FROM aug2
+  SELECT doc, 1, 'text', sentence, '', nc + 1 FROM aug2
   UNION ALL
-  SELECT doc, d, 2, 'figure', figcap,
+  SELECT doc, 2, 'figure', figcap,
          'media/DOC' || CAST(d AS VARCHAR) || '/fig1.png',
          nc + 1 + length(sentence) + 1
   FROM aug2 WHERE {_pmod('d', 3)} = 0
   UNION ALL
-  SELECT doc, d, 3, 'table', tabcap,
+  SELECT doc, 2 + {fig}, 'table', tabcap,
          'media/DOC' || CAST(d AS VARCHAR) || '/tab1.parquet',
          nc + 1 + length(sentence) + 1
            + CASE WHEN {_pmod('d', 3)} = 0 THEN length(figcap) + 1 ELSE 0 END
   FROM aug2 WHERE {_pmod('d', 4)} = 0
   UNION ALL
-  SELECT doc, d, 4, 'reference', refcit, '',
+  SELECT doc, 2 + {fig} + {tab}, 'reference', refcit, '',
          nc + 1 + length(sentence) + 1
            + CASE WHEN {_pmod('d', 3)} = 0 THEN length(figcap) + 1 ELSE 0 END
            + CASE WHEN {_pmod('d', 4)} = 0 THEN length(tabcap) + 1 ELSE 0 END
   FROM aug2 WHERE {_pmod('d', 5)} = 1
 ),
 spans AS (
-  SELECT doc AS doc_id,
-         CAST(row_number() OVER (PARTITION BY doc ORDER BY seq) - 1 AS INT) AS pos,
-         kind, stext AS text, media_ref, CAST(off AS INT) AS "offset"
+  SELECT doc AS doc_id, CAST(pos AS INT) AS pos, kind, stext AS text,
+         media_ref, CAST(off AS INT) AS "offset"
   FROM sp
 )""".strip()

@@ -258,6 +258,18 @@ SIM_PAIRS = [
 # ties broken by min term_id. Single place both engines encode the rule.
 MATCH_KIND_RANK = {"name": 3, "synonym": 2, "alt_id": 1}
 
+
+@lru_cache(maxsize=1)
+def gazetteer_winners() -> dict[str, tuple[str, str, int]]:
+    """surface -> (term_id, match_kind, rank) of its linking winner,
+    argmax rank, tie -> min term_id (gazetteer.winners over a frame)."""
+    best: dict[str, tuple[int, str, str]] = {}
+    for g in gazetteer():
+        cand = (-MATCH_KIND_RANK[g["match_kind"]], g["term_id"],
+                g["match_kind"])
+        best[g["surface"]] = min(best.get(g["surface"], cand), cand)
+    return {s: (tid, mk, -nr) for s, (nr, tid, mk) in best.items()}
+
 # the 7 predicate phrases the synthetic corpus embeds, phrase -> predicate.
 # Relation extraction (stage 2) detects these between two mentions.
 PREDICATE_PHRASES = [

@@ -61,6 +61,24 @@ def gazetteer_df(spark: SparkSession) -> DataFrame:
     return local_df(spark, rows, GAZ_SCHEMA)
 
 
+def winners_df(spark: SparkSession) -> DataFrame:
+    """OD.gazetteer_winners as a LocalTableScan (broadcast without a
+    job)."""
+    rows = [(s, *w) for s, w in OD.gazetteer_winners().items()]
+    return local_df(spark, rows, "surface string, term_id string, "
+                    "match_kind string, rank int")
+
+
+def winners(gaz: DataFrame) -> DataFrame:
+    """The linking rule over a gazetteer frame that is not a constant
+    (gazetteer_from_terms): per surface argmax rank, tie -> min term_id,
+    as a struct-min over dimension rows."""
+    return (gaz.groupBy("surface")
+            .agg(F.expr("min(struct(-rank AS nr, term_id, match_kind)) AS b"))
+            .selectExpr("surface", "b.term_id AS term_id",
+                        "b.match_kind AS match_kind", "-b.nr AS rank"))
+
+
 def gazetteer_from_terms(terms: DataFrame) -> DataFrame:
     """Derive the gazetteer from an arbitrary terms table (the scale path:
     ontology loaded from OBO/OWL/CSV into a table, exploded, broadcast).
@@ -98,8 +116,8 @@ def alt_id_index(terms: DataFrame) -> DataFrame:
 def gazetteer_ambiguity(gaz: DataFrame) -> DataFrame:
     """Linking-QA probe over the match-key dimension: surfaces mapped
     to more than one term, with namespace spread and whether the BEST
-    match-kind rank is tied across terms ('ambiguous' — the argmax in
-    link_mentions then breaks the tie deterministically by term_id,
+    match-kind rank is tied across terms ('ambiguous' — the linking
+    rule (winners) then breaks the tie deterministically by term_id,
     and these are exactly the surfaces where that tiebreak, not
     evidence, decides the link). Dimension-sized input -> two
     map-side-combinable aggregates + one self-join on the surface."""
@@ -160,10 +178,7 @@ def gazetteer_expansion(abbrevs: DataFrame, gaz: DataFrame) -> DataFrame:
     join, and the known-surface anti-join are all broadcast; nothing
     corpus-sized shuffles here beyond what abbreviation_pairs already
     paid."""
-    w = (gaz.groupBy("surface")
-         .agg(F.min(F.struct((-F.col("rank")).alias("nr"),
-                             F.col("term_id"))).alias("b"))
-         .select("surface", F.col("b.term_id").alias("term_id")))
+    w = winners(gaz).select("surface", "term_id")
     cand = (abbrevs
             .join(F.broadcast(w),
                   abbrevs["long_form"] == w["surface"])

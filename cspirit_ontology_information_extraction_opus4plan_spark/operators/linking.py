@@ -1,28 +1,16 @@
-"""Entity linking — broadcast candidate join + deterministic argmax.
+"""Entity linking — a lookup in the gazetteer's winner table.
 
 Reference semantics: lookup order exact-name, then synonym (models.py:
 2812-2918); candidate scoring is specified by BASELINE.json's north_star
 (broadcast-join to candidate set + similarity scoring). Disambiguation
 rule shared by the Spark plan, the pandas oracle, and the DuckDB oracle:
 
-    best candidate per mention = argmax(match_kind rank), tie -> min term_id
+    best candidate per surface = argmax(match_kind rank), tie -> min term_id
 
-realized as an argmax aggregate: min(struct(-rank, term_id, ...)) per
-mention — the reference's best-of pattern (_parse_with_all_formats
-reference_parser.py:480; figure dedup pdf_parser.py:1632) without a
-window.
-
-Scale / plan shape: gazetteer is dimension-sized (|ontology| <<
-|corpus|) -> broadcast hash join, no shuffle for the join itself. The
-mention table is hash-partitioned ONCE on (doc_id, pos) before the
-join; the argmax groupBy on (doc_id, pos, m_off) and the downstream
-relation-extraction join on (doc_id, pos) are both satisfied by that
-clustering (subset partitioning), so the whole
-NER -> link -> argmax -> relation join path runs on a single exchange
-of the mention table (verified in tests/test_plans.py). A row_number
-window here would add a second full shuffle on the near-unique
-(doc_id, pos, m_off) key. Hub skew bites in connected components
-(canonicalize.py), not here — doc_id dominates the partition key.
+The winner depends on the surface alone, so it is decided once per
+gazetteer (gazetteer.winners_df for the constant one, gazetteer.winners
+for any other) and a mention links by one broadcast hash join on its
+surface: no corpus-side shuffle, aggregate or window.
 """
 
 from __future__ import annotations
@@ -30,22 +18,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .gazetteer import winners, winners_df
 
-def link_mentions(mentions: DataFrame, gaz: DataFrame) -> DataFrame:
-    """mentions(doc_id,pos,kind,m_off,surface) x gaz(surface,term_id,
-    match_kind,rank,...) -> winning candidate per mention:
-    argmax(rank), tie -> min term_id (encoded as struct-min over
-    (-rank, term_id, match_kind) — total order, deterministic). Written
-    as SQL text: the triples path rebuilds this plan on every call."""
-    cand = (mentions.repartition("doc_id", "pos")
-            .join(F.broadcast(gaz), "surface", "inner"))
-    return (cand
-            .groupBy("doc_id", "pos", "m_off", "kind", "surface")
-            .agg(F.expr("min(struct(-rank AS neg_rank, term_id, match_kind)) "
-                        "AS b"))
-            .selectExpr("doc_id", "pos", "m_off", "kind", "surface",
-                        "b.term_id AS term_id", "b.match_kind AS match_kind",
-                        "-b.neg_rank AS rank"))
+
+def link_mentions(mentions: DataFrame, gaz: DataFrame | None = None
+                  ) -> DataFrame:
+    """mentions(doc_id, pos, kind, m_off, surface) + each one's winning
+    candidate (term_id, match_kind, rank) in `gaz` (surface, term_id,
+    match_kind, rank, ...), by default the constant gazetteer."""
+    win = winners_df(mentions.sparkSession) if gaz is None else winners(gaz)
+    return mentions.join(F.broadcast(win), "surface")
+
+
+def link_endpoints(picked: DataFrame, win: DataFrame) -> DataFrame:
+    """Rows with picked endpoints s, o (struct<m_off, surface>) + their
+    winners from `win` as s_term, s_kind, o_term, o_kind: one broadcast
+    join per endpoint, which also drops a NULL endpoint."""
+    for e in ("s", "o"):
+        w = win.toDF(f"{e}_surface", f"{e}_term", f"{e}_kind", f"{e}_rank")
+        picked = picked.join(F.broadcast(w),
+                             F.expr(f"{e}.surface = {e}_surface"))
+    return picked
 
 
 def _coherence_scored(mentions: DataFrame, gaz: DataFrame,
@@ -157,21 +150,15 @@ def relink_delta(mentions: DataFrame, terms_v1: DataFrame,
 
     Scale shape: winning candidates are per-SURFACE properties, so
     both winner tables are computed on the gazetteer DIMENSION
-    (groupBy + struct-min over dimension rows) and broadcast back;
-    corpus cost is one distinct on (doc_id, surface) plus two
-    broadcast joins — no corpus shuffle beyond the distinct, no
-    windows."""
+    (gazetteer.winners) and broadcast back; corpus cost is one
+    distinct on (doc_id, surface) plus two broadcast joins — no corpus
+    shuffle beyond the distinct, no windows."""
     from .gazetteer import gazetteer_from_terms
 
-    def winners(terms: DataFrame, out: str) -> DataFrame:
-        g = gazetteer_from_terms(terms)
-        return (g.groupBy("surface")
-                .agg(F.min(F.struct((-F.col("rank")).alias("nr"),
-                                    F.col("term_id"))).alias("b"))
-                .select("surface", F.col("b.term_id").alias(out)))
-
-    w1 = winners(terms_v1, "term_v1")
-    w2 = winners(terms_v2, "term_v2")
+    w1 = winners(gazetteer_from_terms(terms_v1)).selectExpr(
+        "surface", "term_id AS term_v1")
+    w2 = winners(gazetteer_from_terms(terms_v2)).selectExpr(
+        "surface", "term_id AS term_v2")
     ds = mentions.select("doc_id", "surface").distinct()
     status = (F.when(F.col("term_v2").isNull(), F.lit("dropped"))
               .when(F.col("term_v2") != F.col("term_v1"),

@@ -24,13 +24,12 @@ Scale notes:
   * NER applies to kind in ('text','figure','table') — captions contribute
     mentions (figure/table caption extraction, pdf_parser.py:1356,
     xml_parser.py:2302/2372); references do not.
-  * the triples path (extraction.triples_from_docs) hands detect_mentions
-    only relation spans (relations.relation_spans), because no other
-    span can hold a triple endpoint. Mention queries (ner_mentions,
-    entity_linking, kwic, relink, ...) report every mention, so they
-    call detect_mentions on the full span table.
+  * detect_mentions emits a row per mention of every span, for the
+    mention queries; span_mentions, for the triples path, takes only
+    relation spans and emits each with its mentions as an array, its
+    other columns passed through, so nothing is joined back after NER.
   * m_off counts code points of the lower-cased text (Python str), the
-    unit extract_triples measures the phrase offset in.
+    unit relations measures the phrase offset p0 in.
 """
 
 from __future__ import annotations
@@ -105,6 +104,29 @@ def _ner_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame({
             "doc_id": doc_ids, "pos": poss, "kind": kinds,
             "m_off": offs, "surface": surfs})
+
+
+# pos stays NOT NULL, as a posexplode position is
+SPAN_MENTIONS_SCHEMA = (
+    "doc_id string, pos int NOT NULL, text string, phrase string, p0 int, "
+    "plen int, ms array<struct<m_off:int, surface:string>>")
+
+
+def _span_mention_batches(batches: Iterator[pd.DataFrame]
+                          ) -> Iterator[pd.DataFrame]:
+    find = _matcher(tuple(surfaces()))
+    for pdf in batches:
+        pdf["ms"] = [
+            [{"m_off": off, "surface": surf} for off, surf in find(t.lower())]
+            if t else [] for t in pdf["text"]]
+        yield pdf
+
+
+def span_mentions(phrases: DataFrame) -> DataFrame:
+    """relations.relation_phrases rows -> the same rows plus ms, the
+    span's mentions (m_off, surface) in text order."""
+    return phrases.mapInPandas(_span_mention_batches,
+                               schema=SPAN_MENTIONS_SCHEMA)
 
 
 def detect_mentions(spans: DataFrame) -> DataFrame:

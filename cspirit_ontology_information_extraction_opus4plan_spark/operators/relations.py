@@ -7,8 +7,8 @@ self-loops are rejected (validate_circular_relationship models.py:1083);
 triple node types default to uri/uri for term-term edges (RDFTriple
 __post_init__ models.py:3840-3880).
 
-Extraction rule (pure JVM — regexp + conditional min/max aggregate; no
-Python despite being "stage 2", because the phrase grammar is regular):
+Extraction rule (JVM-side — regexp and higher-order array functions; the
+phrase grammar is regular, so no Python of its own):
 
   for each text span containing exactly one predicate phrase:
     subject = the linked mention ending closest before the phrase
@@ -16,10 +16,9 @@ Python despite being "stage 2", because the phrase grammar is regular):
     confidence = 1.0 if both matched by canonical name else 0.9
   drop subject.term_id == object.term_id (models.py:1083)
 
-The span rule is relation_spans. The triples composition
-(extraction.triples_from_docs) applies it to the NER input too, so only
-these spans cross into Python: the (doc_id, pos) inner join below would
-drop the mentions of any other span anyway.
+The pick (PICK) reads a span's mentions as an array column in the span's
+row, which NER fills directly on the triples path: no join on (doc_id,
+pos), so no shuffle, and documents that share a doc_id never mix.
 
 Deterministic ids: content-addressed `TRP:<md5>` over the semantic key —
 never monotonically_increasing_id (nondeterministic across retries; breaks
@@ -55,25 +54,26 @@ RELATION_SPAN = f"kind = 'text' AND regexp_count(lower(text), {_P}) = 1"
 # text) would anchor to an earlier in-word occurrence: 'is a' inside
 # 'axis aligns'). Later aliases use earlier ones (lateral aliases).
 _PHRASE_EXPRS = (
-    "doc_id", "pos", "text", "lower(text) AS lc",
-    f"regexp_extract(lc, {_P}, 1) AS phrase",
-    f"length(split(lc, {_P}, 2)[0]) AS p0",
+    "doc_id", "pos", "text",
+    f"regexp_extract(lower(text), {_P}, 1) AS phrase",
+    f"length(split(lower(text), {_P}, 2)[0]) AS p0",
     "length(phrase) AS plen",
 )
-_MENTION = "struct(m_off, term_id, match_kind)"
-_PICK = (
-    f"max(CASE WHEN m_off + length(surface) <= p0 THEN {_MENTION} END) AS s",
-    f"min(CASE WHEN m_off >= p0 + plen + 1 THEN {_MENTION} END) AS o",
+# structs order by their first field, m_off (distinct within a span);
+# no candidate gives NULL
+PICK = (
+    "array_max(filter(ms, x -> x.m_off + length(x.surface) <= p0)) AS s",
+    "array_min(filter(ms, x -> x.m_off >= p0 + plen + 1)) AS o",
 )
 _PREDICATE = "map(" + ", ".join(
     f"{spark_sql_str(ph)}, {spark_sql_str(pred)}"
     for ph, pred in PREDICATE_PHRASES) + ")[phrase]"
 _TRIPLE_EXPRS = (
-    "doc_id", "pos", "s.term_id AS subject", f"{_PREDICATE} AS predicate",
-    "o.term_id AS object", "'uri' AS subject_type", "'uri' AS object_type",
+    "doc_id", "pos", "s_term AS subject", f"{_PREDICATE} AS predicate",
+    "o_term AS object", "'uri' AS subject_type", "'uri' AS object_type",
     "CAST(NULL AS STRING) AS object_datatype",
     "CAST(NULL AS STRING) AS object_language",
-    "CASE WHEN s.match_kind = 'name' AND o.match_kind = 'name' THEN 1.0D "
+    "CASE WHEN s_kind = 'name' AND o_kind = 'name' THEN 1.0D "
     "ELSE 0.9D END AS confidence",
     "text AS evidence",
     "concat('TRP:', md5(concat_ws('|', doc_id, pos, subject, predicate, "
@@ -81,30 +81,30 @@ _TRIPLE_EXPRS = (
 )
 
 
-def relation_spans(spans: DataFrame) -> DataFrame:
-    """The spans a triple can come from: kind 'text' with exactly one
-    predicate phrase in the lower-cased text. extract_triples' span side
-    and the NER input of extraction.triples_from_docs both go through
-    this one filter, so the two sides of the (doc_id, pos) join cannot
-    drift apart. A map-side JVM filter: no shuffle, no Python."""
-    return spans.filter(RELATION_SPAN)
+def relation_phrases(spans: DataFrame) -> DataFrame:
+    """The spans a triple can come from (kind 'text', exactly one
+    predicate phrase in the lower-cased text) as (doc_id, pos, text,
+    phrase, p0, plen). A map-side JVM filter and projection."""
+    return spans.filter(RELATION_SPAN).selectExpr(*_PHRASE_EXPRS)
+
+
+def triple_rows(linked: DataFrame) -> DataFrame:
+    """(doc_id, pos, text, phrase, s_term, s_kind, o_term, o_kind) ->
+    triple rows; the filter also drops NULL endpoints."""
+    return linked.selectExpr(*_TRIPLE_EXPRS).filter("subject != object")
 
 
 def extract_triples(spans: DataFrame, linked_mentions: DataFrame) -> DataFrame:
-    """spans (exploded) + linked mentions -> one triple row per
-    (text span, phrase) with resolved subject/object.
-
-    Plan shape: filter+regexp on the span side (pushed ahead of the join),
-    an equi-join on (doc_id, pos) with the mention table, then a single
-    hash aggregate using conditional struct-min/max (max_by/min_by on
-    m_off) — one shuffle on (doc_id, pos), no window, no Python."""
-    ts = relation_spans(spans).selectExpr(*_PHRASE_EXPRS)
-    return (ts.join(linked_mentions, ["doc_id", "pos"])
-            .groupBy("doc_id", "pos", "text", "phrase")
-            .agg(*map(F.expr, _PICK))
-            .filter("s IS NOT NULL AND o IS NOT NULL")
-            .selectExpr(*_TRIPLE_EXPRS)
-            .filter("subject != object"))
+    """spans (exploded) + mentions linked apart from them -> triple
+    rows: the mentions are grouped into one array per (doc_id, pos) and
+    joined back, then PICK applies. The join assumes unique doc ids."""
+    ms = linked_mentions.groupBy("doc_id", "pos").agg(F.expr(
+        "collect_list(struct(m_off, surface, term_id, match_kind)) AS ms"))
+    return triple_rows(
+        relation_phrases(spans).join(ms, ["doc_id", "pos"])
+        .selectExpr("doc_id", "pos", "text", "phrase", *PICK)
+        .selectExpr("*", "s.term_id AS s_term", "s.match_kind AS s_kind",
+                    "o.term_id AS o_term", "o.match_kind AS o_kind"))
 
 
 def dedup_triples(triples: DataFrame) -> DataFrame:

@@ -33,11 +33,9 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..corpus import DOCS_SCHEMA
 from ..extraction import triples_from_docs
 from ..plans.checkpointing import fs_list_names
-
-DOCS_SCHEMA = ("doc_id bigint, text string, lang string, source string, "
-               "n_chars bigint")
 
 
 def stream_triples(spark: SparkSession, input_dir: str, out_dir: str,

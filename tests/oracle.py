@@ -72,17 +72,17 @@ def _best_candidate() -> dict[str, tuple[str, str]]:
     return {s: (tid, mk) for s, (_, tid, mk) in best.items()}
 
 
+def _span_mentions(r: dict) -> list[dict]:
+    """The mentions of one span row (no other row's)."""
+    if r["kind"] not in ("text", "figure", "table") or not r["text"]:
+        return []
+    return [{"doc_id": r["doc_id"], "pos": r["pos"], "kind": r["kind"],
+             "m_off": m.start(), "surface": m.group(1)}
+            for m in _pat().finditer(r["text"].lower())]
+
+
 def expected_mentions(span_rows: list[dict]) -> list[dict]:
-    pat = _pat()
-    out = []
-    for r in span_rows:
-        if r["kind"] not in ("text", "figure", "table") or not r["text"]:
-            continue
-        for m in pat.finditer(r["text"].lower()):
-            out.append({"doc_id": r["doc_id"], "pos": r["pos"],
-                        "kind": r["kind"], "m_off": m.start(),
-                        "surface": m.group(1)})
-    return out
+    return [m for r in span_rows for m in _span_mentions(r)]
 
 
 _PHRASE_PAT = re.compile(
@@ -96,11 +96,9 @@ def expected_triples(span_rows: list[dict]) -> list[dict]:
     operators/relations.py): subject = mention ending closest before the
     phrase, object = mention starting closest after, no self-loops,
     confidence 1.0 iff both name-matches. Offsets are Python string
-    indices (code points), as for the mentions."""
+    indices (code points), as for the mentions. Mentions are found per
+    span row, so two documents that share a doc_id never mix."""
     link = _best_candidate()
-    mentions_by_span: dict[tuple, list] = {}
-    for m in expected_mentions(span_rows):
-        mentions_by_span.setdefault((m["doc_id"], m["pos"]), []).append(m)
     out = []
     for r in span_rows:
         if r["kind"] != "text" or not r["text"]:
@@ -110,7 +108,7 @@ def expected_triples(span_rows: list[dict]) -> list[dict]:
             continue
         pm = found[0]
         p0, plen = pm.start(1), len(pm.group(1))
-        ms = mentions_by_span.get((r["doc_id"], r["pos"]), [])
+        ms = _span_mentions(r)
         subj_c = [m for m in ms if m["m_off"] + len(m["surface"]) <= p0]
         obj_c = [m for m in ms if m["m_off"] >= p0 + plen + 1]
         if not subj_c or not obj_c:

@@ -87,6 +87,39 @@ def test_linking_deterministic_argmax(spark, sf_dir):
         assert best[r.surface] == (r.term_id, r.match_kind)
 
 
+def test_winner_table_keys_are_the_ner_alphabet(spark):
+    """Picking the subject and object before linking them is exact only
+    if every mention links: the NER alphabet is the winner table's key
+    set, one row per surface."""
+    from cspirit_ontology_information_extraction_opus4plan_spark import (
+        ontology_data as OD,
+    )
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators.gazetteer import (  # noqa: E501
+        winners_df,
+    )
+    keys = [r.surface for r in winners_df(spark).collect()]
+    assert len(keys) == len(set(keys))
+    assert set(keys) == set(OD.surfaces())
+
+
+def test_winner_table_equals_dataframe_rule_and_oracle(spark):
+    """The constant winner table (decided in the driver) equals the
+    DataFrame form of the rule over the gazetteer and the oracle's
+    best candidate per surface."""
+    from cspirit_ontology_information_extraction_opus4plan_spark import (
+        ontology_data as OD,
+    )
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators.gazetteer import (  # noqa: E501
+        winners,
+        winners_df,
+    )
+    arrow = sorted(tuple(r) for r in winners_df(spark).collect())
+    frame = sorted(tuple(r) for r in winners(gazetteer_df(spark)).collect())
+    assert arrow == frame
+    assert {s: (t, k) for s, t, k, _ in arrow} == oracle._best_candidate()
+    assert all(rank == OD.MATCH_KIND_RANK[k] for _, _, k, rank in arrow)
+
+
 def test_triple_precision_recall(spark, sf_dir, expected_span_rows):
     got_rows = [r.asDict() for r in api.triples_df(spark, sf_dir).collect()]
     want_rows = oracle.expected_triples(expected_span_rows)
@@ -143,14 +176,17 @@ def test_doc_ids_of_seven_digits_stay_distinct(spark):
 
 
 # hostile documents: ids at the padding edges, a negative id, one above
-# 2**31; null, empty and astral-only text; phrases in upper case
+# 2**31; null, empty and astral-only text; phrases in upper case; two
+# documents that share the id 5
 HOSTILE = pd.DataFrame({
-    "doc_id": [0, 999_999, 1_000_000, -7, -12, 2**31 + 5],
+    "doc_id": [0, 999_999, 1_000_000, -7, -12, 2**31 + 5, 5, 5],
     "text": ["abscisate ACCUMULATES IN abscission here", None, "",
              "\U0001F600\U0001F600\U0001F600",
              "abscisate accumulates in abscission",
-             "glucose Regulates abscission"],
-    "n_chars": [40, 0, 0, 3, 35, 28],
+             "glucose Regulates abscission",
+             "abscisate accumulates in abscission",
+             "xx glucose regulates abscisate"],
+    "n_chars": [40, 0, 0, 3, 35, 28, 35, 30],
 })
 
 
@@ -183,19 +219,30 @@ def test_hostile_docs_match_duckdb_and_oracle(spark):
     con.close()
     assert got == duck
     assert got == want
-    assert len({r[0] for r in got}) == len(HOSTILE)
+    assert {r[0] for r in got} == {f"DOC:{d:06d}" for d in HOSTILE.doc_id}
 
     tcols = ["doc_id", "pos", "subject", "predicate", "object",
              "confidence", "evidence"]
-    got_t = sorted(tuple(r) for r in triples_from_docs(docs)
-                   .select(*tcols).collect())
+
+    def triples(flat):
+        return sorted(tuple(r) for r in triples_from_docs(
+            spark.createDataFrame(flat)).select(*tcols).collect())
+
+    got_t = triples(HOSTILE)
     want_t = sorted(tuple(r[c] for c in tcols) for r in
                     oracle.expected_triples(oracle.expected_spans(HOSTILE)))
     assert got_t == want_t
-    # both upper-case phrases and the negative id yield their base triple
+    # both upper-case phrases, the negative id and each document with id
+    # 5 yield their base triple
     assert {(d, p) for d, pos, _, p, _, _, _ in got_t if pos == 0} == {
         ("DOC:000000", "accumulates_in"), ("DOC:-00012", "accumulates_in"),
-        (f"DOC:{2**31 + 5}", "regulates")}
+        (f"DOC:{2**31 + 5}", "regulates"), ("DOC:000005", "accumulates_in"),
+        ("DOC:000005", "regulates")}
+    # two rows that share an id yield the multiset union of each alone:
+    # no mention of one document reaches the other's relation span
+    dup = HOSTILE[HOSTILE.doc_id == 5]
+    assert [t for t in got_t if t[0] == "DOC:000005"] == sorted(
+        t for i in range(len(dup)) for t in triples(dup.iloc[[i]]))
 
 
 def test_spark_sql_str_round_trips(spark):
@@ -252,11 +299,13 @@ def test_relation_span_rule_matches_oracle(spark):
                          "n_chars": [len(t) for t in RULE_TEXTS]})
     cols = ["doc_id", "pos", "subject", "predicate", "object",
             "confidence", "evidence"]
-    got = sorted(tuple(r) for r in triples_from_docs(
-        spark.createDataFrame(flat)).select(*cols).collect())
+    triples = triples_from_docs(spark.createDataFrame(flat))
+    got = sorted(tuple(r) for r in triples.select(*cols).collect())
     want = sorted(tuple(r[c] for c in cols) for r in
                   oracle.expected_triples(oracle.expected_spans(flat)))
     assert got == want
+    # pos is a span position, never NULL, also after the Python stage
+    assert not triples.schema["pos"].nullable
     base = {(d, s, p, o) for d, pos, s, p, o, _, _ in got if pos == 0}
     edge = ("CHEBI:10039", "accumulates_in", "GO:20011")
     assert base == {(f"DOC:{d:06d}",) + edge for d in (1, 2, 3, 4)}

@@ -1,10 +1,12 @@
 """Physical-plan shape gates — the scale guarantees the judge cares
 about, pinned as tests so regressions fail loudly:
 
-  * column pruning reaches the parquet scan,
-  * dimension joins broadcast (no sort-merge against the gazetteer),
-  * the whole NER->link->relate path costs exactly two shuffles
-    (one per side of the span/mention join),
+  * column pruning reaches the parquet scan, and the triples plan
+    scans the documents once,
+  * dimension joins broadcast (no sort-merge join at all),
+  * the whole NER->link->relate path costs no shuffle: NER returns one
+    row per relation span with its mentions, so nothing is joined or
+    grouped on (doc_id, pos),
   * Python appears only as the sanctioned vectorized stages
     (MapInPandas / ArrowEval), never row-at-a-time BatchEvalPython.
 """
@@ -33,17 +35,19 @@ def test_scan_is_column_pruned(triples_plan):
 
 
 def test_exactly_two_shuffles(triples_plan):
-    exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)",
-                           triples_plan)
-    assert len(exchanges) == 2, exchanges
-    for e in exchanges:
-        assert "doc_id" in e and "pos" in e
+    """The name predates the one-scan plan, which has no shuffle at all:
+    a span's mentions stay in its row, and linking is a broadcast
+    lookup."""
+    assert re.findall(r"(?<!Broadcast)Exchange \S+", triples_plan) == []
+
+
+def test_triples_scan_documents_once(triples_plan):
+    assert len(re.findall(r"FileScan parquet", triples_plan)) == 1
 
 
 def test_gazetteer_joins_broadcast(triples_plan):
     assert "BroadcastHashJoin" in triples_plan
-    # the only sort-merge join allowed is the corpus-sized span/mention one
-    assert triples_plan.count("SortMergeJoin") <= 1
+    assert "SortMergeJoin" not in triples_plan
 
 
 def test_python_only_vectorized(triples_plan):
@@ -500,11 +504,11 @@ def test_kmeans_maponly_assign_k_row_exchange(spark, sf_dir):
 
 def test_triple_semantics_adds_no_shuffle(spark, sf_dir):
     """Rule validation is pure row expressions (IN lists over the closed
-    tables): the plan keeps exactly the triples pipeline's two
-    exchanges — no joins, no Python stages added."""
+    tables): the plan keeps the triples pipeline's zero exchanges — no
+    joins, no Python stages added."""
     plan = _plan(api.q_triple_semantics(spark, sf_dir))
     exchanges = re.findall(r"Exchange hashpartitioning", plan)
-    assert len(exchanges) == 2, exchanges
+    assert exchanges == []
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
 
@@ -967,8 +971,10 @@ def test_constant_tables_are_local_relations(spark):
         gazetteer_df,
         relationships_df,
         terms_df,
+        winners_df,
     )
-    for build in (terms_df, relationships_df, gazetteer_df, _surf_df):
+    for build in (terms_df, relationships_df, gazetteer_df, winners_df,
+                  _surf_df):
         plan = _plan(build(spark))
         assert "LocalTableScan" in plan, build.__name__
         assert "ExistingRDD" not in plan, build.__name__
