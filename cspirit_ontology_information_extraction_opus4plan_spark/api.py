@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import decorations as DE
-from .corpus import DOCS_SCHEMA, spans_exploded
+from .corpus import read_documents, spans_exploded
 from .extraction import triples_from_docs
 from .ontology_data import CLOSURE_SEEDS
 from .operators import content_stats as CS
@@ -38,8 +38,7 @@ def _linked_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def triples_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-span triples of the corpus in `sf_dir` (the flagship path;
     composed once, in extraction.triples_from_docs)."""
-    return triples_from_docs(spark.read.schema(DOCS_SCHEMA).parquet(
-        f"{sf_dir}/documents.parquet"))
+    return triples_from_docs(read_documents(spark, sf_dir))
 
 
 # --- individual queries ----------------------------------------------------
@@ -168,7 +167,7 @@ def q_tfidf_linking(spark, sf_dir):
 # --- training-data text ops (documents corpus) -----------------------------
 
 def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet") \
+    return read_documents(spark, sf_dir) \
         .select("doc_id", "text")
 
 
@@ -333,7 +332,7 @@ def q_doc_mixture_reweight(spark, sf_dir):
     cross-entropy excess -> exponential weights -> doc allocation."""
     from .operators.textops import mixture_loss_reweight
     return mixture_loss_reweight(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("source", "text"))
 
 
@@ -371,7 +370,7 @@ def q_doc_ctfidf_topics(spark, sf_dir):
     domain — the topic-labeling step after document clustering."""
     from .operators.textops import ctfidf_topics
     return ctfidf_topics(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("source", "text"))
 
 
@@ -412,7 +411,7 @@ def q_gazetteer_expansion(spark, sf_dir):
     from .operators.textmeta import abbreviation_pairs
     return gazetteer_expansion(
         abbreviation_pairs(DE.abbrev_docs(
-            spark.read.parquet(f"{sf_dir}/documents.parquet"))),
+            read_documents(spark, sf_dir))),
         gazetteer_df(spark))
 
 
@@ -421,7 +420,7 @@ def q_doc_safety_filter(spark, sf_dir):
     token filter, per-doc counts + keep verdict, pure codegen."""
     from .operators.textops import safety_filter
     return safety_filter(DE.safety_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")))
+        read_documents(spark, sf_dir)))
 
 
 def q_doc_abbreviations(spark, sf_dir):
@@ -430,7 +429,7 @@ def q_doc_abbreviations(spark, sf_dir):
     gazetteer expansion with new synonym surfaces."""
     from .operators.textmeta import abbreviation_pairs
     return abbreviation_pairs(DE.abbrev_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")))
+        read_documents(spark, sf_dir)))
 
 
 def q_doc_mojibake(spark, sf_dir):
@@ -439,7 +438,7 @@ def q_doc_mojibake(spark, sf_dir):
     byte-level guard ships to training."""
     from .operators.textops import mojibake_stats
     return mojibake_stats(DE.mojibake_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")))
+        read_documents(spark, sf_dir)))
 
 
 def q_doc_cms_probe(spark, sf_dir):
@@ -447,7 +446,7 @@ def q_doc_cms_probe(spark, sf_dir):
     sketch family's point-frequency member; md5-nibble buckets make the
     estimates themselves oracle-replayable."""
     from .operators.textops import cms_probe
-    return cms_probe(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return cms_probe(read_documents(spark, sf_dir))
 
 
 def q_doc_dup_spans(spark, sf_dir):
@@ -496,7 +495,7 @@ def q_doc_text_complexity(spark, sf_dir):
     scientific tail so every pattern family fires."""
     from pyspark.sql import functions as F
     from .operators import textmeta as TMX
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = (read_documents(spark, sf_dir)
             .select("doc_id",
                     F.concat("text", F.lit(TMX.SCI_DECORATION))
                     .alias("text")))
@@ -587,7 +586,7 @@ def q_media_frame_sample(spark, sf_dir):
 def q_doc_bpe_tokens(spark, sf_dir):
     from .operators.textops import bpe_token_counts
     return bpe_token_counts(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"))
+        read_documents(spark, sf_dir))
 
 
 def q_doc_bpe_merge_pairs(spark, sf_dir):
@@ -596,7 +595,7 @@ def q_doc_bpe_merge_pairs(spark, sf_dir):
     merge); vocabulary-sized after the first aggregate."""
     from .operators.textops import bpe_merge_pair_counts
     return bpe_merge_pair_counts(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"))
+        read_documents(spark, sf_dir))
 
 
 def q_doc_embedding_neardup(spark, sf_dir):
@@ -623,7 +622,7 @@ def q_bitext_margin_mine(spark, sf_dir):
     cross-lingual candidates, k-NN-normalized margin, best target
     per English source above threshold."""
     from .operators.similarity import bitext_margin_mine, load_embeddings
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     return bitext_margin_mine(load_embeddings(spark, sf_dir), docs)
 
 
@@ -658,7 +657,7 @@ def q_doc_hash_sample(spark, sf_dir):
     (reproducible corpus rebalancing, broadcast rates dimension)."""
     from .operators.textops import hash_stratified_sample
     return hash_stratified_sample(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "lang"))
 
 
@@ -667,7 +666,7 @@ def q_doc_boilerplate_strip(spark, sf_dir):
     occurring in more than BOILER_DF_CAP docs, rebuild text in order."""
     from .operators.textops import strip_boilerplate
     return strip_boilerplate(DE.boilerplate_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text")))
 
 
@@ -933,7 +932,7 @@ def q_jats_parse(spark, sf_dir):
     documents quarantine as parse_error rows (XMLParser.parse)."""
     from .operators.xmlsource import parse_jats
     return parse_jats(DE.jats_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text")))
 
 
@@ -967,7 +966,7 @@ def q_content_guards(spark, sf_dir):
     from .operators.guards import content_guards
     return content_guards(
         DE.encoded_payloads(
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
+            read_documents(spark, sf_dir)
             .select("doc_id", "text")),
         max_bytes=DE.GUARD_MAX_BYTES)
 
@@ -1057,7 +1056,7 @@ def q_jsonld_flatten(spark, sf_dir):
 
 def q_text_normalize(spark, sf_dir):
     return TM.normalize_texts(DE.norm_decorated_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")))
+        read_documents(spark, sf_dir)))
 
 
 def q_alt_id_lookup(spark, sf_dir):
@@ -1216,7 +1215,7 @@ def q_jsonl_parse(spark, sf_dir):
     PERMISSIVE from_json -> parse_ok flags)."""
     from .operators.serde import jsonl_docs, parse_jsonl
     return parse_jsonl(jsonl_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "lang", "n_chars")))
 
 
@@ -1413,7 +1412,7 @@ def q_doc_sections(spark, sf_dir):
     per-section confidence (pdf_parser.identify_sections)."""
     from .operators import sections as SE
     return SE.identify_sections(DE.sectioned_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text")))
 
 
@@ -1422,7 +1421,7 @@ def q_citation_format_detect(spark, sf_dir):
     (reference_parser._parse_with_all_formats)."""
     from .operators import sections as SE
     return SE.detect_citation_format(DE.citation_samples(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text")))
 
 
@@ -1476,7 +1475,7 @@ def q_scientific_notation(spark, sf_dir):
 
 def q_format_detect(spark, sf_dir):
     return TM.detect_formats(DE.format_samples(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")))
+        read_documents(spark, sf_dir)))
 
 
 def q_table_quality(spark, sf_dir):
@@ -1682,7 +1681,7 @@ def q_html_table_extract(spark, sf_dir):
     header detection; ragged rows preserved as-is."""
     from .operators.webingest import extract_html_tables
     return extract_html_tables(DE.html_table_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id")))
 
 
@@ -1721,7 +1720,7 @@ def q_chat_template_lint(spark, sf_dir):
     grammar ^s?(ua)+$, empty-content, malformed-JSON quarantine."""
     from .operators.textops import chat_template_lint
     return chat_template_lint(DE.chat_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id")))
 
 
@@ -1810,7 +1809,7 @@ def q_doc_zipf_slope(spark, sf_dir):
     frequencies (corpus-health monitor; natural text ~ slope -1)."""
     from .operators.textops import zipf_slope
     return zipf_slope(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text"))
 
 
@@ -1847,7 +1846,7 @@ def q_citation_fields_by_format(spark, sf_dir):
     citation_formats handlers)."""
     from .operators import sections as SE
     return SE.parse_citation_fields(DE.citation_samples(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text")))
 
 
@@ -1979,7 +1978,7 @@ def q_doc_source_ks(spark, sf_dir):
     (planted 1.5x shift on src0 fires the alert)."""
     from .operators.content_stats import source_length_ks
     return source_length_ks(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("source", "n_chars"))
 
 
@@ -2060,7 +2059,7 @@ def q_doc_mixture_sample(spark, sf_dir):
     per-domain rates from the corpus counts, deterministic md5 keep."""
     from .operators.textops import mixture_temperature_sample
     return mixture_temperature_sample(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "lang"))
 
 
@@ -2104,7 +2103,7 @@ def q_lang_confusion(spark, sf_dir):
     (shared _lang_pred rule; off-diagonal cells = mislabeled shards)."""
     from .operators.textops import lang_confusion
     return lang_confusion(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text", "lang"))
 
 
@@ -2164,7 +2163,7 @@ def q_url_frontier_plan(spark, sf_dir):
     """Crawl-frontier politeness planner: host-hash crawler routing,
     deterministic within-host sequencing, host_rate fetch slots."""
     from .operators.urlops import frontier_plan
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+    docs = read_documents(spark, sf_dir) \
         .select("doc_id")
     return frontier_plan(DE.url_decorated_docs(docs))
 
@@ -2174,7 +2173,7 @@ def q_web_anchor_profile(spark, sf_dir):
     target in-degree + top anchor phrases (alt-label mining)."""
     from .operators.urlops import anchor_text_profile
     return anchor_text_profile(DE.link_edges(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text")))
 
 
@@ -2182,7 +2181,7 @@ def q_url_robots(spark, sf_dir):
     """robots.txt longest-prefix rule matching (RFC 9309 precedence)
     over the decorated crawl URLs; broadcast rule dimension."""
     from .operators.urlops import robots_match
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+    docs = read_documents(spark, sf_dir) \
         .select("doc_id")
     return robots_match(DE.url_decorated_docs(docs),
                         DE.robots_rules_df(spark))
@@ -2194,7 +2193,7 @@ def q_html_extract(spark, sf_dir):
     truncated-<title> fetches."""
     from .operators.webingest import extract_html
     return extract_html(DE.html_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text")))
 
 
@@ -2204,7 +2203,7 @@ def q_sitemap_parse(spark, sf_dir):
     cross-host submission check."""
     from .operators.webingest import parse_sitemaps
     return parse_sitemaps(DE.sitemap_entry_and_files(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id")))
 
 
@@ -2214,7 +2213,7 @@ def q_warc_parse(spark, sf_dir):
     (planted off-by-one records flag as length_mismatch)."""
     from .operators.webingest import parse_warc
     return parse_warc(DE.warc_files(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text")))
 
 
@@ -2223,7 +2222,7 @@ def q_crawl_admission(spark, sf_dir):
     robots longest-prefix reject, known-canonical-URL skip, admit."""
     from .operators.urlops import canonicalize_urls
     from .operators.webingest import crawl_admission, parse_sitemaps
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     entries = parse_sitemaps(
         DE.sitemap_entry_and_files(docs.select("doc_id")))
     crawled = canonicalize_urls(
@@ -2236,7 +2235,7 @@ def q_gazetteer_anchor_mining(spark, sf_dir):
     donate surface forms to its dominant linked entity; known surfaces
     anti-joined away."""
     from .operators.gazetteer import gazetteer_df, mine_anchor_candidates
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+    docs = read_documents(spark, sf_dir) \
         .select("doc_id", "text")
     return mine_anchor_candidates(
         DE.link_edges(docs), _linked_mentions(spark, sf_dir),
@@ -2248,7 +2247,7 @@ def q_recrawl_schedule(spark, sf_dir):
     inverse-change-rate days in pure integer arithmetic."""
     from .decorations import WEB_HOSTS
     from .operators.webingest import recrawl_diff, recrawl_schedule
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+    docs = read_documents(spark, sf_dir) \
         .select("doc_id", "text")
     diff = recrawl_diff(docs, DE.recrawl_round2(docs))
     host = F.concat(F.lit("www.site"),
@@ -2271,7 +2270,7 @@ def q_file_compaction_plan(spark, sf_dir):
     window; at/over-target files pass through as keep."""
     from .operators.maintenance import file_compaction_plan
     return file_compaction_plan(DE.file_manifest(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")))
+        read_documents(spark, sf_dir)))
 
 
 def q_snapshot_expiry_orphans(spark, sf_dir):
@@ -2280,14 +2279,14 @@ def q_snapshot_expiry_orphans(spark, sf_dir):
     with their last referencing snapshot."""
     from .operators.maintenance import snapshot_expiry_orphans
     return snapshot_expiry_orphans(DE.file_manifest(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")))
+        read_documents(spark, sf_dir)))
 
 
 def q_doc_recrawl_diff(spark, sf_dir):
     """Incremental-crawl page delta: digest round 1 vs the decorated
     round 2 (gone/changed/new plants), full-outer status per page."""
     from .operators.webingest import recrawl_diff
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+    docs = read_documents(spark, sf_dir) \
         .select("doc_id", "text")
     return recrawl_diff(docs, DE.recrawl_round2(docs))
 
@@ -2297,7 +2296,7 @@ def q_url_curation(spark, sf_dir):
     tracking-param/trailing-slash), blocklist by registered domain,
     dedup by canonical URL (min doc_id keeps) — per-doc verdicts."""
     from .operators.urlops import url_curation
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+    docs = read_documents(spark, sf_dir) \
         .select("doc_id")
     return url_curation(DE.url_decorated_docs(docs),
                         DE.url_blocklist(spark))
@@ -2400,7 +2399,7 @@ def q_doc_token_entropy(spark, sf_dir):
     complementing unigram_logloss's corpus-model surprisal)."""
     from .operators.textops import token_entropy
     return token_entropy(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text"))
 
 
@@ -2409,7 +2408,7 @@ def q_doc_chunking(spark, sf_dir):
     chunking; stride < width, lossless tail)."""
     from .operators.textops import chunk_documents
     return chunk_documents(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text"))
 
 
@@ -2418,7 +2417,7 @@ def q_doc_split(spark, sf_dir):
     under corpus growth — no migration between splits)."""
     from .operators.textops import train_val_test_split
     return train_val_test_split(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id"))
 
 
@@ -2427,7 +2426,7 @@ def q_doc_collocations(spark, sf_dir):
     for tokenizer/vocab construction)."""
     from .operators.textops import bigram_collocations
     return bigram_collocations(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text"))
 
 
@@ -2444,7 +2443,7 @@ def q_triple_provenance(spark, sf_dir):
     from .operators.relations import provenance_rollup
     return provenance_rollup(
         triples_df(spark, sf_dir),
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "source"))
 
 
@@ -2839,7 +2838,7 @@ def q_doc_bpe_apply(spark, sf_dir):
     the symbol-compression they buy."""
     from .operators.textops import bpe_apply_merges
     return bpe_apply_merges(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text"))
 
 
@@ -2913,7 +2912,7 @@ def q_doc_weighted_sample(spark, sf_dir):
     (no stratum-wide sort)."""
     from .operators.textops import weighted_reservoir_sample
     return weighted_reservoir_sample(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "lang", "n_chars"))
 
 
@@ -3304,7 +3303,7 @@ def q_doc_ccnet_buckets(spark, sf_dir):
     under per-language unigram models; exact distributed ntile."""
     from .operators.textops import ccnet_ppl_buckets
     return ccnet_ppl_buckets(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "lang", "text"))
 
 
@@ -3368,7 +3367,7 @@ def q_doc_dsir_select(spark, sf_dir):
     log-ratio weight, distributed exact top-k rank."""
     from .operators.textops import dsir_select
     return dsir_select(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "source", "text"))
 
 
@@ -3378,7 +3377,7 @@ def q_doc_bigram_logloss(spark, sf_dir):
     from doc_unigram_logloss."""
     from .operators.textops import bigram_logloss
     return bigram_logloss(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text"))
 
 
@@ -3424,7 +3423,7 @@ def q_doc_line_dedup(spark, sf_dir):
     occurrence; docs rebuilt in order."""
     from .operators.textops import line_dedup_keep_first
     return line_dedup_keep_first(DE.boilerplate_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir)
         .select("doc_id", "text")))
 
 

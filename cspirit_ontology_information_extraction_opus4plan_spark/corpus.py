@@ -51,8 +51,9 @@ from pyspark.sql import functions as F
 from .ontology_data import PREDICATE_PHRASES, surfaces
 from .session import local_df
 
-__all__ = ["documents_interleaved", "interleave_docs", "spans_exploded",
-           "explode_spans", "corpus_ctes", "spark_sql_str", "N_SURF"]
+__all__ = ["read_documents", "documents_interleaved", "interleave_docs",
+           "spans_exploded", "explode_spans", "corpus_ctes", "spark_sql_str",
+           "N_SURF"]
 
 N_SURF = len(surfaces())
 
@@ -141,14 +142,19 @@ def _surf_df(spark: SparkSession) -> DataFrame:
     return local_df(spark, list(enumerate(surfaces())), "idx int, s string")
 
 
+def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flat documents table of `sf_dir`, read with DOCS_SCHEMA."""
+    return spark.read.schema(DOCS_SCHEMA).parquet(
+        f"{sf_dir}/documents.parquet")
+
+
 def documents_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The engine's canonical input table (nested spans), synthesized from
     the flat driver corpus. The surface lookup is a broadcast hash join
     against the tiny (idx, surface) dimension — the same shape a real
     deployment would use for any per-row dictionary substitution (never an
     800-literal in-plan array, which blows up the expression tree)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return interleave_docs(docs)
+    return interleave_docs(read_documents(spark, sf_dir))
 
 
 def interleave_docs(docs: DataFrame) -> DataFrame:

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .corpus import read_documents
 from .operators.textops import tokens_col
 
 # ---------------------------------------------------------------------------
@@ -32,7 +33,7 @@ def augmented_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact copy for doc_id%17==0 (id+1000000), near copy (3 appended
     words) for doc_id%10==5 (id+2000000). Deterministic; rebuilt
     identically by the oracle SQL (oracle_sqls.ADOC_CTE)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+    d = read_documents(spark, sf_dir) \
         .select("doc_id", "text")
     exact = (d.filter(F.col("doc_id") % 17 == 0)
              .select((F.col("doc_id") + 1000000).alias("doc_id"), "text"))
@@ -50,7 +51,7 @@ def containment_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is fully contained in the source's while Jaccard stays low.
     Deterministic; rebuilt identically by oracle_sqls.CDOC_CTE."""
     from .operators.textops import tokens_col
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+    d = read_documents(spark, sf_dir) \
         .select("doc_id", "text")
     snip = (d.filter(F.col("doc_id") % 13 == 3)
             .select((F.col("doc_id") + 3000000).alias("doc_id"),

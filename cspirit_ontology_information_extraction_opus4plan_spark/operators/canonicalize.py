@@ -32,15 +32,19 @@ explicit (SURVEY §4.1). Lineage is truncated with an eager
 localCheckpoint every round (the checkpointed frame also serves the
 convergence count), else the loop's plan doubles per iteration.
 
-Size check: connected_components first collects nodes and edges with
-``limit(localgraph.ROW_BOUND + 1).toArrow()``. If each has at most
-ROW_BOUND rows — an ontology-sized graph, the canonical_mapping case —
-it is solved in the driver (localgraph.components: np.unique
-factorisation, np.minimum.at hooking and pointer jumping) and returned
-as a local relation, in the few jobs of the two collections instead of
-two localCheckpoints and a count per round. Larger graphs run the loop
-above: it stays because it is the only path for a cluster-size graph
-that does not fit in one process. Both paths give the same mapping.
+Size check: an ontology-sized graph is solved in the driver from one
+bounded collection (localgraph.collect) and returned as a local
+relation: one Spark job, not two localCheckpoints and a count per
+round. canonical_mapping collects the node ids, the surface and xref
+keys (k, id) and the replaced_by edges of _keyed_nodes as one tagged
+table; localgraph.components joins every id that carries a key, which
+connects exactly the ids the star edges connect, so no edge is built,
+and keys of different sources never merge. Above the bound,
+canonical_mapping runs the loop above over equivalence_star_edges, so
+the failed collection is its only added work; connected_components
+does the same over its edges. The loop stays because it is the only
+path for a cluster-size graph that does not fit in one process. All
+paths give the same mapping.
 """
 
 from __future__ import annotations
@@ -66,29 +70,28 @@ def _pairs(keyed: DataFrame) -> DataFrame:
             .select("src", "dst").distinct())
 
 
+# The three equivalence sources as SQL text over a terms frame. Surface
+# keys: coalesce(synonyms, []) because a NULL synonym array would null
+# the whole array_union and silently drop the term's NAME key too; blank
+# keys are filtered so unrelated no-name terms don't fuse on k=''.
+_SURFACE_KEY = ("explode(array_union(array(lower(trim(name))), transform("
+                "coalesce(synonyms, CAST(array() AS ARRAY<STRING>)), "
+                "s -> lower(trim(s))))) AS k")
+_XREF_KEY = "explode(xrefs) AS k"
+_KEY_OK = "k IS NOT NULL AND k != ''"
+_REPLACED = "is_obsolete AND replaced_by IS NOT NULL"
+_REPLACED_EDGE = ("least(id, replaced_by) AS src",
+                  "greatest(id, replaced_by) AS dst")
+
+
 def _keyed_nodes(terms: DataFrame) -> tuple[DataFrame, DataFrame,
                                             DataFrame]:
-    """The three equivalence sources as (key, id) / explicit-edge sets."""
-    live = terms.filter(~F.col("is_obsolete"))
-    # coalesce(synonyms, []): a NULL synonym array would null the whole
-    # array_union and silently drop the term's NAME key too; blank keys
-    # are filtered so unrelated no-name terms don't fuse on k=''
-    surf = (live.select(
-        F.explode(
-            F.array_union(
-                F.array(F.lower(F.trim("name"))),
-                F.transform(F.coalesce("synonyms",
-                                       F.array().cast("array<string>")),
-                            lambda s: F.lower(F.trim(s))))
-        ).alias("k"),
-        F.col("id"))
-        .filter(F.col("k").isNotNull() & (F.col("k") != "")))
-    xref = (terms.select(F.explode("xrefs").alias("k"), F.col("id"))
-            .filter(F.col("k").isNotNull() & (F.col("k") != "")))
-    repl = (terms
-            .filter(F.col("is_obsolete") & F.col("replaced_by").isNotNull())
-            .select(F.least("id", "replaced_by").alias("src"),
-                    F.greatest("id", "replaced_by").alias("dst")))
+    """The three equivalence sources: surface keys (k, id) of live
+    terms, xref keys (k, id), and replaced_by edges (src, dst)."""
+    surf = (terms.filter("NOT is_obsolete").selectExpr(_SURFACE_KEY, "id")
+            .filter(_KEY_OK))
+    xref = terms.selectExpr(_XREF_KEY, "id").filter(_KEY_OK)
+    repl = terms.filter(_REPLACED).selectExpr(*_REPLACED_EDGE)
     return surf, xref, repl
 
 
@@ -135,21 +138,30 @@ def connected_components(
     """nodes(id) x edges(src,dst) -> (id, component) where component is the
     min node id reachable. Deterministic; converges in O(log diameter)
     rounds. Endpoints are compared as the node id type. A graph with at
-    most localgraph.ROW_BOUND nodes and edges is solved in the driver;
-    a larger one runs the distributed loop below."""
+    most localgraph.ROW_BOUND nodes and edges in all is solved in the
+    driver; a larger one runs the distributed loop (_propagate)."""
     id_type = nodes.schema["id"].dataType
     edges = edges.select(F.col("src").cast(id_type),
                          F.col("dst").cast(id_type))
     solved = localgraph.components(nodes, edges)
     if solved is not None:
         return solved
+    return _propagate(nodes, edges, salt_buckets, max_iter)
+
+
+def _propagate(nodes: DataFrame, edges: DataFrame, salt_buckets: int = 8,
+               max_iter: int = 25) -> DataFrame:
+    """The distributed min-label loop of the module docstring over
+    edges of the node id type."""
     sym = (edges.select("src", "dst")
            .unionByName(edges.select(F.col("dst").alias("src"),
                                      F.col("src").alias("dst"))))
     sym = sym.repartition("src").persist()
 
-    labels = nodes.select(F.col("id"), F.col("id").alias("comp"))
-    labels = labels.localCheckpoint(eager=True)
+    # labels per distinct id: a duplicated node id must not multiply
+    # rows through the joins below; node rows get their label at the end
+    labels = (nodes.select(F.col("id"), F.col("id").alias("comp"))
+              .distinct().localCheckpoint(eager=True))
 
     converged = False
     # max_iter + 1: a run whose labels reach the fixpoint exactly on
@@ -198,13 +210,19 @@ def connected_components(
             f"({max_iter + 1} total) — raise max_iter (labels move >= 2x "
             f"per round, so this graph's component diameter exceeds "
             f"~2^{max_iter})")
-    return labels.select("id", F.col("comp").alias("canonical_id"))
+    return nodes.select("id").join(labels, "id", "left") \
+        .select("id", F.col("comp").alias("canonical_id"))
 
 
 def canonical_mapping(terms: DataFrame) -> DataFrame:
-    """(term_id, canonical_id) for every term in the ontology."""
-    return connected_components(
-        terms.select("id"), equivalence_star_edges(terms))
+    """(id, canonical_id) for every term row in the ontology (see Size
+    check in the module docstring)."""
+    nodes = terms.select("id")
+    surf, xref, repl = _keyed_nodes(terms)
+    solved = localgraph.components(nodes, repl, surf, xref)
+    if solved is not None:
+        return solved
+    return _propagate(nodes, equivalence_star_edges(terms))
 
 
 def decremental_components(old_mapping: DataFrame,

@@ -62,8 +62,8 @@ def gazetteer_df(spark: SparkSession) -> DataFrame:
 
 
 def winners_df(spark: SparkSession) -> DataFrame:
-    """OD.gazetteer_winners as a LocalTableScan (broadcast without a
-    job)."""
+    """OD.gazetteer_winners as a LocalTableScan (no Python task; its
+    broadcast is one small Spark job)."""
     rows = [(s, *w) for s, w in OD.gazetteer_winners().items()]
     return local_df(spark, rows, "surface string, term_id string, "
                     "match_kind string, rank int")

@@ -31,6 +31,8 @@ Scale notes (10^12-doc corpus => 10^8-10^9 node graph):
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -963,8 +965,13 @@ def _doubling_closure(base: DataFrame, p: str, max_iter: int) -> DataFrame:
     — the same pointer-jumping argument as connected_components. The
     linear frontier∘base recurrence hit max_iter on sf0.1's
     extraction-artifact is_a chains (diameter > 32); a web-scale KG
-    makes O(diameter) sequential rounds a non-starter outright."""
-    base = base.persist()
+    makes O(diameter) sequential rounds a non-starter outright. Rows
+    with a null endpoint join nothing and pass through, as in
+    localgraph.closure_rows: a null subject would otherwise reach along
+    its object's paths and never be anti-joined away."""
+    valid = F.col("subject").isNotNull() & F.col("object").isNotNull()
+    dangling = base.filter(~valid)
+    base = base.filter(valid).persist()
     closed, frontier, done = base, base, False
     for _it in range(max_iter + 1):  # +1 verification round
         fwd = (frontier.join(closed.toDF("object", "hop"), "object")
@@ -987,55 +994,55 @@ def _doubling_closure(base: DataFrame, p: str, max_iter: int) -> DataFrame:
             f"kg_entailment transitive closure of {p!r} still "
             f"growing after max_iter={max_iter} productive rounds "
             f"plus one verification round")
-    return closed
+    return closed.unionByName(dangling)
 
 
-def kg_entailment(triples: DataFrame, max_iter: int = 32) -> DataFrame:
-    """OWL/RDFS-style forward-chaining materialization over the
-    extracted triple store — the entailment step a KG-construction
-    pipeline runs between extraction and serving, emitting ONLY the
-    newly inferred edges with rule provenance:
+_KEY3 = ["subject", "predicate", "object"]
+_INV_FROM = pa.array(sorted(INVERSE_PREDICATES))
+_INV_TO = pa.array([INVERSE_PREDICATES[p] for p in _INV_FROM.to_pylist()])
 
-      * owl:inverseOf over the reference's closed inverse map
-        (models.py:1597-1614 via ontology_data.INVERSE_PREDICATES):
-        (s, p, o) => (o, inv(p), s)              rule = 'inverse'
-      * owl:TransitiveProperty for is_a / part_of (the two OBO
-        transitive relations, ontology_trimmer.py ancestor walks):
-        (a, p, b), (b, p, c) => (a, p, c)        rule = 'transitive'
 
-    The output is the JOINT fixpoint of both rules, not one pass each:
-    the inverse map is an involution and transitivity commutes with
-    direction flip, so saturating a transitive predicate p with
-    declared inverse q reduces to closing the canonical direction
-    (p edges union reversed q edges) once and re-emitting the closure
-    in both directions — e.g. asserted (a part_of b), (c has_part b)
-    entails (a part_of c) AND (c has_part a). No other predicate is
-    transitive, and inverse-of-inverse returns asserted edges, so no
-    further rule interaction exists and one canonical closure per
-    family IS the saturation.
+def _entailed_rows(pe: pa.Table) -> pa.Table | None:
+    """kg_entailment of a distinct (subject, predicate, object) table in
+    the driver, or None when a transitive family has more than
+    localgraph.NODE_BOUND nodes. Joins keep Spark's null semantics: a
+    null predicate has no inverse, a null endpoint passes through the
+    closure, a null key matches nothing in the anti-join, and the
+    final distinct groups nulls."""
+    s, p, o = (pe.column(c) for c in _KEY3)
+    inv = pc.index_in(p, value_set=_INV_FROM)
+    hit = pc.is_valid(inv)
+    parts = [(o.filter(hit), _INV_TO.take(inv.filter(hit)), s.filter(hit),
+              "inverse")]
+    for fam in TRANSITIVE_PREDICATES:
+        q = INVERSE_PREDICATES.get(fam)
+        fwd = pc.equal(p, fam)
+        src, dst = s.filter(fwd).chunks, o.filter(fwd).chunks
+        if q is not None:  # the canonical base: p edges, q edges reversed
+            bwd = pc.equal(p, q)
+            src, dst = src + o.filter(bwd).chunks, dst + s.filter(bwd).chunks
+        closed = localgraph.closure_rows(pa.chunked_array(src, s.type),
+                                         pa.chunked_array(dst, o.type))
+        if closed is None:
+            return None
+        a, c = closed
+        parts.append((a, pa.repeat(fam, len(a)), c, "transitive"))
+        if q is not None:
+            parts.append((c, pa.repeat(q, len(c)), a, "transitive"))
+    schema = pa.schema([*(pa.field(f.name, f.type) for f in pe.schema),
+                        pa.field("rule", pa.string(), nullable=False)])
+    out = pa.concat_tables(
+        pa.table([subj, pred, obj, pa.repeat(rule, len(subj))],
+                 names=schema.names).cast(schema)
+        for subj, pred, obj, rule in parts)
+    out = out.join(pe, _KEY3, join_type="left anti")
+    return out.group_by(schema.names).aggregate([]).cast(schema)
 
-    Inferred edges already asserted in the store are suppressed by a
-    final left_anti join; a triple derivable by both rules keeps one
-    row per rule (provenance is part of the key).
 
-    Size check: the canonical bases of all families are collected in one
-    job (localgraph.closures). If they hold at most
-    localgraph.ROW_BOUND rows, each family touching at most
-    localgraph.NODE_BOUND nodes is closed in the driver by boolean
-    matrix squaring — the ontology-sized case, where the distributed
-    loop's cost is two localCheckpoints and an isEmpty job per round,
-    not data. Any other family runs _doubling_closure, a DOUBLING
-    fixpoint (frontier composed with the accumulated closure on both
-    sides — O(log diameter) rounds, the pointer-jumping argument) with
-    the frontier-fixpoint hygiene of dependency_closure —
-    localCheckpoint per round to cut lineage, left_anti dedup against
-    the accumulated set, hard error on non-convergence. It stays
-    because it is the only path for closures too large for one
-    process. Both paths tolerate cycles and give the same set. The
-    inverse rule and the final anti-join against the store stay in
-    Spark; the inverse map is a constants-sized broadcast."""
-    pe = (triples.select("subject", "predicate", "object").distinct()
-          .localCheckpoint(eager=True))
+def _entail_distributed(pe: DataFrame, max_iter: int) -> DataFrame:
+    """kg_entailment of the distinct (subject, predicate, object) frame
+    pe with the rules as Spark joins; each family's closure is solved in
+    the driver if localgraph.closures can, else by _doubling_closure."""
     inv = _inverse_df(pe.sparkSession)
     inv_new = (pe.join(F.broadcast(inv), "predicate")
                .select(F.col("object").alias("subject"),
@@ -1071,8 +1078,67 @@ def kg_entailment(triples: DataFrame, max_iter: int = 32) -> DataFrame:
     out = parts[0]
     for part in parts[1:]:
         out = out.unionByName(part)
-    return (out.join(pe, ["subject", "predicate", "object"], "left_anti")
+    return (out.join(pe, _KEY3, "left_anti")
             .distinct())
+
+
+def kg_entailment(triples: DataFrame, max_iter: int = 32) -> DataFrame:
+    """OWL/RDFS-style forward-chaining materialization over the
+    extracted triple store — the entailment step a KG-construction
+    pipeline runs between extraction and serving, emitting ONLY the
+    newly inferred edges with rule provenance:
+
+      * owl:inverseOf over the reference's closed inverse map
+        (models.py:1597-1614 via ontology_data.INVERSE_PREDICATES):
+        (s, p, o) => (o, inv(p), s)              rule = 'inverse'
+      * owl:TransitiveProperty for is_a / part_of (the two OBO
+        transitive relations, ontology_trimmer.py ancestor walks):
+        (a, p, b), (b, p, c) => (a, p, c)        rule = 'transitive'
+
+    The output is the JOINT fixpoint of both rules, not one pass each:
+    the inverse map is an involution and transitivity commutes with
+    direction flip, so saturating a transitive predicate p with
+    declared inverse q reduces to closing the canonical direction
+    (p edges union reversed q edges) once and re-emitting the closure
+    in both directions — e.g. asserted (a part_of b), (c has_part b)
+    entails (a part_of c) AND (c has_part a). No other predicate is
+    transitive, and inverse-of-inverse returns asserted edges, so no
+    further rule interaction exists and one canonical closure per
+    family IS the saturation.
+
+    Inferred edges already asserted in the store are suppressed by a
+    final left_anti join; a triple derivable by both rules keeps one
+    row per rule (provenance is part of the key).
+
+    Size check: (subject, predicate, object) is collected once
+    (localgraph.collect). If the store has at most localgraph.ROW_BOUND
+    rows, the whole saturation runs in the driver (_entailed_rows:
+    distinct, inverse rule, one boolean-matrix closure per family with
+    at most localgraph.NODE_BOUND nodes, both directions, anti-join,
+    distinct) and comes back as a local relation — one Spark job. If a
+    family is larger, the collected table becomes the distinct store of
+    _entail_distributed, where each family is closed by
+    localgraph.closures or, past NODE_BOUND, by _doubling_closure. A
+    store above ROW_BOUND runs _entail_distributed over a checkpointed
+    distinct store. _doubling_closure is a DOUBLING fixpoint (frontier
+    composed with the accumulated closure on both sides — O(log
+    diameter) rounds, the pointer-jumping argument) with the
+    frontier-fixpoint hygiene of dependency_closure — localCheckpoint
+    per round to cut lineage, left_anti dedup against the accumulated
+    set, hard error on non-convergence. It stays because it is the only
+    path for closures too large for one process. All paths tolerate
+    cycles and give the same rows and schema (rule NOT NULL)."""
+    spark = triples.sparkSession
+    pe = localgraph.collect(triples.select(*_KEY3))
+    if pe is None:
+        return _entail_distributed(
+            triples.select(*_KEY3).distinct().localCheckpoint(eager=True),
+            max_iter)
+    pe = pe.group_by(_KEY3).aggregate([])
+    out = _entailed_rows(pe)
+    if out is not None:
+        return spark.createDataFrame(out)
+    return _entail_distributed(spark.createDataFrame(pe), max_iter)
 
 
 def _compose(x: DataFrame, y: DataFrame) -> DataFrame:

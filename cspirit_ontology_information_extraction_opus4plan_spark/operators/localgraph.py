@@ -3,12 +3,21 @@
 The distributed fixpoints in canonicalize.connected_components and
 graphops.kg_entailment pay two localCheckpoints and a convergence probe
 per round, so on a graph of a few hundred ontology terms their cost is
-Spark job overhead, not data. Each kernel here first collects its input
-with ``limit(ROW_BOUND + 1).toArrow()``: if at most ROW_BOUND rows come
-back, the graph is solved in one vectorised numpy pass and returned as a
-local relation (``createDataFrame(pyarrow.Table)``); otherwise the
-caller runs its distributed loop, the only path for graphs too large
-for one process.
+Spark job overhead, not data. Each operator therefore makes one bounded
+collection of everything it needs (``collect``: one tagged table, read
+with ``coalesce(1).limit(ROW_BOUND + 1).toArrow()``). If at most
+ROW_BOUND rows come back, the graph is solved here in vectorised
+numpy/pyarrow and returned as a local relation
+(``createDataFrame(pyarrow.Table)``); otherwise the caller runs its
+distributed loop, the only path for graphs too large for one process.
+
+Two kernels:
+  * ``components`` — min-id connected components over explicit edges
+    and over groups of shared keys (a key joins every id that carries
+    it: the id-key bipartite graph connects the same ids as the star
+    edges min-id-per-key -> other ids, with no edge built);
+  * ``closure_rows`` — transitive closure by boolean matrix squaring,
+    for at most NODE_BOUND distinct nodes.
 
 Ids are factorised with ``np.unique``. Its order (numeric, or code point
 for strings) equals Spark's ordering of the same values (UTF-8 binary
@@ -23,9 +32,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-__all__ = ["ROW_BOUND", "NODE_BOUND", "components", "closures"]
+__all__ = ["ROW_BOUND", "NODE_BOUND", "collect", "components",
+           "closure_rows", "closures"]
 
 # Rows collected to the driver before falling back to the distributed path.
 ROW_BOUND = 65_536
@@ -33,10 +42,18 @@ ROW_BOUND = 65_536
 NODE_BOUND = 2_048
 
 
-def _collect(df: DataFrame) -> pa.Table | None:
-    """df as one Arrow table if it has at most ROW_BOUND rows, else None."""
-    t = df.limit(ROW_BOUND + 1).toArrow()
+def collect(df: DataFrame) -> pa.Table | None:
+    """df as one Arrow table if it has at most ROW_BOUND rows, else None.
+    One task reads df's partitions in turn and stops after ROW_BOUND + 1
+    rows, so a small input costs one single-task job and a large one
+    only that many rows (a shuffle inside df still runs in full)."""
+    t = df.coalesce(1).limit(ROW_BOUND + 1).toArrow()
     return t if t.num_rows <= ROW_BOUND else None
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                  frames)
 
 
 def _factorize(*cols: pa.ChunkedArray) -> tuple[pa.Array, list[np.ndarray]]:
@@ -71,31 +88,56 @@ def _min_labels(n: int, src: np.ndarray, dst: np.ndarray) -> np.ndarray:
             lab = jumped
 
 
-def components(nodes: DataFrame, edges: DataFrame) -> DataFrame | None:
-    """nodes(id) x edges(src, dst) -> (id, canonical_id), the min id of
-    each node's component, or None if either input exceeds ROW_BOUND.
-    Edges with a null endpoint or an endpoint outside ``nodes`` carry no
-    label, as in the distributed join; a null id maps to null."""
-    nt = _collect(nodes.select("id"))
-    et = None if nt is None else _collect(edges.select("src", "dst"))
-    if et is None:
+def _valid(t: pa.Table, *cols: str) -> pa.Table:
+    return t.filter(reduce(pc.and_, [pc.is_valid(t.column(c))
+                                     for c in cols]))
+
+
+def components(nodes: DataFrame, edges: DataFrame,
+               *keyed: DataFrame) -> DataFrame | None:
+    """nodes(id), edges(src, dst) and key groups keyed(k, id) ->
+    (id, canonical_id), the min id of each node's component, or None if
+    the tagged table of all inputs exceeds ROW_BOUND rows; it is read in
+    one collection. Within one group, ids that share a key are
+    connected; keys of different groups never meet, whatever their
+    text. Edges and key rows with a null or a non-node id, and null
+    keys, connect nothing, as in the distributed join; each node row
+    gives one output row, and a null id maps to null.
+
+    Codes: node ids first (ascending), then the keys of each group, so
+    a component's smallest code is always a node id."""
+    t = collect(_union(
+        [nodes.selectExpr("0 AS g", "id AS a"),
+         edges.selectExpr("1 AS g", "src AS a", "dst AS b")]
+        + [kd.selectExpr(f"{2 + i} AS g", "id AS a", "k")
+           for i, kd in enumerate(keyed)]))
+    if t is None:
         return None
-    ids = nt.column("id")
-    et = et.filter(pc.and_(pc.is_valid(et.column("src")),
-                           pc.is_valid(et.column("dst"))))
+    groups = [t.filter(pc.equal(t.column("g"), g))
+              for g in range(2 + len(keyed))]
+    ids = groups[0].column("a")
     present = ids.drop_null()
-    uniq, (node_c, src_c, dst_c) = _factorize(
-        present, et.column("src"), et.column("dst"))
+    e = _valid(groups[1], "a", "b")
+    keys = [_valid(kt, "a", "k") for kt in groups[2:]]
+    uniq, (node_c, src_c, dst_c, *key_id_c) = _factorize(
+        present, e.column("a"), e.column("b"),
+        *[kt.column("a") for kt in keys])
     is_node = np.zeros(len(uniq), dtype=bool)
     is_node[node_c] = True
     keep = is_node[src_c] & is_node[dst_c]
-    lab = _min_labels(len(uniq), src_c[keep], dst_c[keep])
+    src, dst, n = [src_c[keep]], [dst_c[keep]], len(uniq)
+    for kt, id_c in zip(keys, key_id_c):
+        enc = pc.dictionary_encode(kt.column("k").combine_chunks())
+        keep = is_node[id_c]
+        src.append(id_c[keep])
+        dst.append(n + enc.indices.to_numpy()[keep])
+        n += len(enc.dictionary)
+    lab = _min_labels(n, np.concatenate(src), np.concatenate(dst))
     n_null = len(ids) - len(present)
-    canon = uniq.take(lab[node_c])
     out = pa.table({
         "id": pa.concat_arrays([present.combine_chunks(),
                                 pa.nulls(n_null, ids.type)]),
-        "canonical_id": pa.concat_arrays([canon,
+        "canonical_id": pa.concat_arrays([uniq.take(lab[node_c]),
                                           pa.nulls(n_null, ids.type)])})
     return nodes.sparkSession.createDataFrame(out)
 
@@ -123,32 +165,40 @@ def _closure(src: pa.ChunkedArray,
     return uniq.take(a), uniq.take(c)
 
 
+def closure_rows(subject: pa.ChunkedArray, obj: pa.ChunkedArray
+                 ) -> tuple[pa.ChunkedArray, pa.ChunkedArray] | None:
+    """The transitive closure of the edges (subject[i], obj[i]) as
+    (subject, object) columns, or None past NODE_BOUND nodes. Rows with
+    a null endpoint join nothing and pass through, as in the distributed
+    loop."""
+    rows = pa.table({"subject": subject, "object": obj})
+    valid = pc.and_(pc.is_valid(subject), pc.is_valid(obj))
+    edges = rows.filter(valid)
+    pairs = _closure(edges.column("subject"), edges.column("object"))
+    if pairs is None:
+        return None
+    dangling = rows.filter(pc.invert(valid))
+    return tuple(pa.chunked_array([p, *dangling.column(c).chunks],
+                                  type=p.type)
+                 for p, c in zip(pairs, ("subject", "object")))
+
+
 def closures(bases: dict[str, DataFrame]) -> dict[str, DataFrame]:
     """{family: base(subject, object)} -> {family: transitive closure}
     for every family solved in the driver; all bases are collected in
     one job. A family missing from the result (more than NODE_BOUND
     nodes), or every family (more than ROW_BOUND base rows in all), is
-    left to the caller's distributed loop. Rows with a null endpoint join
-    nothing and pass through, as in the distributed loop."""
-    tagged = reduce(DataFrame.unionByName, [
-        b.select(F.lit(p).alias("family"), "subject", "object")
-        for p, b in bases.items()])
-    t = _collect(tagged)
+    left to the caller's distributed loop."""
+    t = collect(_union([
+        b.selectExpr(f"{i} AS family", "subject", "object")
+        for i, b in enumerate(bases.values())]))
     if t is None:
         return {}
     out = {}
-    for p, base in bases.items():
-        rows = t.filter(pc.equal(t.column("family"), p))
-        valid = pc.and_(pc.is_valid(rows.column("subject")),
-                        pc.is_valid(rows.column("object")))
-        edges = rows.filter(valid)
-        pairs = _closure(edges.column("subject"), edges.column("object"))
-        if pairs is None:
-            continue
-        dangling = rows.filter(pc.invert(valid))
-        out[p] = base.sparkSession.createDataFrame(pa.table({
-            "subject": pa.concat_arrays(
-                [pairs[0], dangling.column("subject").combine_chunks()]),
-            "object": pa.concat_arrays(
-                [pairs[1], dangling.column("object").combine_chunks()])}))
+    for i, (p, base) in enumerate(bases.items()):
+        rows = t.filter(pc.equal(t.column("family"), i))
+        closed = closure_rows(rows.column("subject"), rows.column("object"))
+        if closed is not None:
+            out[p] = base.sparkSession.createDataFrame(pa.table(
+                {"subject": closed[0], "object": closed[1]}))
     return out

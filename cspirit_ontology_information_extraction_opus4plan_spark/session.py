@@ -65,9 +65,11 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     """Constant rows (tuples) -> a DataFrame planned as LocalTableScan.
 
     ``createDataFrame(list_of_tuples)`` plans a Python-RDD scan (``Scan
-    ExistingRDD``): every scan runs a Python task, and a broadcast of it
-    costs a job. Built from Arrow, the table is a local relation that the
-    driver scans and broadcasts without a job."""
+    ExistingRDD``): every scan runs a Python task. Built from Arrow, the
+    table is a local relation that the driver scans with no Python task.
+    Broadcasting it still runs one Spark job per distinct broadcast
+    (a noop write of range(1000) joined to one broadcast local_df runs 2
+    jobs, 1 without the join, 3 with two different broadcasts)."""
     arrow_schema = to_arrow_schema(_parse_datatype_string(schema))
     cols = list(zip(*rows)) or [()] * len(arrow_schema)
     return spark.createDataFrame(pa.Table.from_arrays(

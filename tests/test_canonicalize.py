@@ -3,12 +3,15 @@ salted keys; reference analogs cited in operators/canonicalize.py)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 
 from cspirit_ontology_information_extraction_opus4plan_spark.operators.canonicalize import (
     canonical_mapping,
     connected_components,
     equivalence_edges,
+    equivalence_star_edges,
 )
 from cspirit_ontology_information_extraction_opus4plan_spark.operators.gazetteer import (
     terms_df,
@@ -182,3 +185,78 @@ def test_decremental_components_resolves_splits(spark):
                 for r in canonical_mapping(
                     terms.filter(terms["id"] != "T2")).collect()}
         assert got == want
+
+
+def _hostile_terms(spark):
+    """Terms that stress the key normalisation and the id handling."""
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators.gazetteer import (  # noqa: E501
+        TERMS_SCHEMA,
+    )
+
+    def term(tid, name, syns=(), xrefs=(), obsolete=False, repl=None):
+        return (tid, name, "", None if syns is None else list(syns), "ns",
+                obsolete, repl, [], list(xrefs), [], "O1")
+
+    return spark.createDataFrame([
+        term("T1", "Alpha", ["shared"], ["X:1"]),
+        term("T2", " alpha "),               # same surface after trim
+        term(None, "orphan", ["shared"]),    # null id: joins nothing
+        term("T3", "gamma", ["g1"]),         # duplicate id, two rows
+        term("T3", "gamma", ["link4"]),
+        term("T4", "delta", ["link4"]),
+        term("T5", "epsilon", None, ["X:5"]),  # null synonyms array
+        term("T6", "EPSILON"),
+        term("T7", ""),                      # blank names never fuse
+        term("T8", "   "),
+        term("T0", "", [" "]),
+        term("T9", "X:9"),                   # surface 'x:9' ...
+        term("TA", "kappa", xrefs=["x:9"]),  # ... is not xref 'x:9'
+        term("TB", "obs1", obsolete=True, repl="GHOST"),  # outside terms
+        term("TC", "obs2", obsolete=True, repl="TD"),     # a chain
+        term("TD", "obs3", obsolete=True, repl="TE"),
+        term("TE", "live"),
+        term("TF", "lambda", xrefs=["X:1"]),  # shares T1's xref
+    ], TERMS_SCHEMA)
+
+
+def test_canonical_mapping_hostile_terms_on_both_paths(spark):
+    """On hostile terms the driver solve (components over shared keys),
+    the distributed loop, and equivalence_star_edges + CC all agree, row
+    for row and in schema; a surface never merges with an equal xref."""
+    terms = _hostile_terms(spark)
+    answers = {}
+    for path in kernel_paths():
+        for how, df in (
+                ("mapping", canonical_mapping(terms)),
+                ("star", connected_components(
+                    terms.select("id"), equivalence_star_edges(terms)))):
+            answers[path, how] = (
+                Counter(tuple(r) for r in df.collect()), df.schema)
+    got = answers["driver", "mapping"]
+    assert all(a == got for a in answers.values()), answers
+    m = got[0]
+    assert m == Counter({
+        ("T1", "T1"): 1, ("T2", "T1"): 1, ("TF", "T1"): 1,
+        ("T3", "T3"): 2, ("T4", "T3"): 1, (None, None): 1,
+        ("T5", "T5"): 1, ("T6", "T5"): 1,
+        ("T7", "T7"): 1, ("T8", "T8"): 1, ("T0", "T0"): 1,
+        ("T9", "T9"): 1, ("TA", "TA"): 1,
+        ("TB", "TB"): 1, ("TC", "TC"): 1, ("TD", "TC"): 1,
+        ("TE", "TC"): 1})
+
+
+def test_cc_bigint_ids_on_both_paths(spark):
+    """Bigint ids (negative, past 2^31, duplicated, null) keep their type
+    and their numeric min on both kernel paths."""
+    big = 2 ** 40
+    nodes = spark.createDataFrame(
+        [(-5,), (3,), (big,), (big,), (7,), (None,), (2 ** 31 + 1,)],
+        "id bigint")
+    edges = spark.createDataFrame(
+        [(big, -5), (7, 3), (7, 99), (None, 3)], "src bigint, dst bigint")
+    want = {(-5, -5): 1, (big, -5): 2, (3, 3): 1, (7, 3): 1,
+            (None, None): 1, (2 ** 31 + 1, 2 ** 31 + 1): 1}
+    for _path in kernel_paths():
+        cc = connected_components(nodes, edges)
+        assert dict(cc.dtypes) == {"id": "bigint", "canonical_id": "bigint"}
+        assert Counter(tuple(r) for r in cc.collect()) == want

@@ -324,6 +324,39 @@ def test_kg_entailment_node_bound_is_per_family(monkeypatch, spark):
     assert ("x", "part_of", "z", "transitive") in want[0]
 
 
+def test_kg_entailment_hostile_store_on_both_paths(spark):
+    """Duplicate rows, null endpoints, a null predicate, an is_a cycle
+    and both inverse directions: the driver solve and the distributed
+    path give the same rows (nulls included) and the same schema, with
+    rule NOT NULL."""
+    from collections import Counter
+
+    t = _pt(spark, [
+        ("a", "part_of", "b"), ("a", "part_of", "b"),    # duplicates
+        ("c", "has_part", "b"), ("b", "has_part", "a"),  # inverse side
+        ("u", "is_a", "v"), ("v", "is_a", "w"), ("w", "is_a", "u"),
+        ("n", "is_a", None), (None, "is_a", "u"),        # null endpoints
+        (None, "part_of", None), (None, "part_of", None),
+        ("x", None, "y"), (None, None, None),            # null predicate
+        ("p", "regulates", "q"), ("q", "regulated_by", "p"),
+        ("r", "catalyzes", None),
+    ])
+    got = {}
+    for path in kernel_paths():
+        df = graphops.kg_entailment(t)
+        got[path] = (Counter(tuple(r) for r in df.collect()), df.schema)
+    assert got["driver"] == got["distributed"]
+    rows, schema = got["driver"]
+    assert [f.nullable for f in schema] == [True, True, True, False]
+    assert all(n == 1 for n in rows.values())
+    assert ("u", "is_a", "u", "transitive") in rows
+    assert ("n", "is_a", None, "transitive") in rows
+    assert (None, "has_part", None, "inverse") in rows
+    assert (None, "catalyzed_by", "r", "inverse") in rows
+    assert not any(p is None for _, p, _, _ in rows)
+    assert ("b", "has_part", "a", "inverse") not in rows  # asserted
+
+
 def test_entailment_delta_emits_only_delta_consequences(spark):
     old = _pt(spark, [("a", "part_of", "b")])
     delta = _pt(spark, [("b", "part_of", "c")])

@@ -962,8 +962,8 @@ def test_unpartitioned_windows_stay_on_the_allowlist():
 
 
 def test_constant_tables_are_local_relations(spark):
-    """The ontology dimension tables plan as LocalTableScan (scanned and
-    broadcast by the driver without a job), never as a Python-RDD scan."""
+    """The ontology dimension tables plan as LocalTableScan (scanned by
+    the driver with no Python task), never as a Python-RDD scan."""
     from cspirit_ontology_information_extraction_opus4plan_spark.corpus import (  # noqa: E501
         _surf_df,
     )
@@ -978,3 +978,47 @@ def test_constant_tables_are_local_relations(spark):
         plan = _plan(build(spark))
         assert "LocalTableScan" in plan, build.__name__
         assert "ExistingRDD" not in plan, build.__name__
+
+
+def _job_count(spark, action) -> int:
+    """Spark jobs `action()` runs, counted by its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-gate-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_canonical_mapping_runs_one_job(spark):
+    """An ontology-sized mapping is one bounded collection, solved in the
+    driver: no star-edge plan, no per-round checkpoints."""
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators.canonicalize import (  # noqa: E501
+        canonical_mapping,
+    )
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators.gazetteer import (  # noqa: E501
+        terms_df,
+    )
+
+    assert _job_count(
+        spark, lambda: canonical_mapping(terms_df(spark)).collect()) <= 1
+
+
+def test_small_store_entailment_runs_one_job(spark):
+    """Entailment over a small store collects (subject, predicate,
+    object) once and saturates it in the driver."""
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators.graphops import (  # noqa: E501
+        kg_entailment,
+    )
+
+    store = spark.createDataFrame(
+        [("a", "part_of", "b"), ("c", "has_part", "b"),
+         ("b", "is_a", "d"), ("d", "is_a", "e"), ("e", "is_a", "b"),
+         ("p", "regulates", "q")],
+        "subject string, predicate string, object string")
+    assert _job_count(spark, lambda: kg_entailment(store).collect()) <= 1
