@@ -31,6 +31,8 @@ Scale notes (10^12-doc corpus => 10^8-10^9 node graph):
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -39,6 +41,7 @@ from pyspark.sql import functions as F
 from ..ontology_data import INVERSE_PREDICATES
 from ..session import local_df
 from . import localgraph
+from .fixpoint import fixpoint
 
 __all__ = ["undirected_entity_edges", "triangle_stats", "ffl_motifs",
            "two_hop_counts", "pagerank_fixed", "predicate_path_stats",
@@ -955,11 +958,62 @@ def bgp_optional(triples: DataFrame, p1: str = BGP_P1,
 
 
 TRANSITIVE_PREDICATES = ("is_a", "part_of")
+# each transitive family p with its declared inverse q (None: no inverse)
+_FAMILIES = {p: INVERSE_PREDICATES.get(p) for p in TRANSITIVE_PREDICATES}
+_PAIR = ["subject", "object"]
 
 
-def _doubling_closure(base: DataFrame, p: str, max_iter: int) -> DataFrame:
-    """Distributed transitive closure of base(subject, object) for
-    kg_entailment. DOUBLING, not frontier-extend-by-one: composing the
+def _compose(x: DataFrame, y: DataFrame) -> DataFrame:
+    """Relational composition {(a,c) : (a,b) in x, (b,c) in y}. A row
+    with a null endpoint composes nothing, as in every closure path."""
+    return (x.toDF("subject", "mid").join(y.toDF("mid", "object"), "mid")
+            .select("subject", "object").dropna())
+
+
+def _canon(frame: DataFrame, p: str, q: str | None) -> DataFrame:
+    """The canonical base of the transitive family p with inverse q: the
+    p edges of frame(subject, predicate, object) union its q edges
+    reversed, as distinct (subject, object) rows."""
+    base = frame.filter(F.col("predicate") == p).select(*_PAIR)
+    if q is not None:
+        base = base.unionByName(
+            frame.filter(F.col("predicate") == q)
+            .select(F.col("object").alias("subject"),
+                    F.col("subject").alias("object")))
+    return base.distinct()
+
+
+def _rule(rule: str | None) -> list:
+    return [] if rule is None else [F.lit(rule).alias("rule")]
+
+
+def _both_ways(closed: DataFrame, p: str, q: str | None,
+               rule: str | None = None) -> DataFrame:
+    """A family's canonical closure(subject, object) as p triples and,
+    if p has an inverse q, as reversed q triples; with a rule column
+    when rule is given."""
+    out = closed.select("subject", F.lit(p).alias("predicate"), "object",
+                        *_rule(rule))
+    if q is None:
+        return out
+    return out.unionByName(closed.select(
+        F.col("object").alias("subject"), F.lit(q).alias("predicate"),
+        F.col("subject").alias("object"), *_rule(rule)))
+
+
+def _inverse_rows(frame: DataFrame, rule: str | None = None) -> DataFrame:
+    """(o, inverse(p), s) for each row of frame whose predicate has a
+    declared inverse; with a rule column when rule is given."""
+    return (frame.join(F.broadcast(_inverse_df(frame.sparkSession)),
+                       "predicate")
+            .select(F.col("object").alias("subject"),
+                    F.col("inverse").alias("predicate"),
+                    F.col("subject").alias("object"), *_rule(rule)))
+
+
+def _doubling_closure(base: DataFrame, what: str, max_iter: int) -> DataFrame:
+    """Distributed transitive closure of base(subject, object) by
+    fixpoint. DOUBLING, not frontier-extend-by-one: composing the
     round-k frontier with the ACCUMULATED closure on both sides covers
     path lengths up to 2^k, so convergence takes O(log diameter) rounds
     — the same pointer-jumping argument as connected_components. The
@@ -970,31 +1024,27 @@ def _doubling_closure(base: DataFrame, p: str, max_iter: int) -> DataFrame:
     localgraph.closure_rows: a null subject would otherwise reach along
     its object's paths and never be anti-joined away."""
     valid = F.col("subject").isNotNull() & F.col("object").isNotNull()
-    dangling = base.filter(~valid)
-    base = base.filter(valid).persist()
-    closed, frontier, done = base, base, False
-    for _it in range(max_iter + 1):  # +1 verification round
-        fwd = (frontier.join(closed.toDF("object", "hop"), "object")
-               .select("subject", F.col("hop").alias("object")))
-        bwd = (closed.join(frontier.toDF("object", "hop"), "object")
-               .select("subject", F.col("hop").alias("object")))
-        nxt = (fwd.unionByName(bwd)
-               .distinct()
-               .join(closed, ["subject", "object"], "left_anti")
-               .localCheckpoint(eager=True))
-        if nxt.isEmpty():
-            done = True
-            break
-        closed = (closed.unionByName(nxt)
-                  .localCheckpoint(eager=True))
-        frontier = nxt
-    base.unpersist()
-    if not done:
-        raise RuntimeError(
-            f"kg_entailment transitive closure of {p!r} still "
-            f"growing after max_iter={max_iter} productive rounds "
-            f"plus one verification round")
-    return closed.unionByName(dangling)
+    edges = base.filter(valid).persist()
+    try:
+        closed = fixpoint(
+            edges, lambda new, acc: (_compose(new, acc)
+                                     .unionByName(_compose(acc, new))
+                                     .distinct()),
+            _PAIR, f"{what} transitive closure", max_iter)
+    finally:
+        edges.unpersist()
+    return closed.unionByName(base.filter(~valid))
+
+
+def _closures(bases: dict[str, DataFrame], what: str,
+              max_iter: int) -> dict[str, DataFrame]:
+    """{family: base(subject, object)} -> {family: transitive closure}:
+    the families localgraph.closures solves in the driver (one
+    collection for all of them), the rest by _doubling_closure."""
+    solved = localgraph.closures(bases)
+    return {p: solved[p] if p in solved
+            else _doubling_closure(base, f"{what} {p!r}", max_iter)
+            for p, base in bases.items()}
 
 
 _KEY3 = ["subject", "predicate", "object"]
@@ -1041,45 +1091,14 @@ def _entailed_rows(pe: pa.Table) -> pa.Table | None:
 
 def _entail_distributed(pe: DataFrame, max_iter: int) -> DataFrame:
     """kg_entailment of the distinct (subject, predicate, object) frame
-    pe with the rules as Spark joins; each family's closure is solved in
-    the driver if localgraph.closures can, else by _doubling_closure."""
-    inv = _inverse_df(pe.sparkSession)
-    inv_new = (pe.join(F.broadcast(inv), "predicate")
-               .select(F.col("object").alias("subject"),
-                       F.col("inverse").alias("predicate"),
-                       F.col("subject").alias("object"),
-                       F.lit("inverse").alias("rule")))
-    parts = [inv_new]
-    bases = {}
-    for p in TRANSITIVE_PREDICATES:
-        q = INVERSE_PREDICATES.get(p)
-        base = pe.filter(F.col("predicate") == p).select("subject",
-                                                         "object")
-        if q is not None:
-            base = base.unionByName(
-                pe.filter(F.col("predicate") == q)
-                .select(F.col("object").alias("subject"),
-                        F.col("subject").alias("object"))).distinct()
-        bases[p] = base
-    solved = localgraph.closures(bases)
-    for p, base in bases.items():
-        q = INVERSE_PREDICATES.get(p)
-        closed = (solved[p] if p in solved
-                  else _doubling_closure(base, p, max_iter))
-        parts.append(closed.select(
-            "subject", F.lit(p).alias("predicate"), "object",
-            F.lit("transitive").alias("rule")))
-        if q is not None:
-            parts.append(closed.select(
-                F.col("object").alias("subject"),
-                F.lit(q).alias("predicate"),
-                F.col("subject").alias("object"),
-                F.lit("transitive").alias("rule")))
-    out = parts[0]
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    return (out.join(pe, _KEY3, "left_anti")
-            .distinct())
+    pe with the rules as Spark joins; the families close in _closures."""
+    closed = _closures({p: _canon(pe, p, q) for p, q in _FAMILIES.items()},
+                       "kg_entailment", max_iter)
+    out = reduce(DataFrame.unionByName,
+                 [_both_ways(closed[p], p, q, "transitive")
+                  for p, q in _FAMILIES.items()],
+                 _inverse_rows(pe, "inverse"))
+    return out.join(pe, _KEY3, "left_anti").distinct()
 
 
 def kg_entailment(triples: DataFrame, max_iter: int = 32) -> DataFrame:
@@ -1120,14 +1139,14 @@ def kg_entailment(triples: DataFrame, max_iter: int = 32) -> DataFrame:
     _entail_distributed, where each family is closed by
     localgraph.closures or, past NODE_BOUND, by _doubling_closure. A
     store above ROW_BOUND runs _entail_distributed over a checkpointed
-    distinct store. _doubling_closure is a DOUBLING fixpoint (frontier
+    distinct store. _doubling_closure is a DOUBLING closure (frontier
     composed with the accumulated closure on both sides — O(log
-    diameter) rounds, the pointer-jumping argument) with the
-    frontier-fixpoint hygiene of dependency_closure — localCheckpoint
-    per round to cut lineage, left_anti dedup against the accumulated
-    set, hard error on non-convergence. It stays because it is the only
-    path for closures too large for one process. All paths tolerate
-    cycles and give the same rows and schema (rule NOT NULL)."""
+    diameter) rounds, the pointer-jumping argument) run by
+    fixpoint.fixpoint — localCheckpoint per round to cut lineage,
+    left_anti dedup against the accumulated set, hard error on
+    non-convergence. It stays because it is the only path for closures
+    too large for one process. All paths tolerate cycles and give the
+    same rows and schema (rule NOT NULL)."""
     spark = triples.sparkSession
     pe = localgraph.collect(triples.select(*_KEY3))
     if pe is None:
@@ -1139,12 +1158,6 @@ def kg_entailment(triples: DataFrame, max_iter: int = 32) -> DataFrame:
     if out is not None:
         return spark.createDataFrame(out)
     return _entail_distributed(spark.createDataFrame(pe), max_iter)
-
-
-def _compose(x: DataFrame, y: DataFrame) -> DataFrame:
-    """Relational composition {(a,c) : (a,b) in x, (b,c) in y}."""
-    return (x.toDF("subject", "mid").join(y.toDF("mid", "object"), "mid")
-            .select("subject", "object"))
 
 
 def kg_entailment_delta(old: DataFrame, delta: DataFrame,
@@ -1169,95 +1182,28 @@ def kg_entailment_delta(old: DataFrame, delta: DataFrame,
     delta contribution is just inverse(delta). Suppression set =
     asserted(old + delta) + inverse(old) + B re-emitted both
     directions, all equi-anti-joins on the triple key."""
-    po = (old.select("subject", "predicate", "object").distinct()
-          .localCheckpoint(eager=True))
-    pd_ = (delta.select("subject", "predicate", "object").distinct()
-           .join(po, ["subject", "predicate", "object"], "left_anti")
+    po = old.select(*_KEY3).distinct().localCheckpoint(eager=True)
+    pd_ = (delta.select(*_KEY3).distinct()
+           .join(po, _KEY3, "left_anti")
            .localCheckpoint(eager=True))
-    pall = po.unionByName(pd_)
-    inv = _inverse_df(po.sparkSession)
-
-    def _inv_rows(frame: DataFrame) -> DataFrame:
-        return (frame.join(F.broadcast(inv), "predicate")
-                .select(F.col("object").alias("subject"),
-                        F.col("inverse").alias("predicate"),
-                        F.col("subject").alias("object")))
-
-    def _canon(frame: DataFrame, p: str, q: str | None) -> DataFrame:
-        base = (frame.filter(F.col("predicate") == p)
-                .select("subject", "object"))
-        if q is not None:
-            base = base.unionByName(
-                frame.filter(F.col("predicate") == q)
-                .select(F.col("object").alias("subject"),
-                        F.col("subject").alias("object")))
-        return base.distinct()
-
-    def _close(seed: DataFrame, what: str) -> DataFrame:
-        # DOUBLING closure (frontier composed with the accumulated set
-        # on both sides — O(log diameter) rounds), the same
-        # pointer-jumping scheme kg_entailment uses: the previous
-        # linear frontier∘seed recurrence needed O(diameter) rounds,
-        # which both risks the max_iter guard on deep is_a chains and
-        # dominated this query's bench wall. The fixpoint set is
-        # identical — closure under composition does not depend on the
-        # iteration schedule.
-        closed, frontier, done = seed, seed, False
-        for _it in range(max_iter + 1):  # +1 verification round
-            nxt = (_compose(frontier, closed)
-                   .unionByName(_compose(closed, frontier))
-                   .distinct()
-                   .join(closed, ["subject", "object"], "left_anti")
-                   .localCheckpoint(eager=True))
-            if nxt.isEmpty():
-                done = True
-                break
-            closed = closed.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
-        if not done:
-            raise RuntimeError(
-                f"kg_entailment_delta {what} closure still growing "
-                f"after max_iter={max_iter} productive rounds plus one "
-                f"verification round")
-        return closed
-
-    cand_parts = [_inv_rows(pd_).select(
-        "subject", "predicate", "object", F.lit("inverse").alias("rule"))]
-    suppress_parts = [pall, _inv_rows(po)]
-    for p in TRANSITIVE_PREDICATES:
-        q = INVERSE_PREDICATES.get(p)
-        b0 = _canon(po, p, q).persist()
-        big = _close(b0, f"old {p!r}")              # B: old saturation
-        d0 = _canon(pd_, p, q)
+    big = _closures({p: _canon(po, p, q) for p, q in _FAMILIES.items()},
+                    "kg_entailment_delta old", max_iter)  # B: old saturation
+    seeds = {}
+    for p, q in _FAMILIES.items():
         # delta seed with old reachability attached on both ends
-        right = d0.unionByName(_compose(d0, big)).distinct()
-        seed = (right.unionByName(_compose(big, right)).distinct()
-                .localCheckpoint(eager=True))
-        newc = (_close(seed, f"delta {p!r}")
-                .join(big, ["subject", "object"], "left_anti")
-                .localCheckpoint(eager=True))
-        b0.unpersist()
-        for frame, dst in ((newc, cand_parts), (big, suppress_parts)):
-            dst.append(frame.select(
-                "subject", F.lit(p).alias("predicate"), "object",
-                *([F.lit("transitive").alias("rule")]
-                  if dst is cand_parts else [])))
-            if q is not None:
-                dst.append(frame.select(
-                    F.col("object").alias("subject"),
-                    F.lit(q).alias("predicate"),
-                    F.col("subject").alias("object"),
-                    *([F.lit("transitive").alias("rule")]
-                      if dst is cand_parts else [])))
-    cand = cand_parts[0]
-    for part in cand_parts[1:]:
-        cand = cand.unionByName(part)
-    supp = suppress_parts[0]
-    for part in suppress_parts[1:]:
-        supp = supp.unionByName(part)
-    return (cand.join(supp.select("subject", "predicate", "object"),
-                      ["subject", "predicate", "object"], "left_anti")
-            .distinct())
+        d0 = _canon(pd_, p, q)
+        right = d0.unionByName(_compose(d0, big[p])).distinct()
+        seeds[p] = right.unionByName(_compose(big[p], right)).distinct()
+    new = _closures(seeds, "kg_entailment_delta delta", max_iter)
+    cand = reduce(DataFrame.unionByName,
+                  [_both_ways(new[p].join(big[p], _PAIR, "left_anti"),
+                              p, q, "transitive")
+                   for p, q in _FAMILIES.items()],
+                  _inverse_rows(pd_, "inverse"))
+    supp = reduce(DataFrame.unionByName,
+                  [_both_ways(big[p], p, q) for p, q in _FAMILIES.items()],
+                  po.unionByName(pd_).unionByName(_inverse_rows(po)))
+    return cand.join(supp, _KEY3, "left_anti").distinct()
 
 
 def kg_entailment_retract(old: DataFrame, removed: DataFrame,
@@ -1295,61 +1241,21 @@ def kg_entailment_retract(old: DataFrame, removed: DataFrame,
     re-emit inverse(surviving asserted). Output contract identical to
     kg_entailment (inferred rows only, rule provenance, asserted rows
     suppressed)."""
-    key3 = ["subject", "predicate", "object"]
-    pa = (old.select(*key3).distinct().localCheckpoint(eager=True))
-    rm = (removed.select(*key3).distinct()
-          .join(pa, key3, "left_semi"))
-    pk = pa.join(rm, key3, "left_anti").localCheckpoint(eager=True)
-    inv = _inverse_df(pa.sparkSession)
-
-    def _canon(frame: DataFrame, p: str, q: str | None) -> DataFrame:
-        base = (frame.filter(F.col("predicate") == p)
-                .select("subject", "object"))
-        if q is not None:
-            base = base.unionByName(
-                frame.filter(F.col("predicate") == q)
-                .select(F.col("object").alias("subject"),
-                        F.col("subject").alias("object")))
-        return base.distinct()
-
-    def _close(base: DataFrame, what: str) -> DataFrame:
-        # doubling fixpoint (see kg_entailment): O(log diameter) rounds
-        closed, frontier, done = base, base, False
-        for _it in range(max_iter + 1):
-            nxt = (_compose(frontier, closed)
-                   .unionByName(_compose(closed, frontier))
-                   .distinct()
-                   .join(closed, ["subject", "object"], "left_anti")
-                   .localCheckpoint(eager=True))
-            if nxt.isEmpty():
-                done = True
-                break
-            closed = closed.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
-        if not done:
-            raise RuntimeError(
-                f"kg_entailment_retract {what} closure still growing "
-                f"after max_iter={max_iter} rounds")
-        return closed
-
-    parts = [(pk.join(F.broadcast(inv), "predicate")
-              .select(F.col("object").alias("subject"),
-                      F.col("inverse").alias("predicate"),
-                      F.col("subject").alias("object"),
-                      F.lit("inverse").alias("rule")))]
-    for p in TRANSITIVE_PREDICATES:
-        q = INVERSE_PREDICATES.get(p)
+    pe = old.select(*_KEY3).distinct().localCheckpoint(eager=True)
+    rm = removed.select(*_KEY3).distinct().join(pe, _KEY3, "left_semi")
+    pk = pe.join(rm, _KEY3, "left_anti").localCheckpoint(eager=True)
+    c0 = _closures({p: _canon(pe, p, q) for p, q in _FAMILIES.items()},
+                   "kg_entailment_retract old", max_iter)
+    parts = [_inverse_rows(pk, "inverse")]
+    for p, q in _FAMILIES.items():
         b1 = _canon(pk, p, q).localCheckpoint(eager=True)
-        dp = (_canon(pa, p, q)
-              .join(b1, ["subject", "object"], "left_anti"))
-        c0 = _close(_canon(pa, p, q), f"old {p!r}")
+        dp = _canon(pe, p, q).join(b1, _PAIR, "left_anti")
         # overdelete: suspects that can factor through a deleted edge
-        left = dp.unionByName(_compose(c0, dp)).distinct()
-        o = (left.unionByName(_compose(left, c0)).distinct()
-             .join(c0, ["subject", "object"], "left_semi")
+        left = dp.unionByName(_compose(c0[p], dp)).distinct()
+        o = (left.unionByName(_compose(left, c0[p])).distinct()
+             .join(c0[p], _PAIR, "left_semi")
              .localCheckpoint(eager=True))
-        kept = (c0.join(o, ["subject", "object"], "left_anti")
-                .localCheckpoint(eager=True))
+        kept = c0[p].join(o, _PAIR, "left_anti").localCheckpoint(eager=True)
         # rederive inside the suspect set: endpoint-anchored DOUBLING.
         # A surviving suspect path splits at ANY midpoint into two
         # closure pairs, each Kept or an already-rederived suspect, so
@@ -1361,46 +1267,27 @@ def kg_entailment_retract(old: DataFrame, removed: DataFrame,
         # suspect object), so join input stays proportional to
         # closure rows anchored at suspects, not the full Kept set;
         # results are semi-joined to O as before — no work leaves the
-        # suspect set.
+        # suspect set. The step reads the whole accumulated set, not
+        # the frontier.
         subs = o.select("subject").distinct().localCheckpoint(eager=True)
         objs = o.select("object").distinct().localCheckpoint(eager=True)
-        acc = (b1.join(o, ["subject", "object"], "left_semi")
-               .localCheckpoint(eager=True))
-        done = False
-        for _it in range(max_iter + 1):
+
+        def rederive(_new: DataFrame, acc: DataFrame) -> DataFrame:
             u = kept.unionByName(acc)
             # re-select after the semi-joins: join-on-key moves the key
             # column first, and _compose renames POSITIONALLY
-            ul = (u.join(subs, "subject", "left_semi")
-                  .select("subject", "object"))
-            ur = (u.join(objs, "object", "left_semi")
-                  .select("subject", "object"))
-            nxt = (_compose(ul, ur).distinct()
-                   .join(o, ["subject", "object"], "left_semi")
-                   .join(acc, ["subject", "object"], "left_anti")
-                   .localCheckpoint(eager=True))
-            if nxt.isEmpty():
-                done = True
-                break
-            acc = acc.unionByName(nxt).localCheckpoint(eager=True)
-        if not done:
-            raise RuntimeError(
-                f"kg_entailment_retract rederivation of {p!r} still "
-                f"growing after max_iter={max_iter} rounds")
-        c1 = kept.unionByName(acc)
-        parts.append(c1.select(
-            "subject", F.lit(p).alias("predicate"), "object",
-            F.lit("transitive").alias("rule")))
-        if q is not None:
-            parts.append(c1.select(
-                F.col("object").alias("subject"),
-                F.lit(q).alias("predicate"),
-                F.col("subject").alias("object"),
-                F.lit("transitive").alias("rule")))
-    out = parts[0]
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    return (out.join(pk, key3, "left_anti").distinct())
+            ul = u.join(subs, "subject", "left_semi").select(*_PAIR)
+            ur = u.join(objs, "object", "left_semi").select(*_PAIR)
+            return (_compose(ul, ur).distinct()
+                    .join(o, _PAIR, "left_semi"))
+
+        acc = fixpoint(
+            b1.join(o, _PAIR, "left_semi").localCheckpoint(eager=True),
+            rederive, _PAIR, f"kg_entailment_retract rederivation of {p!r}",
+            max_iter)
+        parts.append(_both_ways(kept.unionByName(acc), p, q, "transitive"))
+    return (reduce(DataFrame.unionByName, parts)
+            .join(pk, _KEY3, "left_anti").distinct())
 
 
 CONSTRUCT_P = "located_in"

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..ontology_data import (DOMAIN_RULES, INVERSE_PREDICATES,
                              SEMANTIC_RULES, SHACL_SHAPES)
+from .fixpoint import fixpoint
 
 # ---------------------------------------------------------------------------
 # statistics (Ontology.get_statistics, models.py:3297-3356)
@@ -252,40 +253,27 @@ def transitive_reduction(edges: DataFrame, max_iter: int = 32) -> DataFrame:
     on the DataFrame side.
 
     Shape: seed the >=2-step reachability set with the length-2 join
-    of the edge list against itself, then extend one hop per round to
-    fixpoint (frontier anti-joined against seen pairs, localCheckpoint
-    truncating lineage like bfs_depths). Terminates on cyclic input —
-    the pair set is finite and the anti-join empties the frontier.
-    O(depth) rounds; the pair set is the ancestor closure, O(V *
-    avg-ancestors) — dimension-table-sized work (ontologies are
-    millions of terms, depth ~tens), NOT for the corpus entity graph
-    (use bounded probes like two_hop_counts there). Hard error on
-    non-convergence, like bfs_depths: a silent cap would mislabel
-    deep redundancies as essential."""
+    of the edge list against itself, then extend one hop per round by
+    fixpoint (frontier anti-joined against seen pairs, lineage cut per
+    round). Terminates on cyclic input — the pair set is finite and the
+    anti-join empties the frontier. O(depth) rounds; the pair set is
+    the ancestor closure, O(V * avg-ancestors) — dimension-table-sized
+    work (ontologies are millions of terms, depth ~tens), NOT for the
+    corpus entity graph (use bounded probes like two_hop_counts there).
+    Hard error on non-convergence (fixpoint's): a silent cap would
+    mislabel deep redundancies as essential."""
     e = edges.select("src", "dst").distinct().persist()
-    step = e.select(F.col("src").alias("mid"), F.col("dst").alias("far"))
-    reach = (e.join(step, e.dst == step.mid)
-             .select("src", F.col("far").alias("dst")).distinct()
-             .localCheckpoint(eager=True))
-    frontier = reach
-    done = False
-    for _it in range(max_iter + 1):  # +1 verification round (bfs_depths)
-        nxt = (frontier.join(step, frontier.dst == step.mid)
-               .select("src", F.col("far").alias("dst")).distinct()
-               .join(reach, ["src", "dst"], "left_anti")
-               .localCheckpoint(eager=True))
-        if nxt.isEmpty():
-            done = True
-            break
-        reach = reach.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    e.unpersist()
-    if not done:
-        raise RuntimeError(
-            f"transitive_reduction frontier still active after "
-            f"max_iter={max_iter} productive rounds plus one verification "
-            f"round — hierarchy deeper than max_iter (a silent cap would "
-            f"mislabel deep redundant edges as essential)")
+    hop = e.select(F.col("src").alias("mid"), F.col("dst").alias("far"))
+
+    def extend(pairs: DataFrame, _acc: DataFrame) -> DataFrame:
+        return (pairs.join(hop, pairs.dst == hop.mid)
+                .select("src", F.col("far").alias("dst")).distinct())
+
+    try:
+        reach = fixpoint(extend(e, e).localCheckpoint(eager=True), extend,
+                         ["src", "dst"], "transitive_reduction", max_iter)
+    finally:
+        e.unpersist()
     flagged = reach.withColumn("redundant", F.lit(True))
     return (e.join(flagged, ["src", "dst"], "left")
             .select("src", "dst",
@@ -294,38 +282,33 @@ def transitive_reduction(edges: DataFrame, max_iter: int = 32) -> DataFrame:
 
 def ancestor_closure(terms: DataFrame, rels: DataFrame,
                      max_iter: int = 32) -> DataFrame:
-    """Ancestor-or-self is_a closure (id, anc) by frontier fixpoint —
-    the shared substrate for LCA/IC term-similarity measures. Same
-    loop discipline as dependency_closure: localCheckpoint per round
-    to cut lineage, left_anti dedup against the accumulated set, and
-    a hard error on non-convergence (a silent cap would truncate
-    ancestor sets and corrupt every similarity built on top). The
-    closure is dimension-table-sized (ontology terms x avg depth),
-    never corpus-sized."""
+    """Ancestor-or-self is_a closure (id, anc) by fixpoint — the shared
+    substrate for LCA/IC term-similarity measures. A hard error on
+    non-convergence (a silent cap would truncate ancestor sets and
+    corrupt every similarity built on top). The closure is
+    dimension-table-sized (ontology terms x avg depth), never
+    corpus-sized."""
     up = (rels.filter(F.col("predicate") == "is_a")
           .select(F.col("subject").alias("child"),
-                  F.col("object").alias("parent"))
-          .distinct().persist())
-    anc = terms.select("id", F.col("id").alias("anc"))
-    frontier = anc
-    done = False
-    for _it in range(max_iter + 1):  # +1 verification round (bfs_depths)
-        nxt = (frontier.join(up.withColumnRenamed("child", "anc"), "anc")
-               .select("id", F.col("parent").alias("anc")).distinct()
-               .join(anc, ["id", "anc"], "left_anti")
-               .localCheckpoint(eager=True))
-        if nxt.isEmpty():
-            done = True
-            break
-        anc = anc.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    up.unpersist()
-    if not done:
-        raise RuntimeError(
-            f"ancestor_closure still growing after max_iter={max_iter} "
-            f"productive rounds plus one verification round — hierarchy "
-            f"deeper than max_iter")
-    return anc
+                  F.col("object").alias("parent")))
+    return _ancestors(terms.select("id"), up, "ancestor_closure", max_iter)
+
+
+def _ancestors(ids: DataFrame, up: DataFrame, what: str,
+               max_iter: int) -> DataFrame:
+    """(id, anc) for every id and each of its ancestors-or-self over the
+    edges up(child, parent), by fixpoint."""
+    up = up.distinct().persist()
+
+    def climb(new: DataFrame, _acc: DataFrame) -> DataFrame:
+        return (new.join(up.withColumnRenamed("child", "anc"), "anc")
+                .select("id", F.col("parent").alias("anc")).distinct())
+
+    try:
+        return fixpoint(ids.select("id", F.col("id").alias("anc")), climb,
+                        ["id", "anc"], what, max_iter)
+    finally:
+        up.unpersist()
 
 
 def wu_palmer_similarity(terms: DataFrame, rels: DataFrame,
@@ -573,10 +556,11 @@ def bfs_depths(terms: DataFrame, rels: DataFrame,
                max_iter: int = 32) -> DataFrame:
     """(id, depth) = min is_a-distance from a root — the reference's
     recursive DFS (_calculate_max_depth models.py:3359-3408) as an
-    iterative frontier join: depth 0 at roots, each round children of the
-    frontier gain depth+1 unless already labeled shallower. O(max depth)
-    rounds; frontier shrinks monotonically; localCheckpoint truncates
-    lineage like the CC loop (SURVEY §4.2).
+    iterative frontier join by fixpoint: depth 0 at roots, each round
+    children of the frontier gain depth+1 unless already labeled
+    shallower. O(max depth) rounds; frontier shrinks monotonically. A
+    hierarchy deeper than max_iter is a hard error (a silent cap would
+    return depths missing the deepest terms).
 
     Reachability semantics: terms with no path from any root — e.g.
     members of an isolated is_a cycle — carry NO depth row, matching
@@ -587,33 +571,19 @@ def bfs_depths(terms: DataFrame, rels: DataFrame,
             .select(F.col("object").alias("parent"),
                     F.col("subject").alias("child"))
             .distinct().persist())
-    labeled = hierarchy_roots(terms, rels) \
-        .select("id", F.lit(0).alias("depth"))
-    frontier = labeled
-    done = False
-    # max_iter + 1: the last depth can be assigned on round max_iter-1,
-    # and one extra round is needed to observe the empty frontier —
-    # otherwise a complete result is rejected as truncated
-    for it in range(max_iter + 1):
-        nxt = (down.join(frontier.withColumnRenamed("id", "parent"), "parent")
-               .select(F.col("child").alias("id"),
-                       (F.col("depth") + 1).alias("depth"))
-               .groupBy("id").agg(F.min("depth").alias("depth"))
-               .join(labeled, "id", "left_anti"))
-        nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            done = True
-            break
-        labeled = labeled.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    down.unpersist()
-    if not done:
-        raise RuntimeError(
-            f"bfs_depths frontier still active after max_iter={max_iter} "
-            f"productive rounds plus one verification round "
-            f"({max_iter + 1} total) — hierarchy deeper than max_iter "
-            f"(a silent cap would return depths missing the deepest terms)")
-    return labeled
+
+    def descend(new: DataFrame, _acc: DataFrame) -> DataFrame:
+        return (down.join(new.withColumnRenamed("id", "parent"), "parent")
+                .select(F.col("child").alias("id"),
+                        (F.col("depth") + 1).alias("depth"))
+                .groupBy("id").agg(F.min("depth").alias("depth")))
+
+    try:
+        return fixpoint(hierarchy_roots(terms, rels)
+                        .select("id", F.lit(0).alias("depth")),
+                        descend, ["id"], "bfs_depths", max_iter)
+    finally:
+        down.unpersist()
 
 
 def max_depth(terms: DataFrame, rels: DataFrame) -> DataFrame:
@@ -629,32 +599,23 @@ def dependency_closure(terms: DataFrame, rels: DataFrame,
                        seeds: DataFrame, max_iter: int = 32) -> DataFrame:
     """Ancestor closure of a seed id set over is_a — term-list extraction
     with dependency resolution (_extract_by_term_list trimmer.py:228,
-    _resolve_dependencies :586-628). Frontier join to fixpoint."""
+    _resolve_dependencies :586-628). Frontier join by fixpoint; an
+    incomplete closure would silently drop ancestors, so
+    non-convergence is a hard error."""
     up = (rels.filter(F.col("predicate") == "is_a")
           .select(F.col("subject").alias("child"),
                   F.col("object").alias("parent"))
           .distinct().persist())
-    seen = seeds.select("id").distinct()
-    frontier = seen
-    done = False
-    for it in range(max_iter + 1):  # +1 verification round, see bfs_depths
-        nxt = (up.join(frontier.withColumnRenamed("id", "child"), "child")
-               .select(F.col("parent").alias("id")).distinct()
-               .join(seen, "id", "left_anti")
-               .localCheckpoint(eager=True))
-        if nxt.isEmpty():
-            done = True
-            break
-        seen = seen.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    up.unpersist()
-    if not done:
-        raise RuntimeError(
-            f"dependency_closure frontier still active after max_iter="
-            f"{max_iter} productive rounds plus one verification round "
-            f"({max_iter + 1} total) — incomplete closure would silently "
-            f"drop ancestors")
-    return seen
+
+    def climb(new: DataFrame, _acc: DataFrame) -> DataFrame:
+        return (up.join(new.withColumnRenamed("id", "child"), "child")
+                .select(F.col("parent").alias("id")).distinct())
+
+    try:
+        return fixpoint(seeds.select("id").distinct(), climb, ["id"],
+                        "dependency_closure", max_iter)
+    finally:
+        up.unpersist()
 
 
 # Predicates the reference treats as hierarchical for root finding and
@@ -694,33 +655,25 @@ def trimmer_term_list_extract(terms: DataFrame, rels: DataFrame,
         (dangling relationship endpoints are skipped, :624 membership
         guard).
 
-    Frontier BFS to fixpoint, one equi-join per round; localCheckpoint
-    truncates lineage like dependency_closure. At 100 TB the edge table
-    shuffles once on src and is reused every round."""
+    Frontier BFS by fixpoint, one equi-join per round; an incomplete
+    transitive closure would silently drop dependency terms, so
+    non-convergence is a hard error. At 100 TB the edge table shuffles
+    once on src and is reused every round."""
     edges = _bidirectional_edges(rels).persist()
     term_ids = terms.select("id")
-    seen = (seeds.select("id").distinct()
-            .join(terms.filter(~F.col("is_obsolete")).select("id"),
-                  "id", "left_semi"))
-    frontier = seen
-    done = False
-    for _ in range(max_iter + 1):  # +1 verification round, see bfs_depths
-        nxt = (edges.join(frontier.withColumnRenamed("id", "src"), "src")
-               .select(F.col("dst").alias("id")).distinct()
-               .join(term_ids, "id", "left_semi")
-               .join(seen, "id", "left_anti")
-               .localCheckpoint(eager=True))
-        if nxt.isEmpty():
-            done = True
-            break
-        seen = seen.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    edges.unpersist()
-    if not done:
-        raise RuntimeError(
-            f"trimmer_term_list_extract frontier still active after "
-            f"{max_iter + 1} rounds — incomplete transitive closure would "
-            f"silently drop dependency terms")
+
+    def walk(new: DataFrame, _acc: DataFrame) -> DataFrame:
+        return (edges.join(new.withColumnRenamed("id", "src"), "src")
+                .select(F.col("dst").alias("id")).distinct()
+                .join(term_ids, "id", "left_semi"))
+
+    try:
+        seen = fixpoint(seeds.select("id").distinct()
+                        .join(terms.filter(~F.col("is_obsolete"))
+                              .select("id"), "id", "left_semi"),
+                        walk, ["id"], "trimmer_term_list_extract", max_iter)
+    finally:
+        edges.unpersist()
     is_seed = F.col("id").isin(
         [r["id"] for r in seeds.select("id").distinct().collect()])
     return (terms.join(seen, "id", "left_semi")
@@ -1187,8 +1140,9 @@ def shortest_path_counts(terms: DataFrame, rels: DataFrame,
     where depth(child) == depth(parent) + 1, seed roots with 1, then
     sigma(child) = sum of sigma(parent) one level at a time — the
     bfs_depths frontier loop with sum instead of min, O(max depth)
-    rounds, every round an equi-join + map-side-combinable sum.
-    Same +1-verification-round truncation guard as bfs_depths."""
+    rounds, every round an equi-join + map-side-combinable sum, run by
+    fixpoint (a silent cap would under-count paths). Its anti-join on
+    id removes nothing: the level graph puts each id at one depth."""
     depths = bfs_depths(terms, rels, max_iter).localCheckpoint(eager=True)
     down = (rels.filter(F.col("predicate") == "is_a")
             .select(F.col("object").alias("parent"),
@@ -1202,27 +1156,14 @@ def shortest_path_counts(terms: DataFrame, rels: DataFrame,
           .filter(F.col("dc") == F.col("dp") + 1)
           .select("parent", "child")
           .localCheckpoint(eager=True))
-    sigma = (depths.filter(F.col("depth") == 0)
-             .select("id", F.lit(1).cast("bigint").alias("n_paths")))
-    out = sigma
-    frontier = sigma
-    done = False
-    for _ in range(max_iter + 1):
-        nxt = (lv.join(frontier.withColumnRenamed("id", "parent"),
-                       "parent")
-               .groupBy(F.col("child").alias("id"))
-               .agg(F.sum("n_paths").cast("bigint").alias("n_paths"))
-               .localCheckpoint(eager=True))
-        if nxt.isEmpty():
-            done = True
-            break
-        out = out.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    if not done:
-        raise RuntimeError(
-            f"shortest_path_counts still propagating after "
-            f"max_iter={max_iter} rounds — hierarchy deeper than "
-            f"max_iter (a silent cap would under-count paths)")
+    out = fixpoint(
+        depths.filter(F.col("depth") == 0)
+        .select("id", F.lit(1).cast("bigint").alias("n_paths")),
+        lambda new, _acc: (
+            lv.join(new.withColumnRenamed("id", "parent"), "parent")
+            .groupBy(F.col("child").alias("id"))
+            .agg(F.sum("n_paths").cast("bigint").alias("n_paths"))),
+        ["id"], "shortest_path_counts", max_iter)
     return out.join(depths, "id").select("id", "depth", "n_paths")
 
 
@@ -1250,42 +1191,22 @@ def disjointness_audit(edges, decls=DISJOINT_ROOT_DECLS,
     (triple_semantics_check validates single edges; this one needs the
     CLOSURE). Emits (node, root_a, root_b) per violated declaration.
 
-    Reflexive-transitive ancestor closure (node, anc) built by
-    frontier join to fixpoint (localCheckpoint per round,
-    canonicalize.py:33's rule; non-convergence raises — an is_a cycle
-    is itself an inconsistency, and scc_labels names it), then the
-    per-node ancestor pair set joins the declaration list. Closure
-    state is O(nodes x depth) — the ontology-hierarchy bound, not the
-    corpus; the decls join is dimension-sized."""
-    from pyspark.sql import functions as F
-    edges = (edges.select(F.col("src").alias("child"),
-                          F.col("dst").alias("parent"))
-             .distinct().localCheckpoint(eager=True))
-    nodes = (edges.select(F.col("child").alias("node"))
-             .unionByName(edges.select(F.col("parent").alias("node")))
+    Reflexive-transitive ancestor closure (node, anc), the one
+    ancestor_closure builds (by fixpoint; a hierarchy deeper than
+    max_rounds raises), then the per-node ancestor pair set joins the
+    declaration list. Closure state is O(nodes x depth) — the
+    ontology-hierarchy bound, not the corpus; the decls join is
+    dimension-sized."""
+    up = edges.select(F.col("src").alias("child"),
+                      F.col("dst").alias("parent"))
+    nodes = (up.select(F.col("child").alias("id"))
+             .unionByName(up.select(F.col("parent").alias("id")))
              .distinct())
-    anc = (nodes.select("node", F.col("node").alias("anc"))
-           .localCheckpoint(eager=True))
-    n_anc = anc.count()
-    for _ in range(max_rounds):
-        stepped = (anc.join(edges, anc["anc"] == edges["child"])
-                   .select("node", F.col("parent").alias("anc")))
-        nxt = (anc.unionByName(stepped).distinct()
-               .localCheckpoint(eager=True))
-        n_nxt = nxt.count()
-        anc = nxt
-        if n_nxt == n_anc:
-            break
-        n_anc = n_nxt
-    else:
-        raise RuntimeError(
-            f"disjointness_audit: ancestor closure open after "
-            f"{max_rounds} rounds — is_a cycle (see scc_labels) or "
-            "deeper hierarchy than max_rounds")
+    anc = _ancestors(nodes, up, "disjointness_audit", max_rounds)
     d = edges.sparkSession.createDataFrame(
         list(decls), "root_a string, root_b string")
-    x = anc.select("node", F.col("anc").alias("root_a"))
-    y = anc.select(F.col("node").alias("n2"), F.col("anc").alias("anc_b"))
+    x = anc.select(F.col("id").alias("node"), F.col("anc").alias("root_a"))
+    y = anc.select(F.col("id").alias("n2"), F.col("anc").alias("anc_b"))
     return (x.join(F.broadcast(d), "root_a")
             .join(y, (F.col("node") == F.col("n2"))
                   & (F.col("anc_b") == F.col("root_b")))

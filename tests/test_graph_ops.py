@@ -3,6 +3,8 @@ cycles; canonical-rotation uniqueness."""
 
 from __future__ import annotations
 
+import pytest
+
 from cspirit_ontology_information_extraction_opus4plan_spark.operators import (
     ontology_algebra as OA,
 )
@@ -43,6 +45,38 @@ def test_has_directed_cycle_raises_when_peeling_runs_out(spark):
     ring = spark.createDataFrame(chain + [(f"K:{n}", "K:0")],
                                  "subject string, object string")
     assert OA._has_directed_cycle(ring).first()[0] == 1
+
+
+@pytest.mark.parametrize("op", ["dependency_closure", "ancestor_closure",
+                                "bfs_depths"])
+def test_fixpoint_verification_round_boundary(spark, op):
+    """fixpoint runs max_iter productive rounds plus one verification
+    round: with max_iter=3 a 3-edge is_a chain closes completely, and a
+    4-edge chain raises, naming the operator and max_iter."""
+    def run(n):
+        ids = [f"C:{i}" for i in range(n + 1)]
+        terms = spark.createDataFrame([(i, i, "C") for i in ids],
+                                      "id string, name string, "
+                                      "ontology_id string")
+        rels = spark.createDataFrame(
+            [(ids[i], "is_a", ids[i + 1]) for i in range(n)],
+            "subject string, predicate string, object string")
+        if op == "dependency_closure":
+            seeds = spark.createDataFrame([("C:0",)], "id string")
+            return ({r.id for r in OA.dependency_closure(
+                terms, rels, seeds, max_iter=3).collect()}, set(ids))
+        if op == "ancestor_closure":
+            return ({tuple(r) for r in OA.ancestor_closure(
+                terms, rels, max_iter=3).collect()},
+                {(a, b) for i, a in enumerate(ids) for b in ids[i:]})
+        return ({tuple(r) for r in OA.bfs_depths(
+            terms, rels, max_iter=3).collect()},
+            {(x, n - i) for i, x in enumerate(ids)})
+
+    got, want = run(3)
+    assert got == want
+    with pytest.raises(RuntimeError, match=rf"{op} .*max_iter=3 "):
+        run(4)
 
 
 # --- triple-store maintenance ops (round 3) ---------------------------------

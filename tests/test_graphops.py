@@ -324,6 +324,18 @@ def test_kg_entailment_node_bound_is_per_family(monkeypatch, spark):
     assert ("x", "part_of", "z", "transitive") in want[0]
 
 
+_HOSTILE = [
+    ("a", "part_of", "b"), ("a", "part_of", "b"),    # duplicates
+    ("c", "has_part", "b"), ("b", "has_part", "a"),  # inverse side
+    ("u", "is_a", "v"), ("v", "is_a", "w"), ("w", "is_a", "u"),
+    ("n", "is_a", None), (None, "is_a", "u"),        # null endpoints
+    (None, "part_of", None), (None, "part_of", None),
+    ("x", None, "y"), (None, None, None),            # null predicate
+    ("p", "regulates", "q"), ("q", "regulated_by", "p"),
+    ("r", "catalyzes", None),
+]
+
+
 def test_kg_entailment_hostile_store_on_both_paths(spark):
     """Duplicate rows, null endpoints, a null predicate, an is_a cycle
     and both inverse directions: the driver solve and the distributed
@@ -331,16 +343,7 @@ def test_kg_entailment_hostile_store_on_both_paths(spark):
     rule NOT NULL."""
     from collections import Counter
 
-    t = _pt(spark, [
-        ("a", "part_of", "b"), ("a", "part_of", "b"),    # duplicates
-        ("c", "has_part", "b"), ("b", "has_part", "a"),  # inverse side
-        ("u", "is_a", "v"), ("v", "is_a", "w"), ("w", "is_a", "u"),
-        ("n", "is_a", None), (None, "is_a", "u"),        # null endpoints
-        (None, "part_of", None), (None, "part_of", None),
-        ("x", None, "y"), (None, None, None),            # null predicate
-        ("p", "regulates", "q"), ("q", "regulated_by", "p"),
-        ("r", "catalyzes", None),
-    ])
+    t = _pt(spark, _HOSTILE)
     got = {}
     for path in kernel_paths():
         df = graphops.kg_entailment(t)
@@ -357,20 +360,75 @@ def test_kg_entailment_hostile_store_on_both_paths(spark):
     assert ("b", "has_part", "a", "inverse") not in rows  # asserted
 
 
+def _maintained(spark, store, removed):
+    """(got, want) Counters for both maintenance contracts, store H and
+    removed rows R (compared with None == None): retract(H, R) against
+    kg_entailment(H - R), and delta(H - R, R) against kg_entailment(H)
+    minus kg_entailment(H - R) minus the rows asserted in H."""
+    from collections import Counter
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    kept = [t for t in store if t not in removed]
+    full, rest = (rows(graphops.kg_entailment(_pt(spark, s)))
+                  for s in (store, kept))
+    delta_want = Counter({r: n for r, n in (full - rest).items()
+                          if r[:3] not in set(store)})
+    retract = rows(graphops.kg_entailment_retract(
+        _pt(spark, store), _pt(spark, removed), max_iter=6))
+    delta = rows(graphops.kg_entailment_delta(
+        _pt(spark, kept), _pt(spark, removed), max_iter=6))
+    return (retract, delta), (rest, delta_want)
+
+
+def test_entailment_maintenance_with_null_endpoints(spark):
+    """A null-subject edge into an is_a cycle, and one into a chain:
+    kg_entailment_delta and kg_entailment_retract converge and meet
+    their contracts on both kernel paths. Each case is (store,
+    removed); delta adds the removed rows back to the rest. A null
+    endpoint composes nothing: (NULL is_a u), (u is_a w) entail no
+    (NULL is_a w)."""
+    cycle = [("u", "is_a", "v"), ("v", "is_a", "u"), (None, "is_a", "u")]
+    cases = [(cycle + [("v", "is_a", "w")], [("v", "is_a", "w")]),
+             (cycle, [("v", "is_a", "u")]),
+             ([(None, "is_a", "u"), ("u", "is_a", "w")],
+              [("u", "is_a", "w")])]
+    for _path in kernel_paths():
+        assert len(graphops.kg_entailment(_pt(spark, cycle)).collect()) == 3
+        for store, removed in cases:
+            got, want = _maintained(spark, store, removed)
+            assert got == want, (store, removed)
+
+
+def test_entailment_maintenance_on_hostile_store(spark):
+    """On the hostile store (duplicates, null endpoints and predicate,
+    an is_a cycle, both inverse directions), removing (v is_a w) and
+    (a part_of b): retract equals the full recompute and delta emits
+    exactly the difference, on both kernel paths."""
+    removed = [("v", "is_a", "w"), ("a", "part_of", "b")]
+    for _path in kernel_paths():
+        (retract, delta), (rest, delta_want) = _maintained(
+            spark, _HOSTILE, removed)
+        assert retract == rest and sum(rest.values()) == 13
+        assert delta == delta_want and sum(delta_want.values()) == 5
+
+
 def test_entailment_delta_emits_only_delta_consequences(spark):
     old = _pt(spark, [("a", "part_of", "b")])
     delta = _pt(spark, [("b", "part_of", "c")])
-    out = {(r.subject, r.predicate, r.object, r.rule)
-           for r in graphops.kg_entailment_delta(old, delta).collect()}
-    assert out == {
-        ("c", "has_part", "b", "inverse"),
-        # the 1-step flip is ALSO derivable transitively (the closure
-        # contains its base edge, re-emitted reversed) — one row per
-        # rule, same as kg_entailment's provenance contract
-        ("c", "has_part", "b", "transitive"),
-        ("a", "part_of", "c", "transitive"),
-        ("c", "has_part", "a", "transitive"),
-    }  # (b has_part a) is an OLD consequence and must not reappear
+    for _path in kernel_paths():
+        out = {(r.subject, r.predicate, r.object, r.rule)
+               for r in graphops.kg_entailment_delta(old, delta).collect()}
+        assert out == {
+            ("c", "has_part", "b", "inverse"),
+            # the 1-step flip is ALSO derivable transitively (the closure
+            # contains its base edge, re-emitted reversed) — one row per
+            # rule, same as kg_entailment's provenance contract
+            ("c", "has_part", "b", "transitive"),
+            ("a", "part_of", "c", "transitive"),
+            ("c", "has_part", "a", "transitive"),
+        }  # (b has_part a) is an OLD consequence and must not reappear
 
 
 def test_entailment_delta_composes_multiple_delta_segments(spark):
@@ -379,12 +437,13 @@ def test_entailment_delta_composes_multiple_delta_segments(spark):
     # must compose delta-seeded segments, not just extend once
     old = _pt(spark, [("b", "part_of", "c")])
     delta = _pt(spark, [("a", "part_of", "b"), ("c", "part_of", "d")])
-    out = {(r.subject, r.predicate, r.object, r.rule)
-           for r in graphops.kg_entailment_delta(old, delta).collect()}
-    assert ("a", "part_of", "d", "transitive") in out
-    assert ("a", "part_of", "c", "transitive") in out
-    assert ("b", "part_of", "d", "transitive") in out
-    assert ("d", "has_part", "a", "transitive") in out
+    for _path in kernel_paths():
+        out = {(r.subject, r.predicate, r.object, r.rule)
+               for r in graphops.kg_entailment_delta(old, delta).collect()}
+        assert ("a", "part_of", "d", "transitive") in out
+        assert ("a", "part_of", "c", "transitive") in out
+        assert ("b", "part_of", "d", "transitive") in out
+        assert ("d", "has_part", "a", "transitive") in out
 
 
 def test_construct_colocated_shared_object_pairs(spark):
@@ -503,13 +562,14 @@ def test_entailment_retract_rederives_surviving_paths(spark):
         [t("a", "b"), t("b", "c"), t("a", "d"), t("d", "c")],
         _triples(spark, []).schema)
     removed = spark.createDataFrame([t("b", "c")], old.schema)
-    got = {(r["subject"], r["predicate"], r["object"], r["rule"])
-           for r in graphops.kg_entailment_retract(old, removed).collect()}
-    assert ("a", "is_a", "c", "transitive") in got   # rederived
-    assert all(s != "b" or o != "c" for s, _, o, _ in got)  # gone
-    # exact parity with the full recompute over surviving edges
     surviving = old.where("NOT (subject = 'b' AND object = 'c')")
     for _path in kernel_paths():
+        got = {(r["subject"], r["predicate"], r["object"], r["rule"])
+               for r in graphops.kg_entailment_retract(old, removed)
+               .collect()}
+        assert ("a", "is_a", "c", "transitive") in got   # rederived
+        assert all(s != "b" or o != "c" for s, _, o, _ in got)  # gone
+        # exact parity with the full recompute over surviving edges
         want = {(r["subject"], r["predicate"], r["object"], r["rule"])
                 for r in graphops.kg_entailment(surviving).collect()}
         assert got == want

@@ -64,12 +64,13 @@ def test_query_matches_oracle(name, spark, duck):
     _check(name, spark, duck)
 
 
-# queries whose answer runs through connected_components or kg_entailment
+# queries whose answer runs through connected_components or the
+# entailment closures (kg_entailment, its delta and its retraction)
 GRAPH_KERNEL_QUERIES = [
     "canonical_entities", "canonical_entities_delta",
     "canonical_entities_retract", "canonical_component_sizes",
     "canonical_triples", "doc_neardup_resolve", "kg_entailment",
-    "kg_rule_mining"]
+    "kg_entailment_delta", "kg_entailment_retract", "kg_rule_mining"]
 
 
 @pytest.mark.parametrize("name", GRAPH_KERNEL_QUERIES)
