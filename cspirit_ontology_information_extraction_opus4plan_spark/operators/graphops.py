@@ -1206,6 +1206,16 @@ def kg_entailment_delta(old: DataFrame, delta: DataFrame,
     return cand.join(supp, _KEY3, "left_anti").distinct()
 
 
+def _null_safe(left: DataFrame, right: DataFrame, keys: list[str],
+               how: str) -> DataFrame:
+    """left semi- or anti-joined (`how`) to right on `keys`, with
+    None == None: a retracted row with a null endpoint must still find
+    itself in the store and in the closure."""
+    lt, rt = left.alias("_l"), right.alias("_r")
+    return lt.join(rt, [F.col(f"_l.{k}").eqNullSafe(F.col(f"_r.{k}"))
+                        for k in keys], how)
+
+
 def kg_entailment_retract(old: DataFrame, removed: DataFrame,
                           max_iter: int = 32) -> DataFrame:
     """Delete/re-derive (DRed) maintenance of the entailment
@@ -1242,20 +1252,21 @@ def kg_entailment_retract(old: DataFrame, removed: DataFrame,
     kg_entailment (inferred rows only, rule provenance, asserted rows
     suppressed)."""
     pe = old.select(*_KEY3).distinct().localCheckpoint(eager=True)
-    rm = removed.select(*_KEY3).distinct().join(pe, _KEY3, "left_semi")
-    pk = pe.join(rm, _KEY3, "left_anti").localCheckpoint(eager=True)
+    rm = _null_safe(removed.select(*_KEY3).distinct(), pe, _KEY3,
+                    "left_semi")
+    pk = _null_safe(pe, rm, _KEY3, "left_anti").localCheckpoint(eager=True)
     c0 = _closures({p: _canon(pe, p, q) for p, q in _FAMILIES.items()},
                    "kg_entailment_retract old", max_iter)
     parts = [_inverse_rows(pk, "inverse")]
     for p, q in _FAMILIES.items():
         b1 = _canon(pk, p, q).localCheckpoint(eager=True)
-        dp = _canon(pe, p, q).join(b1, _PAIR, "left_anti")
+        dp = _null_safe(_canon(pe, p, q), b1, _PAIR, "left_anti")
         # overdelete: suspects that can factor through a deleted edge
         left = dp.unionByName(_compose(c0[p], dp)).distinct()
-        o = (left.unionByName(_compose(left, c0[p])).distinct()
-             .join(c0[p], _PAIR, "left_semi")
-             .localCheckpoint(eager=True))
-        kept = c0[p].join(o, _PAIR, "left_anti").localCheckpoint(eager=True)
+        o = _null_safe(left.unionByName(_compose(left, c0[p])).distinct(),
+                       c0[p], _PAIR, "left_semi").localCheckpoint(eager=True)
+        kept = _null_safe(c0[p], o, _PAIR, "left_anti") \
+            .localCheckpoint(eager=True)
         # rederive inside the suspect set: endpoint-anchored DOUBLING.
         # A surviving suspect path splits at ANY midpoint into two
         # closure pairs, each Kept or an already-rederived suspect, so
@@ -1282,7 +1293,7 @@ def kg_entailment_retract(old: DataFrame, removed: DataFrame,
                     .join(o, _PAIR, "left_semi"))
 
         acc = fixpoint(
-            b1.join(o, _PAIR, "left_semi").localCheckpoint(eager=True),
+            _null_safe(b1, o, _PAIR, "left_semi").localCheckpoint(eager=True),
             rederive, _PAIR, f"kg_entailment_retract rederivation of {p!r}",
             max_iter)
         parts.append(_both_ways(kept.unionByName(acc), p, q, "transitive"))

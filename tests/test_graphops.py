@@ -401,6 +401,32 @@ def test_entailment_maintenance_with_null_endpoints(spark):
             assert got == want, (store, removed)
 
 
+def test_entailment_retract_of_null_endpoint_rows(spark):
+    """Removed rows match the store with None == None: retracting a row
+    with a null endpoint (subject or object, plain or through an inverse
+    predicate) gives kg_entailment of the store without it, on both
+    kernel paths, and a null-endpoint row that stays is kept."""
+    from collections import Counter
+
+    cases = [
+        ([(None, "is_a", "u"), ("u", "is_a", "w")], [(None, "is_a", "u")]),
+        ([("u", "is_a", None), ("w", "is_a", "u")], [("u", "is_a", None)]),
+        ([(None, "has_part", "u"), ("u", "part_of", "w")],
+         [(None, "has_part", "u")]),
+        ([(None, "is_a", "u"), ("u", "is_a", "w"), ("u", "is_a", "x")],
+         [("u", "is_a", "x")]),
+    ]
+    for _path in kernel_paths():
+        for store, removed in cases:
+            kept = [t for t in store if t not in removed]
+            want = Counter(tuple(r) for r in graphops.kg_entailment(
+                _pt(spark, kept)).collect())
+            got = Counter(tuple(r) for r in graphops.kg_entailment_retract(
+                _pt(spark, store), _pt(spark, removed), max_iter=6)
+                .collect())
+            assert got == want, (_path, store, removed)
+
+
 def test_entailment_maintenance_on_hostile_store(spark):
     """On the hostile store (duplicates, null endpoints and predicate,
     an is_a cycle, both inverse directions), removing (v is_a w) and

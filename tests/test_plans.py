@@ -1007,8 +1007,9 @@ def test_constant_tables_are_local_relations(spark):
         assert "ExistingRDD" not in plan, build.__name__
 
 
-def _job_count(spark, action) -> int:
-    """Spark jobs `action()` runs, counted by its own job group."""
+def _job_ids(spark, action) -> list[int]:
+    """Ids of the Spark jobs `action()` runs, read by its own job group,
+    in submission order."""
     import uuid
 
     sc = spark.sparkContext
@@ -1019,7 +1020,12 @@ def _job_count(spark, action) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _job_count(spark, action) -> int:
+    """Spark jobs `action()` runs, counted by its own job group."""
+    return len(_job_ids(spark, action))
 
 
 def test_canonical_mapping_runs_one_job(spark):
@@ -1049,3 +1055,30 @@ def test_small_store_entailment_runs_one_job(spark):
          ("p", "regulates", "q")],
         "subject string, predicate string, object string")
     assert _job_count(spark, lambda: kg_entailment(store).collect()) <= 1
+
+
+def test_materialize_writes_with_at_most_one_task_per_core(spark, sf_dir,
+                                                           tmp_path):
+    """An 8-partition materialize_triples run on the 4-core session is
+    one write job (the last of its group, after the broadcast and map
+    stage jobs), and no stage of the group runs more tasks than
+    defaultParallelism: the write packs partitions into one task per
+    core instead of one task per partition."""
+    from cspirit_ontology_information_extraction_opus4plan_spark.plans.checkpointing import (  # noqa: E501
+        materialize_triples,
+    )
+
+    triples = api.triples_df(spark, sf_dir)
+    jobs = _job_ids(spark, lambda: materialize_triples(
+        spark, triples, str(tmp_path / "out"), sf_dir=sf_dir, n_parts=8))
+    tracker = spark.sparkContext.statusTracker()
+    cores = spark.sparkContext.defaultParallelism
+    assert cores < 8
+    # two broadcast jobs, the map stage and the one write job
+    assert len(jobs) <= 4, jobs
+    stages = {j: [tracker.getStageInfo(s)
+                  for s in tracker.getJobInfo(j).stageIds] for j in jobs}
+    write = stages[jobs[-1]]
+    assert max(st.numTasks for st in write) == cores, write
+    assert all(st.numTasks <= cores
+               for job in stages.values() for st in job), stages

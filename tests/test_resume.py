@@ -79,6 +79,43 @@ def test_kill_and_resume_identical(spark, sf_dir, tmp_path):
     assert s4["written"] == []
 
 
+def _part_files(out):
+    """{part_id: [parquet file names]} of the part_id= directories."""
+    return {int(d.split("=", 1)[1]): sorted(
+                f for f in os.listdir(os.path.join(out, d))
+                if f.endswith(".parquet"))
+            for d in os.listdir(out) if d.startswith("part_id=")}
+
+
+def test_resume_write_layout(spark, sf_dir, tmp_path):
+    """A run of the odd partitions, then a resume: the final rows equal a
+    single-shot run, every part_id= directory holds one parquet file,
+    and the first run's four files come from four distinct writer tasks
+    (the part-NNNNN prefix), so no placement piles the pending partitions
+    into one task."""
+    triples = api.triples_df(spark, sf_dir)
+    full = str(tmp_path / "full")
+    CK.materialize_triples(spark, triples, full, sf_dir=sf_dir,
+                           n_parts=N_PARTS)
+
+    out = str(tmp_path / "resumed")
+    odd = [1, 3, 5, 7]
+    CK.materialize_triples(spark, triples, out, sf_dir=sf_dir,
+                           n_parts=N_PARTS, only_parts=odd)
+    first = _part_files(out)
+    assert sorted(first) == odd
+    assert all(len(names) == 1 for names in first.values()), first
+    assert len({names[0][:len("part-00000")]
+                for names in first.values()}) == len(odd), first
+
+    CK.materialize_triples(spark, triples, out, sf_dir=sf_dir,
+                           n_parts=N_PARTS)
+    files = _part_files(out)
+    assert sorted(files) == list(range(N_PARTS))
+    assert all(len(names) == 1 for names in files.values()), files
+    assert _rows(spark, out) == _rows(spark, full)
+
+
 def test_zero_row_input_publishes_every_marker(spark, sf_dir, tmp_path):
     """An input with no rows writes no partition files, yet the run is
     complete: every marker is published with n_rows 0."""

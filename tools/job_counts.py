@@ -1,10 +1,13 @@
-"""Spark jobs and wall time per layer call, for one extraction build pass
-and one graph pass on a perfbench input.
+"""Spark jobs, tasks and wall time per layer call, for one extraction
+build pass and one graph pass on a perfbench input.
 
-Each layer call runs under its own Spark job group; the job count is read
-back from the status tracker by group. Passes repeat in one session after
-a warm-up pass; the table shows, per call, the job count of the last pass
-and the median wall time. Run from the root of a checkout:
+Each layer call runs under its own Spark job group; the job and task
+counts are read back from the status tracker by group (tasks: the sum of
+``numTasks`` over the stages of the group's jobs; a stage that AQE ran as
+its own job and a later job lists again as skipped counts in both).
+Passes repeat in one session after a warm-up pass; the table shows, per
+call, the job and task counts of the last pass and the median wall
+time. Run from the root of a checkout:
 
     python tools/job_counts.py                    # seed 1, 3 passes
     python tools/job_counts.py --seed 2 --passes 5 --only graph
@@ -57,11 +60,12 @@ N_PARTS = 16  # as the benchmark's build pass
 
 
 class JobCounter:
-    """Runs calls under fresh job groups; keeps (jobs, seconds) per name."""
+    """Runs calls under fresh job groups; keeps (jobs, tasks, seconds) per
+    name."""
 
     def __init__(self, sc):
         self.sc = sc
-        self.calls: dict[str, list[tuple[int, float]]] = {}
+        self.calls: dict[str, list[tuple[int, int, float]]] = {}
 
     def __call__(self, name: str, fn):
         group = f"job-counts-{uuid.uuid4().hex}"
@@ -73,8 +77,12 @@ class JobCounter:
             dt = time.perf_counter() - t0
             self.sc.setLocalProperty("spark.jobGroup.id", None)
             self.sc.setLocalProperty("spark.job.description", None)
-            jobs = len(self.sc.statusTracker().getJobIdsForGroup(group))
-            self.calls.setdefault(name, []).append((jobs, dt))
+            tracker = self.sc.statusTracker()
+            jobs = tracker.getJobIdsForGroup(group)
+            stages = [tracker.getStageInfo(s) for j in jobs
+                      for s in tracker.getJobInfo(j).stageIds]
+            tasks = sum(st.numTasks for st in stages if st is not None)
+            self.calls.setdefault(name, []).append((len(jobs), tasks, dt))
 
 
 def build_pass(spark, count: JobCounter, sf: str, out: str) -> None:
@@ -124,15 +132,17 @@ def main(argv=None) -> int:
                 t0 = time.perf_counter()
                 run(spark, count, dirs[kind], out)
                 wall = time.perf_counter() - t0
-                jobs = sum(c[-1][0] for n, c in count.calls.items()
-                           if n != "(pass)")
-                count.calls.setdefault("(pass)", []).append((jobs, wall))
+                last = [c[-1] for n, c in count.calls.items()
+                        if n != "(pass)"]
+                count.calls.setdefault("(pass)", []).append(
+                    (sum(c[0] for c in last), sum(c[1] for c in last), wall))
                 shutil.rmtree(out, ignore_errors=True)
             print(f"\n{kind} pass, seed {args.seed}, {dirs[kind]}")
-            print(f"  {'call':<30} {'jobs':>5} {'median s':>9}  all s")
+            print(f"  {'call':<30} {'jobs':>5} {'tasks':>6} {'median s':>9}"
+                  "  all s")
             for name, calls in count.calls.items():
-                secs = [c[1] for c in calls]
-                print(f"  {name:<30} {calls[-1][0]:>5} "
+                secs = [c[2] for c in calls]
+                print(f"  {name:<30} {calls[-1][0]:>5} {calls[-1][1]:>6} "
                       f"{statistics.median(secs):>9.3f}  "
                       + " ".join(f"{s:.3f}" for s in secs))
     finally:
