@@ -33,6 +33,21 @@ Per-doc recipe (mirrors FIXTURES.md §1; reference analogs cited inline):
   span 4: kind='reference' (doc_id%5==1) — citation string with DOI matching
           the reference's citation regexes (parsers/__init__.py:1844-1874)
 
+Surfaces come from one lookup. Every surface index is a function of
+r = pmod(doc_id, N_SURF): subject r, object (7r+3) % N, figure (r+1) % N,
+table (r+2) % N, reference (r+4) % N. So the driver builds one constant
+table (r, s_subj, s_obj, s_fig, s_tab, s_ref) and each document joins it
+once (a broadcast hash join on a plain projected key); no index is ever
+computed from doc_id times a constant, so no id overflows.
+
+The text spans are always pos 0 and 1: only the spans after them are
+conditional. :func:`text_spans` therefore emits those two rows per
+document with `stack`, from the same expression constants as
+:func:`interleave_docs` but with no span array and no caption; the
+triples path reads nothing else. `tests/test_pipeline_oracle.py::
+test_text_spans_are_the_text_rows_of_the_span_table` holds the two
+equal.
+
 Offsets are cumulative character positions (strictly increasing); array
 order == document order — the per-row invariant is span-sequence equality
 on (kind, text, media_ref, order) (reference preserves document order in
@@ -52,8 +67,8 @@ from .ontology_data import PREDICATE_PHRASES, surfaces
 from .session import local_df
 
 __all__ = ["read_documents", "documents_interleaved", "interleave_docs",
-           "spans_exploded", "explode_spans", "corpus_ctes", "spark_sql_str",
-           "N_SURF"]
+           "text_spans", "spans_exploded", "explode_spans", "corpus_ctes",
+           "spark_sql_str", "N_SURF"]
 
 N_SURF = len(surfaces())
 
@@ -82,14 +97,8 @@ _DOC_KEYS = (
     "IF(doc_id IS NULL, NULL, format_string('DOC:%06d', doc_id)) AS doc_id",
     "text",
     "CAST(n_chars AS INT) AS nc",
-    f"CAST(pmod(doc_id, {N_SURF}) AS INT) AS i_subj",
-    f"CAST(pmod(doc_id * 7 + 3, {N_SURF}) AS INT) AS i_obj",
-    f"CAST(pmod(doc_id + 1, {N_SURF}) AS INT) AS i_fig",
-    f"CAST(pmod(doc_id + 2, {N_SURF}) AS INT) AS i_tab",
-    f"CAST(pmod(doc_id + 4, {N_SURF}) AS INT) AS i_ref",
+    f"CAST(pmod(doc_id, {N_SURF}) AS INT) AS r",
 )
-_SURF_JOINS = tuple((key, "s_" + key[2:]) for key in
-                    ("i_subj", "i_obj", "i_fig", "i_tab", "i_ref"))
 
 
 def _span(kind: str, text: str, media: str, off: str,
@@ -99,27 +108,35 @@ def _span(kind: str, text: str, media: str, off: str,
     return span if when is None else f"CASE WHEN {when} THEN {span} END"
 
 
+# (kind, text, media_ref, offset) of the unconditional spans, pos 0 and 1
+_TEXT_SPANS = (("text", "text", "''", "0"), ("text", "sentence", "''", "off1"))
 _MEDIA = "concat('media/DOC', CAST(d AS STRING), '/{}')"
 _SPANS = ", ".join((
-    _span("text", "text", "''", "0"),
-    _span("text", "sentence", "''", "off1"),
+    *(_span(*span) for span in _TEXT_SPANS),
     _span("figure", "figcap", _MEDIA.format("fig1.png"), "off2",
           "pmod(d, 3) = 0"),
     _span("table", "tabcap", _MEDIA.format("tab1.parquet"), "off3",
           "pmod(d, 4) = 0"),
     _span("reference", "refcit", "''", "off4", "pmod(d, 5) = 1"),
 ))
+_TEXT_STACK = "stack({}, {}) AS (pos, kind, text)".format(
+    len(_TEXT_SPANS), ", ".join(f"{pos}, '{span[0]}', {span[1]}"
+                                for pos, span in enumerate(_TEXT_SPANS)))
 
 # One select in dependency order: each alias may use the ones before it
 # (lateral column aliases), so every generated text and offset is
-# computed once, as the withColumn chain it replaces did.
-_SPAN_EXPRS = (
+# computed once. The text part is all that text_spans reads; the media
+# part adds the captions, the offsets and the span array.
+_TEXT_EXPRS = (
     "doc_id",
+    "text",
     "CASE WHEN pmod(d, 5) = 0 THEN 'glucose' ELSE s_subj END AS subj",
     "CASE pmod(d, 7) " + " ".join(
         f"WHEN {i} THEN {spark_sql_str(ph)}"
         for i, (ph, _) in enumerate(PREDICATE_PHRASES)) + " END AS phrase",
     "concat(subj, ' ', phrase, ' ', s_obj, '.') AS sentence",
+)
+_MEDIA_EXPRS = (
     "concat('figure 1. microscopy of ', s_fig, ' distribution in sample ', "
     "CAST(d AS STRING), '.') AS figcap",
     "concat('table 1. quantification of ', s_tab, ' levels across ', "
@@ -139,7 +156,19 @@ _SPAN_EXPRS = (
 
 
 def _surf_df(spark: SparkSession) -> DataFrame:
-    return local_df(spark, list(enumerate(surfaces())), "idx int, s string")
+    """The one surface lookup: every surface a document uses, keyed by
+    r = pmod(doc_id, N_SURF)."""
+    s, n = surfaces(), N_SURF
+    return local_df(spark, [(r, s[r], s[(7 * r + 3) % n], s[(r + 1) % n],
+                             s[(r + 2) % n], s[(r + 4) % n])
+                            for r in range(n)],
+                    "r int, s_subj string, s_obj string, s_fig string, "
+                    "s_tab string, s_ref string")
+
+
+def _with_surfaces(docs: DataFrame) -> DataFrame:
+    return docs.selectExpr(*_DOC_KEYS).join(
+        F.broadcast(_surf_df(docs.sparkSession)), "r")
 
 
 def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,8 +179,8 @@ def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def documents_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The engine's canonical input table (nested spans), synthesized from
-    the flat driver corpus. The surface lookup is a broadcast hash join
-    against the tiny (idx, surface) dimension — the same shape a real
+    the flat driver corpus. The surface lookup is one broadcast hash join
+    against the tiny constant table keyed by r — the same shape a real
     deployment would use for any per-row dictionary substitution (never an
     800-literal in-plan array, which blows up the expression tree)."""
     return interleave_docs(read_documents(spark, sf_dir))
@@ -161,12 +190,16 @@ def interleave_docs(docs: DataFrame) -> DataFrame:
     """Span synthesis over an already-loaded flat documents DataFrame —
     the entry point the Structured Streaming path shares (foreachBatch
     hands us a batch DataFrame, not a directory)."""
-    surf = _surf_df(docs.sparkSession)
-    base = docs.selectExpr(*_DOC_KEYS)
-    for key, out in _SURF_JOINS:
-        base = base.join(F.broadcast(surf.toDF(key + "_k", out)),
-                         F.expr(f"{key} = {key}_k"))
-    return base.selectExpr(*_SPAN_EXPRS).select("doc_id", "spans")
+    return _with_surfaces(docs).selectExpr(*_TEXT_EXPRS, *_MEDIA_EXPRS) \
+        .select("doc_id", "spans")
+
+
+def text_spans(docs: DataFrame) -> DataFrame:
+    """The kind='text' rows of explode_spans(interleave_docs(docs)) as
+    (doc_id, pos, kind, text), built without the span array: pos 0 is the
+    document text, pos 1 the injected sentence."""
+    return _with_surfaces(docs).selectExpr(*_TEXT_EXPRS) \
+        .selectExpr("doc_id", _TEXT_STACK)
 
 
 def spans_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,7 +245,9 @@ def _pmod(e: str, k: int) -> str:
 def corpus_ctes() -> str:
     """SQL CTE prefix (no leading WITH) defining:
     surf(idx,s) -> aug (per-doc surfaces + generated texts) -> spans
-    (doc_id,pos,kind,text,media_ref,offset). ANSI-ish; tested on DuckDB."""
+    (doc_id,pos,kind,text,media_ref,offset). ANSI-ish; tested on DuckDB.
+    Every surface index is derived from r = pmod(d, n), as in the Spark
+    lookup table, so no id is multiplied."""
     surf = surfaces()
     n = len(surf)
     surf_values = _values(
@@ -226,7 +261,7 @@ def corpus_ctes() -> str:
 {surf_values},
 d0 AS (
   SELECT doc_id AS d, printf('DOC:%06d', doc_id) AS doc,
-         text, CAST(n_chars AS INT) AS nc
+         text, CAST(n_chars AS INT) AS nc, {_pmod('doc_id', n)} AS r
   FROM documents
 ),
 aug AS (
@@ -235,11 +270,11 @@ aug AS (
     so.s AS obj, sf_.s AS figterm, st.s AS tabterm, sr.s AS refterm,
     CASE CAST({_pmod('d', 7)} AS INT) {phrase_case} END AS phrase
   FROM d0
-  JOIN surf ss  ON ss.idx  = {_pmod('d', n)}
-  JOIN surf so  ON so.idx  = {_pmod('d * 7 + 3', n)}
-  JOIN surf sf_ ON sf_.idx = {_pmod('d + 1', n)}
-  JOIN surf st  ON st.idx  = {_pmod('d + 2', n)}
-  JOIN surf sr  ON sr.idx  = {_pmod('d + 4', n)}
+  JOIN surf ss  ON ss.idx  = r
+  JOIN surf so  ON so.idx  = (r * 7 + 3) % {n}
+  JOIN surf sf_ ON sf_.idx = (r + 1) % {n}
+  JOIN surf st  ON st.idx  = (r + 2) % {n}
+  JOIN surf sr  ON sr.idx  = (r + 4) % {n}
 ),
 aug2 AS (
   SELECT aug.*,

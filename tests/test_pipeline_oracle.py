@@ -176,25 +176,30 @@ def test_doc_ids_of_seven_digits_stay_distinct(spark):
 
 
 # hostile documents: ids at the padding edges, a negative id, one above
-# 2**31; null, empty and astral-only text; phrases in upper case; two
-# documents that share the id 5
+# 2**31, two of magnitude 2**62 (seven times either overflows a bigint);
+# null, empty and astral-only text; phrases in upper case; two documents
+# that share the id 5
 HOSTILE = pd.DataFrame({
-    "doc_id": [0, 999_999, 1_000_000, -7, -12, 2**31 + 5, 5, 5],
+    "doc_id": [0, 999_999, 1_000_000, -7, -12, 2**31 + 5, 5, 5, 2**62,
+               -(2**62)],
     "text": ["abscisate ACCUMULATES IN abscission here", None, "",
              "\U0001F600\U0001F600\U0001F600",
              "abscisate accumulates in abscission",
              "glucose Regulates abscission",
              "abscisate accumulates in abscission",
-             "xx glucose regulates abscisate"],
-    "n_chars": [40, 0, 0, 3, 35, 28, 35, 30],
+             "xx glucose regulates abscisate",
+             "glucose affects abscisate", ""],
+    "n_chars": [40, 0, 0, 3, 35, 28, 35, 30, 25, 0],
 })
 
 
-def test_hostile_docs_match_duckdb_and_oracle(spark):
-    """Span synthesis on hostile documents equals its DuckDB twin
-    (corpus_ctes) and the pandas oracle, and triples_from_docs equals
-    the oracle's triples: no document is dropped or renamed by one
-    engine alone."""
+_TRIPLE_COLS = ["doc_id", "pos", "subject", "predicate", "object",
+                "confidence", "evidence"]
+
+
+def _spans_three_ways(spark, flat: pd.DataFrame) -> tuple[list, list, list]:
+    """Sorted span rows of `flat` from Spark, from its DuckDB twin
+    (corpus_ctes) and from the pandas oracle."""
     import duckdb
 
     from cspirit_ontology_information_extraction_opus4plan_spark.corpus import (  # noqa: E501
@@ -202,47 +207,109 @@ def test_hostile_docs_match_duckdb_and_oracle(spark):
         explode_spans,
         interleave_docs,
     )
-    from cspirit_ontology_information_extraction_opus4plan_spark.extraction import (  # noqa: E501
-        triples_from_docs,
-    )
     cols = ["doc_id", "pos", "kind", "text", "media_ref", "offset"]
-    docs = spark.createDataFrame(HOSTILE)
-    got = sorted(tuple(r) for r in explode_spans(interleave_docs(docs))
-                 .select(*cols).collect())
-    want = sorted(tuple(r[c] for c in cols)
-                  for r in oracle.expected_spans(HOSTILE))
+    got = sorted(tuple(r) for r in explode_spans(interleave_docs(
+        spark.createDataFrame(flat))).select(*cols).collect())
     con = duckdb.connect()
-    con.register("documents", HOSTILE)
+    con.register("documents", flat)
     quoted = ", ".join(f'"{c}"' for c in cols)
     duck = sorted(con.execute(
         f"WITH {corpus_ctes()} SELECT {quoted} FROM spans").fetchall())
     con.close()
+    want = sorted(tuple(r[c] for c in cols)
+                  for r in oracle.expected_spans(flat))
+    return got, duck, want
+
+
+def _triples(spark, flat: pd.DataFrame) -> list:
+    from cspirit_ontology_information_extraction_opus4plan_spark.extraction import (  # noqa: E501
+        triples_from_docs,
+    )
+    return sorted(tuple(r) for r in triples_from_docs(
+        spark.createDataFrame(flat)).select(*_TRIPLE_COLS).collect())
+
+
+def _oracle_triples(flat: pd.DataFrame) -> list:
+    return sorted(tuple(r[c] for c in _TRIPLE_COLS) for r in
+                  oracle.expected_triples(oracle.expected_spans(flat)))
+
+
+def test_hostile_docs_match_duckdb_and_oracle(spark):
+    """Span synthesis on hostile documents equals its DuckDB twin
+    (corpus_ctes) and the pandas oracle, and triples_from_docs equals
+    the oracle's triples: no document is dropped or renamed by one
+    engine alone."""
+    got, duck, want = _spans_three_ways(spark, HOSTILE)
     assert got == duck
     assert got == want
     assert {r[0] for r in got} == {f"DOC:{d:06d}" for d in HOSTILE.doc_id}
 
-    tcols = ["doc_id", "pos", "subject", "predicate", "object",
-             "confidence", "evidence"]
-
-    def triples(flat):
-        return sorted(tuple(r) for r in triples_from_docs(
-            spark.createDataFrame(flat)).select(*tcols).collect())
-
-    got_t = triples(HOSTILE)
-    want_t = sorted(tuple(r[c] for c in tcols) for r in
-                    oracle.expected_triples(oracle.expected_spans(HOSTILE)))
-    assert got_t == want_t
+    got_t = _triples(spark, HOSTILE)
+    assert got_t == _oracle_triples(HOSTILE)
     # both upper-case phrases, the negative id and each document with id
     # 5 yield their base triple
     assert {(d, p) for d, pos, _, p, _, _, _ in got_t if pos == 0} == {
         ("DOC:000000", "accumulates_in"), ("DOC:-00012", "accumulates_in"),
         (f"DOC:{2**31 + 5}", "regulates"), ("DOC:000005", "accumulates_in"),
-        ("DOC:000005", "regulates")}
+        ("DOC:000005", "regulates"), (f"DOC:{2**62}", "affects")}
     # two rows that share an id yield the multiset union of each alone:
     # no mention of one document reaches the other's relation span
     dup = HOSTILE[HOSTILE.doc_id == 5]
     assert [t for t in got_t if t[0] == "DOC:000005"] == sorted(
-        t for i in range(len(dup)) for t in triples(dup.iloc[[i]]))
+        t for i in range(len(dup)) for t in _triples(spark, dup.iloc[[i]]))
+
+
+def _text_rows(spark, docs) -> tuple[list, list]:
+    """(text_spans(docs), the kind='text' rows of the full span table),
+    both as sorted (doc_id, pos, kind, text) tuples."""
+    from cspirit_ontology_information_extraction_opus4plan_spark.corpus import (  # noqa: E501
+        explode_spans,
+        interleave_docs,
+        text_spans,
+    )
+    cols = ["doc_id", "pos", "kind", "text"]
+    full = explode_spans(interleave_docs(docs)).filter("kind = 'text'")
+    return tuple(sorted(tuple(r) for r in df.select(*cols).collect())
+                 for df in (text_spans(docs), full))
+
+
+def test_text_spans_are_the_text_rows_of_the_span_table(spark):
+    """The triples path reads text_spans alone: it must equal the
+    kind='text' rows of explode_spans(interleave_docs(docs)), on hostile
+    documents and on sf0.01."""
+    import os
+
+    from cspirit_ontology_information_extraction_opus4plan_spark.corpus import (  # noqa: E501
+        read_documents,
+    )
+    from .conftest import SF_DIR
+
+    got, want = _text_rows(spark, spark.createDataFrame(HOSTILE))
+    assert got == want
+    assert len(got) == 2 * len(HOSTILE)
+    got, want = _text_rows(spark, read_documents(
+        spark, os.path.join(os.path.dirname(SF_DIR), "sf0.01")))
+    assert got == want and len(got) > 0
+
+
+def test_document_of_several_mb_matches_duckdb_and_oracle(spark):
+    """A 4 MB document with one predicate phrase deep inside and
+    gazetteer words all through it: its spans equal DuckDB's corpus_ctes
+    and the oracle's, and its triples (base text and injected sentence)
+    the oracle's."""
+    filler = "abscisate and glucose near abscission in sample 7. " * 40_000
+    text = filler + "glucose regulates abscisate. " + filler
+    assert len(text) > 4_000_000
+    flat = pd.DataFrame({"doc_id": [12], "text": [text],
+                         "n_chars": [len(text)]})
+    got, duck, want = _spans_three_ways(spark, flat)
+    assert got == duck
+    assert got == want
+    assert [r[1:3] for r in got] == [(0, "text"), (1, "text"),
+                                     (2, "figure"), (3, "table")]
+    got_t = _triples(spark, flat)
+    assert got_t == _oracle_triples(flat)
+    assert (0, "regulates") in {(t[1], t[3]) for t in got_t}
 
 
 def test_spark_sql_str_round_trips(spark):

@@ -28,10 +28,20 @@ def triples_plan(spark, sf_dir):
 
 
 def test_scan_is_column_pruned(triples_plan):
+    """The triples path reads only the two columns it uses: no offset is
+    computed, so n_chars is not read either."""
     schema = re.search(r"ReadSchema: (\S+)", triples_plan).group(1)
-    assert "doc_id" in schema and "text" in schema and "n_chars" in schema
-    # flat driver columns we never use must not be read
-    assert "lang" not in schema and "source" not in schema
+    assert schema == "struct<doc_id:bigint,text:string>"
+
+
+def test_triples_plan_builds_only_text_spans(triples_plan):
+    """The triples path synthesizes its two text spans with no span array:
+    no posexplode, no named_struct('kind', ...) span structs, and no join
+    condition that carries a copy of the span array."""
+    assert "Generate posexplode" not in triples_plan
+    assert "named_struct(kind," not in triples_plan
+    assert not [ln for ln in triples_plan.splitlines()
+                if "Join" in ln and "filter(array(" in ln]
 
 
 def test_exactly_two_shuffles(triples_plan):

@@ -7,7 +7,11 @@ counts are read back from the status tracker by group (tasks: the sum of
 its own job and a later job lists again as skipped counts in both).
 Passes repeat in one session after a warm-up pass; the table shows, per
 call, the job and task counts of the last pass and the median wall
-time. Run from the root of a checkout:
+time. The build pass also times the planning it pays before any job:
+building the ``api.triples_df`` plan and optimizing it
+(``queryExecution().optimizedPlan()``; the write plans its own query
+again, and the pass row includes both). Run from the root of a
+checkout:
 
     python tools/job_counts.py                    # seed 1, 3 passes
     python tools/job_counts.py --seed 2 --passes 5 --only graph
@@ -88,6 +92,8 @@ class JobCounter:
 def build_pass(spark, count: JobCounter, sf: str, out: str) -> None:
     triples = count("api.triples_df (plan)",
                     lambda: api.triples_df(spark, sf))
+    count("triples optimizedPlan()",
+          lambda: triples._jdf.queryExecution().optimizedPlan())
     count("materialize_triples",
           lambda: materialize_triples(spark, triples, out, sf_dir=sf,
                                       n_parts=N_PARTS))
