@@ -60,6 +60,8 @@ yield the multiset union of what each yields alone (no join on doc_id).
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -155,9 +157,10 @@ _MEDIA_EXPRS = (
 )
 
 
+@lru_cache(maxsize=8)
 def _surf_df(spark: SparkSession) -> DataFrame:
     """The one surface lookup: every surface a document uses, keyed by
-    r = pmod(doc_id, N_SURF)."""
+    r = pmod(doc_id, N_SURF); built once per session (8 kept)."""
     s, n = surfaces(), N_SURF
     return local_df(spark, [(r, s[r], s[(7 * r + 3) % n], s[(r + 1) % n],
                              s[(r + 2) % n], s[(r + 4) % n])
@@ -197,9 +200,10 @@ def interleave_docs(docs: DataFrame) -> DataFrame:
 def text_spans(docs: DataFrame) -> DataFrame:
     """The kind='text' rows of explode_spans(interleave_docs(docs)) as
     (doc_id, pos, kind, text), built without the span array: pos 0 is the
-    document text, pos 1 the injected sentence."""
+    document text, pos 1 the injected sentence; pos is NOT NULL."""
     return _with_surfaces(docs).selectExpr(*_TEXT_EXPRS) \
-        .selectExpr("doc_id", _TEXT_STACK)
+        .selectExpr("doc_id", _TEXT_STACK) \
+        .selectExpr("doc_id", "ifnull(pos, 0) AS pos", "kind", "text")
 
 
 def spans_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:

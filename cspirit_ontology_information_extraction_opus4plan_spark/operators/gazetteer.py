@@ -14,6 +14,8 @@ Keys are normalized lower/trim exactly as the reference index build does
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -61,9 +63,10 @@ def gazetteer_df(spark: SparkSession) -> DataFrame:
     return local_df(spark, rows, GAZ_SCHEMA)
 
 
+@lru_cache(maxsize=8)
 def winners_df(spark: SparkSession) -> DataFrame:
     """OD.gazetteer_winners as a LocalTableScan (no Python task; its
-    broadcast is one small Spark job)."""
+    broadcast is one small Spark job), built once per session (8 kept)."""
     rows = [(s, *w) for s, w in OD.gazetteer_winners().items()]
     return local_df(spark, rows, "surface string, term_id string, "
                     "match_kind string, rank int")

@@ -31,13 +31,13 @@ def link_mentions(mentions: DataFrame, gaz: DataFrame | None = None
 
 
 def link_endpoints(picked: DataFrame, win: DataFrame) -> DataFrame:
-    """Rows with picked endpoints s, o (struct<m_off, surface>) + their
-    winners from `win` as s_term, s_kind, o_term, o_kind: one broadcast
-    join per endpoint, which also drops a NULL endpoint."""
+    """Rows with picked endpoint surfaces s, o + their winners from `win`
+    as s_term, s_kind, o_term, o_kind: one broadcast join per endpoint,
+    which drops a NULL endpoint (`win` has none). <=> infers no isnotnull
+    filter, which would compute the endpoint a second time below."""
     for e in ("s", "o"):
         w = win.toDF(f"{e}_surface", f"{e}_term", f"{e}_kind", f"{e}_rank")
-        picked = picked.join(F.broadcast(w),
-                             F.expr(f"{e}.surface = {e}_surface"))
+        picked = picked.join(F.broadcast(w), F.expr(f"{e} <=> {e}_surface"))
     return picked
 
 

@@ -25,9 +25,11 @@ Scale notes:
     mentions (figure/table caption extraction, pdf_parser.py:1356,
     xml_parser.py:2302/2372); references do not.
   * detect_mentions emits a row per mention of every span, for the
-    mention queries; span_mentions, for the triples path, takes only
-    relation spans and emits each with its mentions as an array, its
-    other columns passed through, so nothing is joined back after NER.
+    mention queries. The triples path runs no Python: relations.ENDPOINTS
+    matches relations.NER_PATTERN in the JVM, whose \\b is not Python's
+    ('²' is no word character there, a combining mark is one), so its
+    patterns spell Python's boundary as lookarounds. The DuckDB oracle
+    SQL keeps ner_pattern() and RE2's ASCII-only \\b.
   * m_off counts code points of the lower-cased text (Python str), the
     unit relations measures the phrase offset p0 in.
 """
@@ -88,6 +90,16 @@ def ner_pattern() -> str:
     return r"\b(" + alternation(surfaces()) + r")\b"
 
 
+def jvm_word_bounded(words: list[str]) -> str:
+    """`words` (of [a-z0-9 ], starting and ending with a word character)
+    as JDK regex, bounded as Python's str \\b bounds them. The lookbehind
+    reads two UTF-16 units (with one it would miss a letter outside the
+    BMP); the first-character lookahead keeps it off most positions."""
+    first = "".join(sorted({w[0] for w in words}))
+    return (f"(?=[{first}])" + r"(?<![\p{L}\p{N}_]{1,2})("
+            + alternation(words) + r")(?![\p{L}\p{N}_])")
+
+
 def _ner_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     find = _matcher(tuple(surfaces()))
     for pdf in batches:
@@ -104,29 +116,6 @@ def _ner_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame({
             "doc_id": doc_ids, "pos": poss, "kind": kinds,
             "m_off": offs, "surface": surfs})
-
-
-# pos stays NOT NULL, as a posexplode position is
-SPAN_MENTIONS_SCHEMA = (
-    "doc_id string, pos int NOT NULL, text string, phrase string, p0 int, "
-    "plen int, ms array<struct<m_off:int, surface:string>>")
-
-
-def _span_mention_batches(batches: Iterator[pd.DataFrame]
-                          ) -> Iterator[pd.DataFrame]:
-    find = _matcher(tuple(surfaces()))
-    for pdf in batches:
-        pdf["ms"] = [
-            [{"m_off": off, "surface": surf} for off, surf in find(t.lower())]
-            if t else [] for t in pdf["text"]]
-        yield pdf
-
-
-def span_mentions(phrases: DataFrame) -> DataFrame:
-    """relations.relation_phrases rows -> the same rows plus ms, the
-    span's mentions (m_off, surface) in text order."""
-    return phrases.mapInPandas(_span_mention_batches,
-                               schema=SPAN_MENTIONS_SCHEMA)
 
 
 def detect_mentions(spans: DataFrame) -> DataFrame:

@@ -16,9 +16,11 @@ phrase grammar is regular, so no Python of its own):
     confidence = 1.0 if both matched by canonical name else 0.9
   drop subject.term_id == object.term_id (models.py:1083)
 
-The pick (PICK) reads a span's mentions as an array column in the span's
-row, which NER fills directly on the triples path: no join on (doc_id,
-pos), so no shuffle, and documents that share a doc_id never mix.
+ENDPOINTS matches NER on each side of the phrase, in the span's row: no
+join on (doc_id, pos), no shuffle, and documents sharing a doc_id never
+mix; it equals a whole-text scan as no surface can straddle a phrase
+(test_ontology_data.py::test_surfaces_never_straddle_a_phrase). PICK
+applies the rule to mentions found apart (extract_triples).
 
 Deterministic ids: content-addressed `TRP:<md5>` over the semantic key —
 never monotonically_increasing_id (nondeterministic across retries; breaks
@@ -33,9 +35,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..corpus import spark_sql_str
-from ..ontology_data import PREDICATE_PHRASES, alternation
+from ..ontology_data import PREDICATE_PHRASES, surfaces
+from .ner import jvm_word_bounded
 
-PHRASE_PATTERN = r"\b(" + alternation([p for p, _ in PREDICATE_PHRASES]) + r")\b"
+PHRASE_PATTERN = jvm_word_bounded([p for p, _ in PREDICATE_PHRASES])
+NER_PATTERN = jvm_word_bounded(surfaces())  # ner.ner_pattern() for the JVM
 
 # The extraction plan as Spark SQL expression text, built once at import:
 # it is rebuilt on every call and every streaming micro-batch, and text
@@ -44,21 +48,23 @@ PHRASE_PATTERN = r"\b(" + alternation([p for p, _ in PREDICATE_PHRASES]) + r")\b
 _P = spark_sql_str(PHRASE_PATTERN)
 RELATION_SPAN = f"kind = 'text' AND regexp_count(lower(text), {_P}) = 1"
 
-# all matching happens on lower(text): the NER stage lowercases before
-# scanning, so mention m_off and phrase p0 must share the lowercased
-# coordinate system (and the phrase vocabulary is lowercase — raw-text
-# matching would miss 'Regulates'), and the same unit: m_off counts code
-# points (Python str), regexp_instr UTF-16 units (one extra per emoji
-# before the phrase). So p0 is the code-point length of the text before
-# the SAME word-bounded pattern that selected the phrase (locate(phrase,
-# text) would anchor to an earlier in-word occurrence: 'is a' inside
-# 'axis aligns'). Later aliases use earlier ones (lateral aliases).
+# all matching is on lower(text), as NER's (the phrases are lowercase),
+# and offsets count code points, as m_off, length and substring do
+# (regexp_instr counts UTF-16 units). p0 is the length of the text before
+# the SAME word-bounded pattern (locate(phrase, text) would find 'is a'
+# in 'axis aligns'). Later aliases use earlier ones (lateral aliases).
 _PHRASE_EXPRS = (
     "doc_id", "pos", "text",
     f"regexp_extract(lower(text), {_P}, 1) AS phrase",
     f"length(split(lower(text), {_P}, 2)[0]) AS p0",
     "length(phrase) AS plen",
 )
+# PICK's bounds: the last match before the phrase, the first after it
+_N = spark_sql_str(NER_PATTERN)
+ENDPOINTS = (f"try_element_at(regexp_extract_all(substring(lower(text), 1, "
+             f"p0), {_N}, 1), -1) AS s",
+             f"nullif(regexp_extract(substring(lower(text), p0 + plen + 2), "
+             f"{_N}, 1), '') AS o")
 # structs order by their first field, m_off (distinct within a span);
 # no candidate gives NULL
 PICK = (

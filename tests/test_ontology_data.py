@@ -66,6 +66,26 @@ def test_surfaces_token_substring_free():
                     f"surface {a!r} is a token-substring of {b!r}")
 
 
+def test_surfaces_never_straddle_a_phrase():
+    """relations.ENDPOINTS scans the text before and after the predicate
+    phrase apart; that finds the whole text's mentions only if no
+    surface match can overlap a phrase occurrence. So no token suffix
+    of a surface is a token prefix of a phrase or the reverse, and
+    neither contains the other's tokens ('provitamin a' shares the
+    token 'a' with 'is a' but cannot straddle it)."""
+    def contains(a: tuple, b: tuple) -> bool:
+        return any(a[i:i + len(b)] == b for i in range(len(a) - len(b) + 1))
+
+    for s in OD.surfaces():
+        ts = tuple(s.split())
+        for ph, _ in OD.PREDICATE_PHRASES:
+            tp = tuple(ph.split())
+            for k in range(1, min(len(ts), len(tp)) + 1):
+                assert ts[-k:] != tp[:k], (s, ph)
+                assert tp[-k:] != ts[:k], (s, ph)
+            assert not contains(ts, tp) and not contains(tp, ts), (s, ph)
+
+
 def test_shared_synonym_is_ambiguous():
     gaz = OD.gazetteer()
     owners = {g["term_id"] for g in gaz if g["surface"] == "hexose sugar"}

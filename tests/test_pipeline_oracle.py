@@ -326,9 +326,10 @@ def test_spark_sql_str_round_trips(spark):
         ner_pattern,
     )
     from cspirit_ontology_information_extraction_opus4plan_spark.operators.relations import (  # noqa: E501
+        NER_PATTERN,
         PHRASE_PATTERN,
     )
-    strings = ([PHRASE_PATTERN, ner_pattern(), "it's", "a\\b", "\\\\b",
+    strings = ([PHRASE_PATTERN, ner_pattern(), NER_PATTERN, "it's", "a\\b", "\\\\b",
                 "a\\", "\\'", "''", "\U0001F600 \U00010348 \u00e9"]
                + [ph for ph, _ in OD.PREDICATE_PHRASES]
                + [pred for _, pred in OD.PREDICATE_PHRASES] + OD.surfaces())
@@ -350,6 +351,21 @@ RULE_TEXTS = [
     "abscisate accumulates in abscission and glucose regulates abscission",
     # no phrase
     "abscisate and abscission",
+    # the subject is the last mention before the phrase, the object the
+    # first after it
+    "abscisate, glucose regulates abscission, abscisate",
+    # word boundaries are Python's: '²' is a word character, so neither
+    # the phrase nor the subject is bounded here
+    "glucose regulates\u00b2 abscisate",
+    "glucose\u00b2 regulates abscisate",
+    # a combining mark is not a word character: glucose is bounded
+    "glucose\u0301 regulates abscisate",
+    # a letter outside the BMP (two UTF-16 units) is a word character,
+    # an emoji is not
+    "glucose \U00010348regulates abscisate",
+    "\U00010348glucose regulates abscisate",
+    "glucose regulates \U00010348abscisate",
+    "\U0001F600glucose regulates abscisate\U0001F600",
 ]
 
 
@@ -371,8 +387,11 @@ def test_relation_span_rule_matches_oracle(spark):
     want = sorted(tuple(r[c] for c in cols) for r in
                   oracle.expected_triples(oracle.expected_spans(flat)))
     assert got == want
-    # pos is a span position, never NULL, also after the Python stage
+    # pos is a span position, never NULL, also after the stack
     assert not triples.schema["pos"].nullable
     base = {(d, s, p, o) for d, pos, s, p, o, _, _ in got if pos == 0}
     edge = ("CHEBI:10039", "accumulates_in", "GO:20011")
-    assert base == {(f"DOC:{d:06d}",) + edge for d in (1, 2, 3, 4)}
+    assert {t for t in base if t[2] == "accumulates_in"} == {
+        (f"DOC:{d:06d}",) + edge for d in (1, 2, 3, 4)}
+    assert sorted(t[0] for t in base if t[2] == "regulates") == [
+        f"DOC:{d:06d}" for d in (7, 10, 14)]

@@ -4,10 +4,10 @@ about, pinned as tests so regressions fail loudly:
   * column pruning reaches the parquet scan, and the triples plan
     scans the documents once,
   * dimension joins broadcast (no sort-merge join at all),
-  * the whole NER->link->relate path costs no shuffle: NER returns one
-    row per relation span with its mentions, so nothing is joined or
-    grouped on (doc_id, pos),
-  * Python appears only as the sanctioned vectorized stages
+  * the whole NER->link->relate path costs no shuffle and runs no
+    Python: each relation span's endpoints are JVM regex matches in its
+    own row, so nothing is joined or grouped on (doc_id, pos),
+  * elsewhere Python appears only as the sanctioned vectorized stages
     (MapInPandas / ArrowEval), never row-at-a-time BatchEvalPython.
 """
 
@@ -61,8 +61,11 @@ def test_gazetteer_joins_broadcast(triples_plan):
 
 
 def test_python_only_vectorized(triples_plan):
-    assert "BatchEvalPython" not in triples_plan
-    assert triples_plan.count("MapInPandas") == 1
+    """The triples path has no Python operator at all: its NER is JVM
+    regex (relations.ENDPOINTS)."""
+    for op in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+               "PythonUDF"):
+        assert op not in triples_plan, op
 
 
 def test_no_cartesian_products(triples_plan):
@@ -70,41 +73,52 @@ def test_no_cartesian_products(triples_plan):
     assert "BroadcastNestedLoopJoin" not in triples_plan
 
 
-def _subtree(plan: str, node: str) -> list[str]:
-    """The line of the first `node` operator in a plan tree string and
-    every line below it that is nested deeper (its child subtree)."""
+def _subtrees(plan: str, text: str) -> list[list[str]]:
+    """For every line of a plan tree string that contains `text`: that
+    line and every line below it that is nested deeper (its child
+    subtree)."""
     lines = plan.splitlines()
-    i = next(k for k, ln in enumerate(lines) if node in ln)
 
     def depth(ln: str) -> int:
         return re.match(r"[^A-Za-z]*", ln).end()
 
-    sub = [lines[i]]
-    for ln in lines[i + 1:]:
-        if depth(ln) <= depth(lines[i]):
-            break
-        sub.append(ln)
-    return sub
+    subs = []
+    for i, top in enumerate(lines):
+        if text not in top:
+            continue
+        sub = [top]
+        for ln in lines[i + 1:]:
+            if depth(ln) <= depth(top):
+                break
+            sub.append(ln)
+        subs.append(sub)
+    return subs
 
 
-def _phrase_filter_below_python(plan: str) -> bool:
+def _has_phrase_filter(lines: list[str]) -> bool:
     from cspirit_ontology_information_extraction_opus4plan_spark.operators.relations import (  # noqa: E501
         PHRASE_PATTERN,
     )
-    return any("Filter" in ln and PHRASE_PATTERN in ln
-               for ln in _subtree(plan, "MapInPandas"))
+    return any("Filter" in ln and PHRASE_PATTERN in ln for ln in lines)
 
 
 def test_triples_ner_reads_only_relation_spans(triples_plan):
-    """The relation-span filter (regexp_count over the phrase pattern)
-    sits below the one MapInPandas, so other spans never reach Python."""
-    assert _phrase_filter_below_python(triples_plan)
+    """The NER pattern is evaluated only above the relation-span filter
+    (regexp_count over the phrase pattern): every plan line that carries
+    the pattern has that filter below it, so other spans never reach
+    NER."""
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators.relations import (  # noqa: E501
+        NER_PATTERN,
+    )
+    subs = _subtrees(triples_plan, NER_PATTERN)
+    assert subs
+    assert all(_has_phrase_filter(sub[1:]) for sub in subs)
 
 
 def test_ner_mentions_scans_every_span(spark, sf_dir):
     plan = _plan(api.q_ner_mentions(spark, sf_dir))
     assert plan.count("MapInPandas") == 1
-    assert not _phrase_filter_below_python(plan)
+    assert not _has_phrase_filter(_subtrees(plan, "MapInPandas")[0])
 
 
 # --- plan shapes of the newer operator families -----------------------------
@@ -525,12 +539,12 @@ def test_triple_semantics_adds_no_shuffle(spark, sf_dir):
 
 def test_entailment_and_optional_stay_jvm_side(spark, sf_dir):
     """The SPARQL algebra / entailment layer adds no Python stages to
-    the triples pipeline (one sanctioned MapInPandas from NER) and no
-    nested-loop joins; OPTIONAL's anti side is a proper hash join."""
+    the triples pipeline (which has none) and no nested-loop joins;
+    OPTIONAL's anti side is a proper hash join."""
     for q in (api.q_kg_optional_query, api.q_kg_entailment,
               api.q_kg_entailment_delta):
         plan = _plan(q(spark, sf_dir))
-        assert plan.count("MapInPandas") <= 1, q.__name__
+        assert "MapInPandas" not in plan, q.__name__
         assert "BatchEvalPython" not in plan, q.__name__
         assert "CartesianProduct" not in plan, q.__name__
         assert "BroadcastNestedLoopJoin" not in plan, q.__name__
@@ -1015,6 +1029,25 @@ def test_constant_tables_are_local_relations(spark):
         plan = _plan(build(spark))
         assert "LocalTableScan" in plan, build.__name__
         assert "ExistingRDD" not in plan, build.__name__
+
+
+def test_constant_tables_built_once_per_session(spark):
+    """The surface and winner tables are built once per session and
+    reused by every plan build; another session gets its own."""
+    from cspirit_ontology_information_extraction_opus4plan_spark.corpus import (  # noqa: E501
+        _surf_df,
+    )
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators.gazetteer import (  # noqa: E501
+        winners_df,
+    )
+    other = spark.newSession()
+    for build in (winners_df, _surf_df):
+        first, again, theirs = build(spark), build(spark), build(other)
+        assert first._jdf is again._jdf, build.__name__
+        assert theirs._jdf is not first._jdf, build.__name__
+        assert theirs.sparkSession is other, build.__name__
+        assert theirs._jdf.sparkSession().equals(other._jsparkSession)
+        assert sorted(theirs.collect()) == sorted(first.collect())
 
 
 def _job_ids(spark, action) -> list[int]:

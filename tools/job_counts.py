@@ -7,7 +7,9 @@ counts are read back from the status tracker by group (tasks: the sum of
 its own job and a later job lists again as skipped counts in both).
 Passes repeat in one session after a warm-up pass; the table shows, per
 call, the job and task counts of the last pass and the median wall
-time. The build pass also times the planning it pays before any job:
+time, then the totals of the warm-up pass (pass 0, which pays the
+session's set-up work such as starting Python workers) and of the
+later passes. The build pass also times the planning it pays before any job:
 building the ``api.triples_df`` plan and optimizing it
 (``queryExecution().optimizedPlan()``; the write plans its own query
 again, and the pass row includes both). Run from the root of a
@@ -132,21 +134,24 @@ def main(argv=None) -> int:
             run = PASSES[kind][1]
             count = JobCounter(spark.sparkContext)
             for i in range(args.passes + 1):  # pass 0 warms up
-                if i == 1:
-                    count.calls.clear()
                 out = os.path.join(tmp, f"{kind}-{i}")
                 t0 = time.perf_counter()
                 run(spark, count, dirs[kind], out)
                 wall = time.perf_counter() - t0
                 last = [c[-1] for n, c in count.calls.items()
-                        if n != "(pass)"]
-                count.calls.setdefault("(pass)", []).append(
-                    (sum(c[0] for c in last), sum(c[1] for c in last), wall))
+                        if not n.startswith("(")]
+                total = (sum(c[0] for c in last), sum(c[1] for c in last),
+                         wall)
+                if i == 0:  # its calls leave the medians, its total stays
+                    count.calls = {"(warm-up pass 0)": [total]}
+                else:
+                    count.calls.setdefault("(pass)", []).append(total)
                 shutil.rmtree(out, ignore_errors=True)
             print(f"\n{kind} pass, seed {args.seed}, {dirs[kind]}")
             print(f"  {'call':<30} {'jobs':>5} {'tasks':>6} {'median s':>9}"
                   "  all s")
-            for name, calls in count.calls.items():
+            for name, calls in sorted(count.calls.items(),
+                                      key=lambda c: c[0].startswith("(")):
                 secs = [c[2] for c in calls]
                 print(f"  {name:<30} {calls[-1][0]:>5} {calls[-1][1]:>6} "
                       f"{statistics.median(secs):>9.3f}  "
