@@ -10,7 +10,9 @@ directory flow through the identical NER -> link -> extract stages via
 Spark-idiomatic way to run a batch-defined pipeline continuously. Every
 micro-batch calls ``extraction.triples_from_docs``, as the batch
 ``api.triples_df`` does, so a micro-batch too sends only the spans that
-can yield a triple through NER.
+can yield a triple through NER. Every stream here runs through one
+driver, ``_run_stream``: one input file per micro-batch, foreachBatch,
+and availableNow (drain what exists, then stop) unless told otherwise.
 
 Exactly-once: the stream checkpoint (WAL + source offsets) makes each
 input file processed once, and each micro-batch writes to its own
@@ -23,19 +25,84 @@ done, matching the partition-overwrite + read-side-dedup design of the
 batch materializer). The bounded-state variant IS provided:
 `dedup_events_within_watermark` suppresses re-deliveries inside the
 watermark horizon with state that expires as the watermark advances.
+
+Versioned stores. The merging streams (stream_merge_triples,
+stream_daily_counts, stream_entailment_triples, stream_neardup_pairs,
+stream_fused_triples) and the maintenance passes
+(compact_store_version, retract_store_version) keep a snapshot chain
+on plain parquet, the shape Iceberg gives a table:
+
+  * layout: version N is `v=N` (one table) or `v=N/<table>` (tables
+    committed together);
+  * marker: `_commit_vN.json` is {version, parent, one row count per
+    counted table, ...}, published after the data. A stream commit adds
+    `stream_batch` = {query_id, batch_id}, the batch that wrote it (the
+    query id is kept in the stream checkpoint, so it survives a
+    restart); a maintenance commit adds `compaction` or `action`. The
+    counts come from the write itself (checkpointing.observe_counts).
+    A `v=N` without a marker never committed and is invisible;
+    store_history is the list of markers;
+  * pointer: `_latest.json` is {version, parent}, published atomically
+    after the marker; readers resolve the current version through it;
+  * version and parent (`_commit_target`): a stream batch whose stream
+    last committed that same batch is a crash replay (the driver died
+    after the commit, before the checkpoint recorded the batch). If
+    that commit is the latest, the batch rewrites it from the same
+    parent; if later commits build on it (maintenance ran between the
+    crash and the restart), the batch commits nothing. So nothing is
+    applied twice. Every other commit takes a fresh version above every
+    committed one, on top of the pointer's version: a maintenance commit
+    between ingest runs, or a new checkpoint over an existing store, is
+    built on and never overwritten.
+
+`_commit` writes a version and publishes its marker and then the
+pointer; it is the only writer of either.
 """
 
 from __future__ import annotations
 
-import os
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..corpus import DOCS_SCHEMA
 from ..extraction import triples_from_docs
-from ..plans.checkpointing import fs_list_names
+from ..plans.checkpointing import (_fs, _fs_read_json,
+                                   _fs_write_json_atomic, fs_list_names,
+                                   observe_counts)
+
+
+def _run_stream(spark: SparkSession, schema: str, input_dir: str,
+                checkpoint_dir: str,
+                process: Callable[[DataFrame, int], None],
+                trigger_available_now: bool, batch_out: str | None = None):
+    """The stream driver: read `input_dir` one file per micro-batch and
+    call `process(batch_df, batch_id)` on each. Returns the started
+    StreamingQuery (the caller awaits or stops it).
+
+    `batch_out` is a directory of per-batch `batch_id=N` outputs. Their
+    overwrite is idempotent only while checkpoint_dir and the output stay
+    paired: a fresh checkpoint restarts batch ids at 0 and would
+    overwrite SOME old batch dirs and leave others — a mixed old/new
+    table. That mismatch is refused."""
+    if (batch_out is not None
+            and any(name.startswith("batch_id=")
+                    for name in fs_list_names(spark, batch_out))
+            and not fs_list_names(spark, checkpoint_dir)):
+        raise ValueError(
+            f"{batch_out} already holds batch_id=* output but "
+            f"checkpoint_dir {checkpoint_dir} is empty — restarting "
+            f"would reuse batch ids and mix old and new batches; "
+            f"clear the output or reuse the original checkpoint_dir")
+    writer = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1)
+              .parquet(input_dir)
+              .writeStream.foreachBatch(process)
+              .option("checkpointLocation", checkpoint_dir))
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_triples(spark: SparkSession, input_dir: str, out_dir: str,
@@ -44,24 +111,6 @@ def stream_triples(spark: SparkSession, input_dir: str, out_dir: str,
     -> parquet append. Returns the started StreamingQuery (caller
     awaits/stops). availableNow drains what exists and stops — the
     backfill-then-incremental pattern."""
-    # batch_id=N overwrite idempotency holds only while checkpoint_dir
-    # and out_dir stay paired: a fresh checkpoint over an existing
-    # out_dir restarts batch ids at 0 and silently overwrites SOME old
-    # batch dirs while leaving others — a mixed old/new triples table.
-    # Refuse the mismatch instead.
-    if any(name.startswith("batch_id=")
-           for name in fs_list_names(spark, out_dir)):
-        ckpt_populated = fs_list_names(spark, checkpoint_dir)
-        if not ckpt_populated:
-            raise ValueError(
-                f"out_dir {out_dir} already holds batch_id=* output but "
-                f"checkpoint_dir {checkpoint_dir} is empty — restarting "
-                f"would reuse batch ids and mix old and new batches; "
-                f"clear out_dir or reuse the original checkpoint_dir")
-    stream = (spark.readStream.schema(DOCS_SCHEMA)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(input_dir))
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         # per-batch subdirectory + overwrite = idempotent under replay:
         # if the driver dies after the write but before the stream
@@ -72,12 +121,8 @@ def stream_triples(spark: SparkSession, input_dir: str, out_dir: str,
          .write.mode("overwrite")
          .parquet(f"{out_dir}/batch_id={batch_id}"))
 
-    writer = (stream.writeStream
-              .foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run_stream(spark, DOCS_SCHEMA, input_dir, checkpoint_dir,
+                       process, trigger_available_now, batch_out=out_dir)
 
 
 # --- event-time windowed aggregation + sessionization -----------------------
@@ -247,9 +292,30 @@ def dedup_events_within_watermark(events: DataFrame,
             .dropDuplicatesWithinWatermark(list(keys)))
 
 
-# --- streaming MERGE INTO the canonical store --------------------------------
+# --- the versioned store protocol (module docstring) ------------------------
 
 STORE_POINTER = "_latest.json"
+
+# one table of a version: (name, frame, marker count key or None); the
+# name "" is the version directory itself
+Table = tuple[str, DataFrame, str | None]
+
+
+def _table_path(store_dir: str, version: int, name: str = "") -> str:
+    return f"{store_dir}/v={version}" + (f"/{name}" if name else "")
+
+
+def _marker_path(store_dir: str, version: int) -> str:
+    return f"{store_dir}/_commit_v{version}.json"
+
+
+def _committed_versions(spark: SparkSession, store_dir: str) -> list[int]:
+    """Versions with a commit marker, ascending (the .tmp of a marker
+    being published is not one)."""
+    return sorted(int(name[len("_commit_v"):-len(".json")])
+                  for name in fs_list_names(spark, store_dir)
+                  if name.startswith("_commit_v")
+                  and name.endswith(".json"))
 
 
 def current_store(spark: SparkSession, store_dir: str) -> DataFrame | None:
@@ -259,17 +325,103 @@ def current_store(spark: SparkSession, store_dir: str) -> DataFrame | None:
     ptr = _read_pointer(spark, store_dir)
     if not ptr:
         return None
-    return spark.read.parquet(f"{store_dir}/v={ptr['version']}")
+    return spark.read.parquet(_table_path(store_dir, ptr["version"]))
 
 
 def _read_pointer(spark: SparkSession, store_dir: str) -> dict | None:
     """The pointer marker, or None before the first commit
     (_fs_read_json raises on a missing path, so probe the listing)."""
-    from ..plans.checkpointing import _fs_read_json
     if STORE_POINTER not in fs_list_names(spark, store_dir):
         return None
     return _fs_read_json(spark, f"{store_dir}/{STORE_POINTER}")
 
+
+def _commit_target(spark: SparkSession, store_dir: str,
+                   batch: dict | None = None
+                   ) -> tuple[int, int | None] | None:
+    """(version, parent) of the next commit to `store_dir`, or None when
+    there is nothing to commit: the one version/parent rule. `batch` is
+    the committing stream batch ({query_id, batch_id}), None for a
+    maintenance pass. When the latest commit of `batch`'s stream is
+    `batch` itself, the batch is a crash replay: it rewrites that commit
+    from the same parent if no commit follows it, and commits nothing if
+    the pointer's lineage already holds it. Any other commit takes the
+    next version above every committed one, with the pointer's version
+    (None on an empty store) as parent."""
+    versions = _committed_versions(spark, store_dir)
+    ptr = _read_pointer(spark, store_dir)
+    head = ptr["version"] if ptr else None
+    later = {}      # parent of each commit after the stream's latest one
+    for v in reversed(versions) if batch else ():
+        marker = _fs_read_json(spark, _marker_path(store_dir, v))
+        wrote = marker.get("stream_batch")
+        if not wrote or wrote["query_id"] != batch["query_id"]:
+            later[v] = marker["parent"]
+            continue
+        if wrote["batch_id"] == batch["batch_id"]:
+            if v == versions[-1]:
+                return v, marker["parent"]
+            u = head
+            while u in later:
+                u = later[u]
+            if u == v:
+                return None
+        break
+    return (versions[-1] + 1) if versions else 0, head
+
+
+def _commit(spark: SparkSession, store_dir: str, version: int,
+            parent: int | None, tables: list[Table], **extra) -> dict:
+    """Commit `tables` as `version` of the store: write each one with
+    overwrite, counting its rows inside that write, then publish the
+    marker {version, parent, counts..., **extra} and then the pointer.
+    Returns the marker."""
+    counts = {}
+    for name, df, count_key in tables:
+        written, obs = observe_counts(df, "count(1) AS n")
+        written.write.mode("overwrite").parquet(
+            _table_path(store_dir, version, name))
+        if count_key:
+            counts[count_key] = obs.get["n"]
+    marker = {"version": version, "parent": parent, **counts, **extra}
+    _fs_write_json_atomic(spark, _marker_path(store_dir, version), marker)
+    _fs_write_json_atomic(spark, f"{store_dir}/{STORE_POINTER}",
+                          {"version": version, "parent": parent})
+    return marker
+
+
+def _versioned_stream(spark: SparkSession, schema: str, input_dir: str,
+                      store_dir: str, checkpoint_dir: str,
+                      trigger_available_now: bool, step):
+    """Run a merging stream over the versioned store: each micro-batch
+    commits the tables `step(batch_df, parent)` returns. `parent(name,
+    empty=None)` reads table `name` of the version being built on, or
+    gives `empty` on an empty store. Returns the started
+    StreamingQuery."""
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        # the stream's persistent id, set by Spark on the thread that
+        # runs the batch (StreamExecution.QUERY_ID_KEY)
+        batch = {"query_id": batch_df.sparkSession.sparkContext
+                 .getLocalProperty("sql.streaming.queryId"),
+                 "batch_id": batch_id}
+        target = _commit_target(spark, store_dir, batch)
+        if target is None:
+            return
+        version, parent = target
+
+        def read_parent(name: str = "", empty=None):
+            if parent is None:
+                return empty
+            return spark.read.parquet(_table_path(store_dir, parent, name))
+
+        _commit(spark, store_dir, version, parent,
+                step(batch_df, read_parent), stream_batch=batch)
+
+    return _run_stream(spark, schema, input_dir, checkpoint_dir, process,
+                       trigger_available_now)
+
+
+# --- streaming MERGE INTO the canonical store --------------------------------
 
 def stream_merge_triples(spark: SparkSession, input_dir: str,
                          store_dir: str, checkpoint_dir: str,
@@ -278,62 +430,24 @@ def stream_merge_triples(spark: SparkSession, input_dir: str,
     NEW documents and upserts them into a versioned canonical store via
     relations.merge_triples_incremental(mode='append') — the
     snapshot-chain pattern Iceberg gives MERGE for free, reproduced on
-    plain parquet so crash-replays stay exactly-once:
-
-      * version v=<batch_id> is derived from the latest COMMITTED
-        parent and written whole (overwrite);
-      * a JSON pointer marker {version, parent} commits the version
-        atomically AFTER the data lands;
-      * a replayed batch (driver died between pointer commit and the
-        stream checkpoint's offset commit) sees pointer.version ==
-        its own batch_id and re-derives from the SAME parent — support
-        counts are never double-applied.
+    plain parquet (module docstring), so a crash replay re-derives its
+    version from the same parent and support counts are never
+    double-applied.
 
     Old versions accumulate like Iceberg snapshots; expiring them is a
-    maintenance pass (delete every v= dir except the pointer's version
-    and parent), deliberately out of the hot path. Returns the started
-    StreamingQuery."""
+    maintenance pass (expire_store_versions), deliberately out of the
+    hot path. Returns the started StreamingQuery."""
     from ..operators.relations import (dedup_triples,
                                        merge_triples_incremental)
-    from ..plans.checkpointing import _fs_write_json_atomic
 
-    stream = (spark.readStream.schema(DOCS_SCHEMA)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(input_dir))
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, parent) -> list[Table]:
         inc = dedup_triples(triples_from_docs(batch_df))
-        ptr = _read_pointer(spark, store_dir)
-        if ptr and ptr["version"] == batch_id:     # crash replay
-            parent = ptr["parent"]
-        elif ptr:
-            parent = ptr["version"]
-        else:
-            parent = None
-        cur = (spark.read.parquet(f"{store_dir}/v={parent}")
-               if parent is not None else inc.limit(0))
-        merged = merge_triples_incremental(cur, inc, mode="append") \
-            .drop("action")
-        merged.write.mode("overwrite") \
-            .parquet(f"{store_dir}/v={batch_id}")
-        # per-version commit marker BEFORE the pointer flips: the row
-        # count re-reads only parquet footers (metadata, not data) and
-        # gives store_history/expiry an authoritative snapshot log —
-        # the role Iceberg's metadata.json + snapshot list plays
-        n_rows = spark.read.parquet(f"{store_dir}/v={batch_id}").count()
-        _fs_write_json_atomic(
-            spark, f"{store_dir}/_commit_v{batch_id}.json",
-            {"version": batch_id, "parent": parent, "n_rows": n_rows})
-        _fs_write_json_atomic(
-            spark, f"{store_dir}/{STORE_POINTER}",
-            {"version": batch_id, "parent": parent})
+        merged = merge_triples_incremental(
+            parent("", inc.limit(0)), inc, mode="append").drop("action")
+        return [("", merged, "n_rows")]
 
-    writer = (stream.writeStream
-              .foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _versioned_stream(spark, DOCS_SCHEMA, input_dir, store_dir,
+                             checkpoint_dir, trigger_available_now, step)
 
 
 def stream_daily_counts(spark: SparkSession, input_dir: str,
@@ -342,53 +456,25 @@ def stream_daily_counts(spark: SparkSession, input_dir: str,
     """Streaming maintenance of the per-(event_type, day) volume table
     that feeds content_stats.score_daily_counts — the anomaly monitor
     advances with batch-sized increments instead of re-scanning the
-    event history. Same versioned snapshot-chain discipline as
-    stream_merge_triples: each micro-batch's counts SUM into the
-    latest committed parent, the version commits via the atomic
-    pointer AFTER the data lands, and a crash-replayed batch
-    re-derives from the SAME parent — counts are never double-applied
-    (the additive-merge analog of the triple store's support rule).
-    Scoring the CURRENT snapshot reproduces the batch operator exactly
-    (pinned by test_streaming), so alert flags are always consistent
-    with one committed version. Returns the started StreamingQuery."""
-    from ..plans.checkpointing import _fs_write_json_atomic
-
-    stream = (spark.readStream.schema(EVENTS_SCHEMA)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(input_dir))
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    event history. Same versioned store as stream_merge_triples: each
+    micro-batch's counts SUM into the parent version, and a
+    crash-replayed batch re-derives from the SAME parent — counts are
+    never double-applied (the additive-merge analog of the triple
+    store's support rule). Scoring the CURRENT snapshot reproduces the
+    batch operator exactly (pinned by test_streaming), so alert flags
+    are always consistent with one committed version. Returns the
+    started StreamingQuery."""
+    def step(batch_df: DataFrame, parent) -> list[Table]:
         inc = (batch_df
                .groupBy("event_type", F.to_date("ts").alias("day"))
                .agg(F.count("*").cast("bigint").alias("n")))
-        ptr = _read_pointer(spark, store_dir)
-        if ptr and ptr["version"] == batch_id:     # crash replay
-            parent = ptr["parent"]
-        elif ptr:
-            parent = ptr["version"]
-        else:
-            parent = None
-        cur = (spark.read.parquet(f"{store_dir}/v={parent}")
-               if parent is not None else inc.limit(0))
-        merged = (cur.unionByName(inc)
+        merged = (parent("", inc.limit(0)).unionByName(inc)
                   .groupBy("event_type", "day")
                   .agg(F.sum("n").cast("bigint").alias("n")))
-        merged.write.mode("overwrite") \
-            .parquet(f"{store_dir}/v={batch_id}")
-        n_rows = spark.read.parquet(f"{store_dir}/v={batch_id}").count()
-        _fs_write_json_atomic(
-            spark, f"{store_dir}/_commit_v{batch_id}.json",
-            {"version": batch_id, "parent": parent, "n_rows": n_rows})
-        _fs_write_json_atomic(
-            spark, f"{store_dir}/{STORE_POINTER}",
-            {"version": batch_id, "parent": parent})
+        return [("", merged, "n_rows")]
 
-    writer = (stream.writeStream
-              .foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _versioned_stream(spark, EVENTS_SCHEMA, input_dir, store_dir,
+                             checkpoint_dir, trigger_available_now, step)
 
 
 # --- snapshot maintenance (the Iceberg metadata surface) ---------------------
@@ -402,14 +488,12 @@ def store_history(spark: SparkSession, store_dir: str) -> list[dict]:
     ptr = _read_pointer(spark, store_dir)
     if not ptr:
         return []
-    from ..plans.checkpointing import _fs_read_json
     out = []
-    for name in fs_list_names(spark, store_dir):
-        if name.startswith("_commit_v") and name.endswith(".json"):
-            c = _fs_read_json(spark, f"{store_dir}/{name}")
-            c["is_current"] = c["version"] == ptr["version"]
-            out.append(c)
-    return sorted(out, key=lambda c: c["version"], reverse=True)
+    for v in reversed(_committed_versions(spark, store_dir)):
+        c = _fs_read_json(spark, _marker_path(store_dir, v))
+        c["is_current"] = c["version"] == ptr["version"]
+        out.append(c)
+    return out
 
 
 def store_at_version(spark: SparkSession, store_dir: str,
@@ -421,7 +505,7 @@ def store_at_version(spark: SparkSession, store_dir: str,
         raise ValueError(
             f"version {version} is not a committed snapshot of "
             f"{store_dir} (committed: {sorted(committed)})")
-    return spark.read.parquet(f"{store_dir}/v={version}")
+    return spark.read.parquet(_table_path(store_dir, version))
 
 
 def store_changes(spark: SparkSession, store_dir: str,
@@ -459,8 +543,9 @@ def expire_store_versions(spark: SparkSession, store_dir: str,
     """Snapshot expiry (Iceberg's expire_snapshots maintenance pass,
     deliberately OUT of the hot path): delete every committed version
     dir + marker except the `keep_last` most recent, and never the
-    current pointer's version or its parent (the crash-replay
-    re-derivation source). Returns the expired version numbers."""
+    current pointer's version or its parent (while the pointer is a
+    stream batch's commit, a replay of that batch rebuilds it from that
+    parent). Returns the expired version numbers."""
     ptr = _read_pointer(spark, store_dir)
     if not ptr:
         return []
@@ -469,15 +554,14 @@ def expire_store_versions(spark: SparkSession, store_dir: str,
         keep.add(ptr["parent"])
     hist = store_history(spark, store_dir)
     keep.update(c["version"] for c in hist[:max(keep_last, 0)])
-    from ..plans.checkpointing import _fs
     fs, _ = _fs(spark, store_dir)
     expired = []
     for c in hist:
         v = c["version"]
         if v in keep:
             continue
-        _, vdir = _fs(spark, f"{store_dir}/v={v}")
-        _, marker = _fs(spark, f"{store_dir}/_commit_v{v}.json")
+        _, vdir = _fs(spark, _table_path(store_dir, v))
+        _, marker = _fs(spark, _marker_path(store_dir, v))
         if fs.exists(vdir):
             fs.delete(vdir, True)
         if fs.exists(marker):
@@ -497,34 +581,18 @@ def compact_store_version(spark: SparkSession, store_dir: str,
     still works until it is expired. Rows are identical by
     construction — only the file layout changes.
 
-    Version id = current + 1 shifted past the streaming batch-id space
-    is NOT needed: the stream derives its version from batch_id, so a
-    compaction between stream runs must not collide with a future
-    batch id. We use negative-free, collision-free ids by continuing
-    the chain at max(committed) + 1; a later stream restart on the
-    same checkpoint resumes at its own batch ids only on a FRESH
-    store, so the documented contract is: compact between ingest
-    generations, not between micro-batches of a live stream.
-
-    Returns the new commit marker dict."""
-    from ..plans.checkpointing import _fs_write_json_atomic
-    ptr = _read_pointer(spark, store_dir)
-    if not ptr:
+    The new version is the next one above every committed version
+    (module docstring), so a later micro-batch of the stream builds on
+    the compaction instead of replaying over it. Returns the new commit
+    marker dict."""
+    version, parent = _commit_target(spark, store_dir)
+    if parent is None:
         raise ValueError(f"nothing to compact: {store_dir} has no "
                          f"committed snapshot")
-    hist = store_history(spark, store_dir)
-    new_v = max(c["version"] for c in hist) + 1
-    cur = spark.read.parquet(f"{store_dir}/v={ptr['version']}")
-    (cur.repartition(target_files)
-        .write.mode("overwrite").parquet(f"{store_dir}/v={new_v}"))
-    n_rows = spark.read.parquet(f"{store_dir}/v={new_v}").count()
-    marker = {"version": new_v, "parent": ptr["version"],
-              "n_rows": n_rows, "compaction": True}
-    _fs_write_json_atomic(spark, f"{store_dir}/_commit_v{new_v}.json",
-                          marker)
-    _fs_write_json_atomic(spark, f"{store_dir}/{STORE_POINTER}",
-                          {"version": new_v, "parent": ptr["version"]})
-    return marker
+    cur = spark.read.parquet(_table_path(store_dir, parent))
+    return _commit(spark, store_dir, version, parent,
+                   [("", cur.repartition(target_files), "n_rows")],
+                   compaction=True)
 
 
 # --- stream-stream join ------------------------------------------------------
@@ -593,29 +661,12 @@ def stream_entailment_triples(spark: SparkSession, input_dir: str,
     kg_entailment exists for provenance audits."""
     from ..operators.graphops import kg_entailment_delta
     from ..operators.relations import dedup_triples
-    from ..plans.checkpointing import _fs_write_json_atomic
 
-    stream = (spark.readStream.schema(DOCS_SCHEMA)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(input_dir))
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, parent) -> list[Table]:
         inc = (dedup_triples(triples_from_docs(batch_df))
                .select("subject", "predicate", "object").distinct())
-        ptr = _read_pointer(spark, store_dir)
-        if ptr and ptr["version"] == batch_id:     # crash replay
-            parent = ptr["parent"]
-        elif ptr:
-            parent = ptr["version"]
-        else:
-            parent = None
-        if parent is not None:
-            old_a = spark.read.parquet(
-                f"{store_dir}/v={parent}/asserted")
-            old_i = spark.read.parquet(
-                f"{store_dir}/v={parent}/inferred")
-        else:
-            old_a, old_i = inc.limit(0), inc.limit(0)
+        old_a = parent("asserted", inc.limit(0))
+        old_i = parent("inferred", inc.limit(0))
         delta_inf = (kg_entailment_delta(old_a, inc)
                      .select("subject", "predicate", "object"))
         asserted = (old_a.unionByName(inc).distinct()
@@ -623,28 +674,11 @@ def stream_entailment_triples(spark: SparkSession, input_dir: str,
         inferred = (old_i.unionByName(delta_inf).distinct()
                     .join(asserted, ["subject", "predicate", "object"],
                           "left_anti"))
-        asserted.write.mode("overwrite") \
-            .parquet(f"{store_dir}/v={batch_id}/asserted")
-        inferred.write.mode("overwrite") \
-            .parquet(f"{store_dir}/v={batch_id}/inferred")
-        n_a = spark.read.parquet(
-            f"{store_dir}/v={batch_id}/asserted").count()
-        n_i = spark.read.parquet(
-            f"{store_dir}/v={batch_id}/inferred").count()
-        _fs_write_json_atomic(
-            spark, f"{store_dir}/_commit_v{batch_id}.json",
-            {"version": batch_id, "parent": parent,
-             "n_asserted": n_a, "n_inferred": n_i})
-        _fs_write_json_atomic(
-            spark, f"{store_dir}/{STORE_POINTER}",
-            {"version": batch_id, "parent": parent})
+        return [("asserted", asserted, "n_asserted"),
+                ("inferred", inferred, "n_inferred")]
 
-    writer = (stream.writeStream
-              .foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _versioned_stream(spark, DOCS_SCHEMA, input_dir, store_dir,
+                             checkpoint_dir, trigger_available_now, step)
 
 
 def stream_neardup_pairs(spark: SparkSession, input_dir: str,
@@ -664,33 +698,15 @@ def stream_neardup_pairs(spark: SparkSession, input_dir: str,
     `pairs` equals the batch minhash_lsh_pairs over all arrived docs
     (every pair is found when its LATER doc arrives)."""
     from ..operators.textops import _minhash_tables, _verify_pairs
-    from ..plans.checkpointing import _fs_write_json_atomic
 
-    stream = (spark.readStream.schema(DOCS_SCHEMA)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(input_dir))
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, parent) -> list[Table]:
         new_sets, new_bands = _minhash_tables(
             batch_df.select("doc_id", "text"))
-        ptr = _read_pointer(spark, store_dir)
-        if ptr and ptr["version"] == batch_id:     # crash replay
-            parent = ptr["parent"]
-        elif ptr:
-            parent = ptr["version"]
-        else:
-            parent = None
-        if parent is not None:
-            old_sets = spark.read.parquet(f"{store_dir}/v={parent}/sets")
-            old_bands = spark.read.parquet(f"{store_dir}/v={parent}/bands")
-            old_pairs = spark.read.parquet(f"{store_dir}/v={parent}/pairs")
-        else:
-            old_sets = new_sets.limit(0)
-            old_bands = new_bands.limit(0)
-            old_pairs = spark.createDataFrame(
-                [], "a bigint, b bigint, jaccard double")
-        all_bands = old_bands.unionByName(new_bands)
-        all_sets = old_sets.unionByName(new_sets)
+        all_sets = parent("sets", new_sets.limit(0)).unionByName(new_sets)
+        all_bands = (parent("bands", new_bands.limit(0))
+                     .unionByName(new_bands))
+        old_pairs = parent("pairs", spark.createDataFrame(
+            [], "a bigint, b bigint, jaccard double"))
         d = new_bands.toDF("d", "band_idx", "band_key")
         x = all_bands.toDF("x", "band_idx", "band_key")
         cand = (d.join(x, ["band_idx", "band_key"])
@@ -702,30 +718,11 @@ def stream_neardup_pairs(spark: SparkSession, input_dir: str,
                  .unionByName(_verify_pairs(cand, all_sets))
                  .distinct()
                  .localCheckpoint(eager=True))
-        all_sets.write.mode("overwrite") \
-            .parquet(f"{store_dir}/v={batch_id}/sets")
-        all_bands.write.mode("overwrite") \
-            .parquet(f"{store_dir}/v={batch_id}/bands")
-        pairs.write.mode("overwrite") \
-            .parquet(f"{store_dir}/v={batch_id}/pairs")
-        n_docs = spark.read.parquet(
-            f"{store_dir}/v={batch_id}/sets").count()
-        n_pairs = spark.read.parquet(
-            f"{store_dir}/v={batch_id}/pairs").count()
-        _fs_write_json_atomic(
-            spark, f"{store_dir}/_commit_v{batch_id}.json",
-            {"version": batch_id, "parent": parent,
-             "n_docs": n_docs, "n_pairs": n_pairs})
-        _fs_write_json_atomic(
-            spark, f"{store_dir}/{STORE_POINTER}",
-            {"version": batch_id, "parent": parent})
+        return [("sets", all_sets, "n_docs"), ("bands", all_bands, None),
+                ("pairs", pairs, "n_pairs")]
 
-    writer = (stream.writeStream
-              .foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _versioned_stream(spark, DOCS_SCHEMA, input_dir, store_dir,
+                             checkpoint_dir, trigger_available_now, step)
 
 
 def stream_fused_triples(spark: SparkSession, input_dir: str,
@@ -744,27 +741,14 @@ def stream_fused_triples(spark: SparkSession, input_dir: str,
     pointer with crash replay, exactly-once like the other streams.
     Invariant the test pins: after draining, `fused` equals the batch
     triple_fusion over all arrived documents."""
-    from ..plans.checkpointing import _fs_write_json_atomic
-
-    stream = (spark.readStream.schema(DOCS_SCHEMA)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(input_dir))
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, parent) -> list[Table]:
         inc = (triples_from_docs(batch_df)
                .groupBy("subject", "predicate", "object")
                .agg(F.sum("confidence").alias("w"),
                     F.countDistinct("doc_id").alias("n_docs"),
                     F.count("*").alias("n_mentions")))
-        ptr = _read_pointer(spark, store_dir)
-        if ptr and ptr["version"] == batch_id:     # crash replay
-            parent = ptr["parent"]
-        elif ptr:
-            parent = ptr["version"]
-        else:
-            parent = None
-        if parent is not None:
-            old = spark.read.parquet(f"{store_dir}/v={parent}/evidence")
+        old = parent("evidence")
+        if old is not None:
             merged = (old.unionByName(inc)
                       .groupBy("subject", "predicate", "object")
                       .agg(F.sum("w").alias("w"),
@@ -786,28 +770,11 @@ def stream_fused_triples(spark: SparkSession, input_dir: str,
                          F.col("win.n_docs").alias("n_docs"),
                          F.col("win.n_mentions").alias("n_mentions"),
                          "n_alternatives"))
-        merged.write.mode("overwrite") \
-            .parquet(f"{store_dir}/v={batch_id}/evidence")
-        fused.write.mode("overwrite") \
-            .parquet(f"{store_dir}/v={batch_id}/fused")
-        n_ev = spark.read.parquet(
-            f"{store_dir}/v={batch_id}/evidence").count()
-        n_fused = spark.read.parquet(
-            f"{store_dir}/v={batch_id}/fused").count()
-        _fs_write_json_atomic(
-            spark, f"{store_dir}/_commit_v{batch_id}.json",
-            {"version": batch_id, "parent": parent,
-             "n_evidence": n_ev, "n_fused": n_fused})
-        _fs_write_json_atomic(
-            spark, f"{store_dir}/{STORE_POINTER}",
-            {"version": batch_id, "parent": parent})
+        return [("evidence", merged, "n_evidence"),
+                ("fused", fused, "n_fused")]
 
-    writer = (stream.writeStream
-              .foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _versioned_stream(spark, DOCS_SCHEMA, input_dir, store_dir,
+                             checkpoint_dir, trigger_available_now, step)
 
 
 def retract_store_version(spark: SparkSession, store_dir: str,
@@ -824,28 +791,17 @@ def retract_store_version(spark: SparkSession, store_dir: str,
     two snapshots yields exactly the delete/update rows the takedown
     caused. Returns the commit dict."""
     from ..operators.relations import dedup_retract
-    from ..plans.checkpointing import _fs_write_json_atomic
 
-    ptr = _read_pointer(spark, store_dir)
-    if not ptr:
+    version, parent = _commit_target(spark, store_dir)
+    if parent is None:
         raise ValueError(f"{store_dir} has no committed version to "
                          f"retract from")
-    parent = ptr["version"]
-    version = parent + 1
-    ev = spark.read.parquet(evidence_dir)
     removed = spark.createDataFrame(
         [(d,) for d in removed_doc_ids], "doc_id string")
-    new = dedup_retract(ev, removed)
-    new.write.mode("overwrite").parquet(f"{store_dir}/v={version}")
-    n_rows = spark.read.parquet(f"{store_dir}/v={version}").count()
-    commit = {"version": version, "parent": parent, "n_rows": n_rows,
-              "action": "retract", "n_docs_removed": len(removed_doc_ids)}
-    _fs_write_json_atomic(
-        spark, f"{store_dir}/_commit_v{version}.json", commit)
-    _fs_write_json_atomic(
-        spark, f"{store_dir}/{STORE_POINTER}",
-        {"version": version, "parent": parent})
-    return commit
+    new = dedup_retract(spark.read.parquet(evidence_dir), removed)
+    return _commit(spark, store_dir, version, parent,
+                   [("", new, "n_rows")], action="retract",
+                   n_docs_removed=len(removed_doc_ids))
 
 
 # --- streaming RDF document ingestion with recovery --------------------------
@@ -873,18 +829,6 @@ def stream_rdf_triples(spark: SparkSession, input_dir: str, out_dir: str,
     from ..operators.rdf_full import parse_turtle_full
     from ..operators.recovery import reparse_with_corrections
 
-    if any(name.startswith("batch_id=")
-           for name in fs_list_names(spark, f"{out_dir}/triples")):
-        if not fs_list_names(spark, checkpoint_dir):
-            raise ValueError(
-                f"{out_dir} already holds batch output but "
-                f"{checkpoint_dir} is empty — restarting would reuse "
-                f"batch ids; clear out_dir or reuse the checkpoint")
-
-    stream = (spark.readStream.schema(RDF_DOCS_SCHEMA)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(input_dir))
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         docs = batch_df.localCheckpoint(eager=True)  # parsed twice below
         parsed = parse_turtle_full(docs).localCheckpoint(eager=True)
@@ -899,9 +843,6 @@ def stream_rdf_triples(spark: SparkSession, input_dir: str, out_dir: str,
         dead.write.mode("overwrite").parquet(
             f"{out_dir}/quarantine/batch_id={batch_id}")
 
-    writer = (stream.writeStream
-              .foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run_stream(spark, RDF_DOCS_SCHEMA, input_dir, checkpoint_dir,
+                       process, trigger_available_now,
+                       batch_out=f"{out_dir}/triples")

@@ -8,10 +8,17 @@ snapshot chain).
         --store /data/triple_store [--compact 64] [--expire-keep 2] \
         [--retract-docs DOC:000003,DOC:000017 --evidence /data/triples]
 
+Run it between ingest runs. Each action commits a new version above
+every committed one, and the stream's next micro-batch builds on it (the
+store protocol is stated once, in streaming/pipeline.py). A micro-batch
+replayed after a crash rebuilds its own commit from that commit's
+parent while no later commit exists, and commits nothing once a
+maintenance commit builds on it.
+
 Actions (all optional; retraction runs first — the takedown must land
 before layout maintenance — then compaction, so expiry can reclaim the
-pre-compaction layout on the NEXT run — the current pointer's parent is
-never expired, it is the crash-replay re-derivation source):
+pre-compaction layout on the NEXT run; the current pointer's version
+and parent are never expired):
   --retract-docs IDS  takedown pass: re-aggregate only the 7-tuple keys
                    the removed docs evidenced (relations.dedup_retract
                    over --evidence) and commit the result as a new

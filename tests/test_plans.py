@@ -1012,6 +1012,53 @@ def test_semi_naive_loops_live_in_fixpoint():
                      **_FIXPOINT_LOOP_ALLOWLIST}, found
 
 
+def test_store_protocol_lives_in_one_place():
+    """streaming/pipeline.py holds the versioned-store protocol once:
+    the stream driver is the only foreachBatch, the commit is the only
+    marker write and then the only pointer write, every commit takes
+    its version and parent from the one rule, and no DataFrame count
+    reads a written version back (the counts come from the writes)."""
+    import ast
+    import pathlib
+
+    src = pathlib.Path(
+        "cspirit_ontology_information_extraction_opus4plan_spark"
+        "/streaming/pipeline.py").read_text()
+    calls, literals = [], []
+    for fn in ast.parse(src).body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        body = fn.body[1:] if ast.get_docstring(fn) else fn.body
+        for node in (n for stmt in body for n in ast.walk(stmt)):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = (f.attr if isinstance(f, ast.Attribute)
+                        else getattr(f, "id", ""))
+                calls.append((node.lineno, fn.name, name, node))
+            elif (isinstance(node, ast.Constant)
+                  and "_commit_v" in str(node.value)):
+                literals.append(fn.name)
+
+    def callers(name):
+        return [fn for _, fn, n, _ in sorted(calls, key=lambda c: c[0])
+                if n == name]
+
+    assert callers("foreachBatch") == ["_run_stream"]
+    writes = [ast.get_source_segment(src, node.args[1])
+              for _, fn, n, node in sorted(calls, key=lambda c: c[0])
+              if n == "_fs_write_json_atomic"]
+    assert callers("_fs_write_json_atomic") == ["_commit", "_commit"]
+    assert writes[0].startswith("_marker_path(") and "STORE_POINTER" \
+        in writes[1], writes
+    assert set(literals) == {"_marker_path", "_committed_versions"}
+    committers = {"_versioned_stream", "compact_store_version",
+                  "retract_store_version"}
+    assert set(callers("_commit")) == committers
+    assert set(callers("_commit_target")) == committers
+    assert not [fn for _, fn, n, node in calls
+                if n == "count" and not node.args], "read-back count"
+
+
 def test_constant_tables_are_local_relations(spark):
     """The ontology dimension tables plan as LocalTableScan (scanned by
     the driver with no Python task), never as a Python-RDD scan."""

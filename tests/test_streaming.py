@@ -702,3 +702,209 @@ def test_stream_stream_attribution_join(spark, sf_dir, event_files):
             if str(df[c].dtype).startswith("datetime"):
                 df[c] = df[c].astype("datetime64[us]")
     pd.testing.assert_frame_equal(_sorted(got), _sorted(want))
+
+
+# --- the store protocol under maintenance, new checkpoints and replay -------
+
+def _store_tables(spark, store):
+    """Every table of every version dir under `store`, as sorted frames
+    keyed by path relative to the store."""
+    import os
+    out = {}
+    for root, _, files in os.walk(store):
+        if any(f.endswith(".parquet") for f in files):
+            out[os.path.relpath(root, store)] = _sorted(
+                spark.read.parquet(root).toPandas())
+    return out
+
+
+def _assert_counts_match_rows(spark, store, hist):
+    for h in hist:
+        assert spark.read.parquet(f"{store}/v={h['version']}").count() \
+            == h["n_rows"], h
+
+
+@pytest.mark.parametrize("action", ["retract", "compact"])
+def test_maintenance_commit_is_parent_of_next_batch(spark, sf_dir, staged,
+                                                    tmp_path, action):
+    """A maintenance commit between two ingest runs of one stream is
+    built on by the next micro-batch, never replayed over: it stays in
+    history as the new version's parent, and a retracted doc's triples
+    stay out of the store."""
+    import os
+
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators.relations import (  # noqa: E501
+        dedup_triples,
+    )
+    from cspirit_ontology_information_extraction_opus4plan_spark.streaming.pipeline import (  # noqa: E501
+        _read_pointer,
+        compact_store_version,
+        current_store,
+        retract_store_version,
+        store_history,
+        stream_merge_triples,
+    )
+
+    in_dir, out_dir, ckpt = staged
+    store = out_dir + "_store"
+    held = str(tmp_path / "held.parquet")
+    os.replace(f"{in_dir}/part1.parquet", held)
+    stream_merge_triples(spark, in_dir, store, ckpt).awaitTermination(120)
+
+    full = triples_from_docs(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    if action == "retract":
+        ev_dir = str(tmp_path / "evidence")
+        triples_from_docs(spark.read.parquet(in_dir)).write.parquet(ev_dir)
+        victim = (spark.read.parquet(ev_dir).select("doc_id")
+                  .orderBy("doc_id").first()["doc_id"])
+        commit = retract_store_version(spark, store, ev_dir, [victim])
+        want = dedup_triples(full.filter(F.col("doc_id") != victim))
+    else:
+        commit = compact_store_version(spark, store, target_files=2)
+        want = dedup_triples(full)
+    assert commit["version"] == 1 and commit["parent"] == 0
+
+    os.replace(held, f"{in_dir}/part1.parquet")
+    stream_merge_triples(spark, in_dir, store, ckpt).awaitTermination(120)
+
+    assert _read_pointer(spark, store) == {"version": 2, "parent": 1}
+    hist = store_history(spark, store)
+    assert [h["version"] for h in hist] == [2, 1, 0]
+    assert hist[0]["parent"] == 1
+    assert {k: hist[1][k] for k in commit} == commit
+    got = _sorted(current_store(spark, store).toPandas())
+    pd.testing.assert_frame_equal(got, _sorted(want.toPandas()))
+    if action == "retract":     # non-vacuous: the takedown changed rows
+        assert not got.equals(_sorted(dedup_triples(full).toPandas()))
+    _assert_counts_match_rows(spark, store, hist)
+
+
+@pytest.mark.parametrize("n_files", [1, 2])
+def test_fresh_checkpoint_keeps_earlier_versions(spark, sf_dir, staged,
+                                                 tmp_path, n_files):
+    """A new checkpoint over an existing store starts its batch ids at
+    0 but commits above every committed version: version 0 and its
+    marker stay as they were. With one earlier file the old stream's
+    last commit is also batch 0, so only the stream id in its marker
+    tells the new batch 0 from a replay."""
+    import os
+
+    from cspirit_ontology_information_extraction_opus4plan_spark.streaming.pipeline import (  # noqa: E501
+        _read_pointer,
+        store_at_version,
+        store_history,
+        stream_merge_triples,
+    )
+
+    in_dir, out_dir, ckpt = staged
+    store = out_dir + "_store"
+    if n_files == 1:
+        os.remove(f"{in_dir}/part1.parquet")
+    stream_merge_triples(spark, in_dir, store, ckpt).awaitTermination(120)
+    v0 = _sorted(store_at_version(spark, store, 0).toPandas())
+    m0 = store_history(spark, store)[-1]
+
+    more = tmp_path / "more"
+    more.mkdir()
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").toPandas()
+    docs.iloc[: len(docs) // 4].to_parquet(more / "part2.parquet",
+                                           index=False)
+    stream_merge_triples(spark, str(more), store,
+                         ckpt + "_new").awaitTermination(120)
+
+    assert _read_pointer(spark, store) == {"version": n_files,
+                                           "parent": n_files - 1}
+    hist = store_history(spark, store)
+    assert [h["version"] for h in hist] == list(range(n_files, -1, -1))
+    assert hist[-1] == {**m0, "is_current": False}
+    pd.testing.assert_frame_equal(
+        _sorted(store_at_version(spark, store, 0).toPandas()), v0)
+    _assert_counts_match_rows(spark, store, hist)
+
+
+@pytest.mark.parametrize("writer", ["stream_merge_triples",
+                                    "stream_fused_triples"])
+def test_stream_replays_its_own_commit(spark, staged, writer):
+    """A real crash replay: with the stream checkpoint's last
+    commits/<n> removed, Spark re-runs batch n on restart. The batch
+    finds its own commit as the latest one and rewrites it from the
+    same parent: rows, pointer and history are unchanged."""
+    import os
+
+    from cspirit_ontology_information_extraction_opus4plan_spark.streaming import (  # noqa: E501
+        pipeline as SP,
+    )
+
+    run = getattr(SP, writer)
+    in_dir, out_dir, ckpt = staged
+    store = out_dir + "_store"
+    run(spark, in_dir, store, ckpt).awaitTermination(120)
+    tables = _store_tables(spark, store)
+    ptr = SP._read_pointer(spark, store)
+    hist = SP.store_history(spark, store)
+    assert ptr == {"version": 1, "parent": 0}
+    marker = f"{store}/_commit_v1.json"
+    inode = os.stat(marker).st_ino
+
+    os.remove(f"{ckpt}/commits/1")
+    os.remove(f"{ckpt}/commits/.1.crc")
+    run(spark, in_dir, store, ckpt).awaitTermination(120)
+
+    assert os.stat(marker).st_ino != inode     # batch 1 did re-run
+    assert SP._read_pointer(spark, store) == ptr
+    assert SP.store_history(spark, store) == hist
+    again = _store_tables(spark, store)
+    assert again.keys() == tables.keys()
+    for path, df in tables.items():
+        pd.testing.assert_frame_equal(again[path], df)
+
+
+@pytest.mark.parametrize("crash", ["after_pointer", "before_pointer"])
+def test_replay_after_maintenance_applies_batch_once(spark, sf_dir, staged,
+                                                      crash):
+    """The driver dies after batch 1's commit (after the pointer flip,
+    or between the marker and the pointer), and a compaction runs
+    before the restart. The replayed batch 1 commits nothing when the
+    compaction built on its commit, and commits on top of the
+    compaction when it did not: either way it is applied once."""
+    import os
+
+    from cspirit_ontology_information_extraction_opus4plan_spark.operators.relations import (  # noqa: E501
+        dedup_triples,
+    )
+    from cspirit_ontology_information_extraction_opus4plan_spark.plans.checkpointing import (  # noqa: E501
+        _fs_write_json_atomic,
+    )
+    from cspirit_ontology_information_extraction_opus4plan_spark.streaming.pipeline import (  # noqa: E501
+        _read_pointer,
+        compact_store_version,
+        current_store,
+        store_history,
+        stream_merge_triples,
+    )
+
+    in_dir, out_dir, ckpt = staged
+    store = out_dir + "_store"
+    stream_merge_triples(spark, in_dir, store, ckpt).awaitTermination(120)
+    os.remove(f"{ckpt}/commits/1")
+    os.remove(f"{ckpt}/commits/.1.crc")
+    if crash == "before_pointer":
+        _fs_write_json_atomic(spark, f"{store}/_latest.json",
+                              {"version": 0, "parent": None})
+    compact = compact_store_version(spark, store, target_files=2)
+    stream_merge_triples(spark, in_dir, store, ckpt).awaitTermination(120)
+
+    if crash == "after_pointer":
+        assert compact["parent"] == 1
+        want_ptr = {"version": 2, "parent": 1}
+    else:
+        assert compact["parent"] == 0
+        want_ptr = {"version": 3, "parent": 2}
+    assert _read_pointer(spark, store) == want_ptr
+    assert store_history(spark, store)[0]["version"] == want_ptr["version"]
+    want = dedup_triples(triples_from_docs(
+        spark.read.parquet(f"{sf_dir}/documents.parquet")))
+    pd.testing.assert_frame_equal(
+        _sorted(current_store(spark, store).toPandas()),
+        _sorted(want.toPandas()))
