@@ -2596,11 +2596,10 @@ def q_kg_entailment(spark, sf_dir):
 
 
 def q_kg_entailment_retract(spark, sf_dir):
-    """DRed deletion maintenance of the entailment saturation:
-    asserted edges whose md5(s|p|o) starts with '0' are retracted;
-    suspects factoring through a deleted edge are overdeleted and
-    re-derived from the surviving base. Oracle re-closes the surviving
-    store from scratch — parity proves DRed == full."""
+    """Deletion maintenance of the entailment saturation: asserted
+    edges whose md5(s|p|o) starts with '0' are retracted, and the
+    saturation of the surviving store is kg_entailment over it. The
+    oracle re-closes the surviving store with recursive SQL."""
     from .operators.graphops import kg_entailment_retract
     t = dedup_triples(triples_df(spark, sf_dir)).localCheckpoint(
         eager=True)
@@ -2610,10 +2609,10 @@ def q_kg_entailment_retract(spark, sf_dir):
 
 
 def q_kg_entailment_delta(spark, sf_dir):
-    """Semi-naive incremental entailment under a re-crawl delta: old =
-    the even-doc half-corpus store, delta = the odd-doc edges; returns
-    only the entailments the delta adds, computed with delta-sized
-    frontiers against the old saturation (never a full re-closure)."""
+    """Entailment maintenance under a re-crawl delta: old = the even-doc
+    half-corpus store, delta = the odd-doc edges; returns only the
+    entailments the delta adds: kg_entailment of old + delta minus
+    kg_entailment of old."""
     from .operators.graphops import kg_entailment_delta
     doc_num = F.substring("doc_id", 5, 6).cast("int")
     # splitting needs doc_id, which dedup drops: build the halves from

@@ -309,7 +309,7 @@ def incremental_components(old_mapping: DataFrame,
                            new_edges: DataFrame,
                            **cc_kwargs) -> DataFrame:
     """Semi-naive maintenance of the canonical mapping under a delta —
-    the CC counterpart to graphops.kg_entailment_delta: returns the
+    the CC counterpart to textops.minhash_delta_pairs: returns the
     FULL updated (id, canonical_id) for CC(old graph + delta) without
     re-running components over the full graph.
 

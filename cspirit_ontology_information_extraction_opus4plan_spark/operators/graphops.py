@@ -1160,145 +1160,50 @@ def kg_entailment(triples: DataFrame, max_iter: int = 32) -> DataFrame:
     return _entail_distributed(spark.createDataFrame(pe), max_iter)
 
 
-def kg_entailment_delta(old: DataFrame, delta: DataFrame,
-                        max_iter: int = 32) -> DataFrame:
-    """Semi-naive incremental entailment — maintains the kg_entailment
-    saturation under a re-crawl delta with work proportional to the
-    DELTA, never a re-closure of the full store. Returns exactly
-    saturate(old + delta) minus (saturate(old) union asserted), same
-    (subject, predicate, object, rule) contract as kg_entailment.
-
-    Datalog semi-naive evaluation, specialized to this rule set: for
-    each transitive family (p with inverse q) the old canonical
-    closure B is taken as given — at 100 TB it IS the already-
-    materialized entailment table from the previous run (recomputed
-    here only because the demo store is transient) — and new paths
-    must traverse at least one delta edge, so the seed is the delta
-    extended with old reachability on both ends
-    (D, D.B, B.D, B.D.B — delta-sized equi-joins against B), and only
-    those delta-seeded segments compose to fixpoint. Every frontier is
-    delta-sized; the B x B self-composition that dominates a full
-    re-closure is never executed. The inverse rule is linear, so its
-    delta contribution is just inverse(delta). Suppression set =
-    asserted(old + delta) + inverse(old) + B re-emitted both
-    directions, all equi-anti-joins on the triple key."""
-    po = old.select(*_KEY3).distinct().localCheckpoint(eager=True)
-    pd_ = (delta.select(*_KEY3).distinct()
-           .join(po, _KEY3, "left_anti")
-           .localCheckpoint(eager=True))
-    big = _closures({p: _canon(po, p, q) for p, q in _FAMILIES.items()},
-                    "kg_entailment_delta old", max_iter)  # B: old saturation
-    seeds = {}
-    for p, q in _FAMILIES.items():
-        # delta seed with old reachability attached on both ends
-        d0 = _canon(pd_, p, q)
-        right = d0.unionByName(_compose(d0, big[p])).distinct()
-        seeds[p] = right.unionByName(_compose(big[p], right)).distinct()
-    new = _closures(seeds, "kg_entailment_delta delta", max_iter)
-    cand = reduce(DataFrame.unionByName,
-                  [_both_ways(new[p].join(big[p], _PAIR, "left_anti"),
-                              p, q, "transitive")
-                   for p, q in _FAMILIES.items()],
-                  _inverse_rows(pd_, "inverse"))
-    supp = reduce(DataFrame.unionByName,
-                  [_both_ways(big[p], p, q) for p, q in _FAMILIES.items()],
-                  po.unionByName(pd_).unionByName(_inverse_rows(po)))
-    return cand.join(supp, _KEY3, "left_anti").distinct()
-
-
 def _null_safe(left: DataFrame, right: DataFrame, keys: list[str],
                how: str) -> DataFrame:
     """left semi- or anti-joined (`how`) to right on `keys`, with
     None == None: a retracted row with a null endpoint must still find
-    itself in the store and in the closure."""
+    itself in the store."""
     lt, rt = left.alias("_l"), right.alias("_r")
     return lt.join(rt, [F.col(f"_l.{k}").eqNullSafe(F.col(f"_r.{k}"))
                         for k in keys], how)
 
 
+def kg_entailment_delta(old: DataFrame, delta: DataFrame,
+                        max_iter: int = 32) -> DataFrame:
+    """Entailment maintenance under a re-crawl delta: the inferred rows
+    that asserting `delta` on top of `old` adds, i.e.
+    kg_entailment(old + delta) minus the (subject, predicate, object)
+    rows of kg_entailment(old), compared with None == None. Same
+    (subject, predicate, object, rule) contract as kg_entailment.
+
+    Both saturations are kg_entailment, so an ontology-sized store is
+    two bounded collections solved in the driver, and a larger one runs
+    kg_entailment's distributed path. A delta-seeded closure would only
+    save work if the old saturation were read from storage; recomputed,
+    it costs a full closure of old on top of its own rounds."""
+    both = old.select(*_KEY3).unionByName(delta.select(*_KEY3))
+    return _null_safe(kg_entailment(both, max_iter),
+                      kg_entailment(old, max_iter), _KEY3, "left_anti")
+
+
 def kg_entailment_retract(old: DataFrame, removed: DataFrame,
                           max_iter: int = 32) -> DataFrame:
-    """Delete/re-derive (DRed) maintenance of the entailment
-    saturation — the deletion counterpart of kg_entailment_delta:
-    asserted edges are retracted (takedown / correction), and the
-    materialized closure is maintained with work proportional to the
-    AFFECTED derivations, never a re-closure of the full store.
-    Returns exactly kg_entailment(old minus removed) — the oracle
-    recomputes that from scratch, so parity proves DRed == full.
-
-    Classic DRed, specialized per transitive family (p, inverse q)
-    over the canonical direction:
-
-      1. OVERDELETE: a closure pair can depend on a deleted canonical
-         edge (u, v) only if it factors as x ->* u -> v ->* y, so the
-         suspect set O = (I + C0) . dp . (I + C0) — two delta-seeded
-         equi-joins against the OLD closure C0 (at 100 TB, the stored
-         entailment table; recomputed here because the demo store is
-         transient). Everything outside O has no derivation touching a
-         deleted edge and PASSES THROUGH (one anti-join).
-      2. REDERIVE: a suspect survives iff still derivable from the
-         surviving base b1. A surviving path splits at any midpoint
-         into two C1 pairs — each Kept or an already-rederived
-         suspect — so rederivation is an endpoint-anchored DOUBLING
-         fixpoint: seed with O's still-asserted edges, compose
-         (Kept + acc) with itself with the left factor anchored to
-         suspect subjects and the right to suspect objects, semi-join
-         results to O. O(log path-length) rounds; join input stays
-         proportional to closure rows anchored at suspect endpoints,
-         and no work leaves the suspect set.
-
-    The inverse rule is linear, so its maintenance is exact deletion:
-    re-emit inverse(surviving asserted). Output contract identical to
+    """Entailment maintenance when asserted edges are retracted
+    (takedown / correction): kg_entailment of `old` without the rows of
+    `removed`, matched with None == None so that a removed row with a
+    null endpoint still finds itself. Output contract identical to
     kg_entailment (inferred rows only, rule provenance, asserted rows
-    suppressed)."""
-    pe = old.select(*_KEY3).distinct().localCheckpoint(eager=True)
-    rm = _null_safe(removed.select(*_KEY3).distinct(), pe, _KEY3,
-                    "left_semi")
-    pk = _null_safe(pe, rm, _KEY3, "left_anti").localCheckpoint(eager=True)
-    c0 = _closures({p: _canon(pe, p, q) for p, q in _FAMILIES.items()},
-                   "kg_entailment_retract old", max_iter)
-    parts = [_inverse_rows(pk, "inverse")]
-    for p, q in _FAMILIES.items():
-        b1 = _canon(pk, p, q).localCheckpoint(eager=True)
-        dp = _null_safe(_canon(pe, p, q), b1, _PAIR, "left_anti")
-        # overdelete: suspects that can factor through a deleted edge
-        left = dp.unionByName(_compose(c0[p], dp)).distinct()
-        o = _null_safe(left.unionByName(_compose(left, c0[p])).distinct(),
-                       c0[p], _PAIR, "left_semi").localCheckpoint(eager=True)
-        kept = _null_safe(c0[p], o, _PAIR, "left_anti") \
-            .localCheckpoint(eager=True)
-        # rederive inside the suspect set: endpoint-anchored DOUBLING.
-        # A surviving suspect path splits at ANY midpoint into two
-        # closure pairs, each Kept or an already-rederived suspect, so
-        # composing U = kept + acc with itself doubles covered path
-        # length per round (O(log L) rounds — right-linear one-edge
-        # extension needed O(L) and hit max_iter on sf0.1's long
-        # chains). Both factors are semi-joined to the suspect
-        # ENDPOINTS (left starts at a suspect subject, right ends at a
-        # suspect object), so join input stays proportional to
-        # closure rows anchored at suspects, not the full Kept set;
-        # results are semi-joined to O as before — no work leaves the
-        # suspect set. The step reads the whole accumulated set, not
-        # the frontier.
-        subs = o.select("subject").distinct().localCheckpoint(eager=True)
-        objs = o.select("object").distinct().localCheckpoint(eager=True)
+    suppressed).
 
-        def rederive(_new: DataFrame, acc: DataFrame) -> DataFrame:
-            u = kept.unionByName(acc)
-            # re-select after the semi-joins: join-on-key moves the key
-            # column first, and _compose renames POSITIONALLY
-            ul = u.join(subs, "subject", "left_semi").select(*_PAIR)
-            ur = u.join(objs, "object", "left_semi").select(*_PAIR)
-            return (_compose(ul, ur).distinct()
-                    .join(o, _PAIR, "left_semi"))
-
-        acc = fixpoint(
-            _null_safe(b1, o, _PAIR, "left_semi").localCheckpoint(eager=True),
-            rederive, _PAIR, f"kg_entailment_retract rederivation of {p!r}",
-            max_iter)
-        parts.append(_both_ways(kept.unionByName(acc), p, q, "transitive"))
-    return (reduce(DataFrame.unionByName, parts)
-            .join(pk, _KEY3, "left_anti").distinct())
+    One anti-join and one kg_entailment: an ontology-sized store is one
+    bounded collection solved in the driver. Delete/re-derive would
+    need the old closure as well, which costs the same full closure
+    before its own per-round joins."""
+    kept = _null_safe(old.select(*_KEY3), removed.select(*_KEY3), _KEY3,
+                      "left_anti")
+    return kg_entailment(kept, max_iter)
 
 
 CONSTRUCT_P = "located_in"

@@ -48,22 +48,23 @@ NER_PATTERN = jvm_word_bounded(surfaces())  # ner.ner_pattern() for the JVM
 _P = spark_sql_str(PHRASE_PATTERN)
 RELATION_SPAN = f"kind = 'text' AND regexp_count(lower(text), {_P}) = 1"
 
-# all matching is on lower(text), as NER's (the phrases are lowercase),
-# and offsets count code points, as m_off, length and substring do
+# all matching is on lc = lower(text), as NER's (the phrases are
+# lowercase), projected once for the phrase and endpoint expressions;
+# offsets count code points, as m_off, length and substring do
 # (regexp_instr counts UTF-16 units). p0 is the length of the text before
 # the SAME word-bounded pattern (locate(phrase, text) would find 'is a'
 # in 'axis aligns'). Later aliases use earlier ones (lateral aliases).
 _PHRASE_EXPRS = (
-    "doc_id", "pos", "text",
-    f"regexp_extract(lower(text), {_P}, 1) AS phrase",
-    f"length(split(lower(text), {_P}, 2)[0]) AS p0",
+    "doc_id", "pos", "text", "lower(text) AS lc",
+    f"regexp_extract(lc, {_P}, 1) AS phrase",
+    f"length(split(lc, {_P}, 2)[0]) AS p0",
     "length(phrase) AS plen",
 )
 # PICK's bounds: the last match before the phrase, the first after it
 _N = spark_sql_str(NER_PATTERN)
-ENDPOINTS = (f"try_element_at(regexp_extract_all(substring(lower(text), 1, "
-             f"p0), {_N}, 1), -1) AS s",
-             f"nullif(regexp_extract(substring(lower(text), p0 + plen + 2), "
+ENDPOINTS = (f"try_element_at(regexp_extract_all(substring(lc, 1, p0), "
+             f"{_N}, 1), -1) AS s",
+             f"nullif(regexp_extract(substring(lc, p0 + plen + 2), "
              f"{_N}, 1), '') AS o")
 # structs order by their first field, m_off (distinct within a span);
 # no candidate gives NULL
@@ -90,7 +91,8 @@ _TRIPLE_EXPRS = (
 def relation_phrases(spans: DataFrame) -> DataFrame:
     """The spans a triple can come from (kind 'text', exactly one
     predicate phrase in the lower-cased text) as (doc_id, pos, text,
-    phrase, p0, plen). A map-side JVM filter and projection."""
+    lc, phrase, p0, plen), lc being lower(text). A map-side JVM filter
+    and projection."""
     return spans.filter(RELATION_SPAN).selectExpr(*_PHRASE_EXPRS)
 
 

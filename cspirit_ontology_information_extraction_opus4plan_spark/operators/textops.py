@@ -215,7 +215,7 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
 def minhash_delta_pairs(docs: DataFrame, delta_ids: DataFrame) -> DataFrame:
     """Semi-naive near-dup maintenance under a re-crawl delta — the
     dedup member of the incremental family (canonicalize.
-    incremental_components, graphops.kg_entailment_delta): emit exactly
+    incremental_components): emit exactly
     the near-dup pairs the delta ADDS — (old, new) and (new, new) —
     without ever joining old bands against old bands.
 

@@ -6196,10 +6196,8 @@ WHERE NOT EXISTS (SELECT 1 FROM pe
                     AND pe.predicate = n.predicate
                     AND pe.object = n.object)""")
 
-    # kg_entailment_retract: the engine maintains the closure via DRed
-    # (overdelete + rederive); the oracle recomputes the saturation
-    # from scratch over the SURVIVING asserted edges — parity proves
-    # DRed == full re-closure
+    # kg_entailment_retract: the oracle recomputes the saturation with
+    # recursive SQL over the SURVIVING asserted edges
     # AMIE chain rules over the SATURATED uri-uri store (asserted +
     # inverse + transitive closure — the same tc_/invmap machinery as
     # kg_entailment, with pe restricted to uri endpoints): body
@@ -6301,10 +6299,8 @@ SELECT CAST(count(*) AS BIGINT) AS n_stubs,
        round(corr(ds, dd), 6) AS assortativity
 FROM stubs""")
 
-    # kg_entailment_delta oracle: deliberately NOT semi-naive — it
-    # saturates old and old+delta in full (two recursive closures per
-    # family) and subtracts, so the parity check exercises a different
-    # algorithm than the engine's delta-frontier evaluation
+    # kg_entailment_delta oracle: saturates old and old+delta with
+    # recursive SQL (two recursive closures per family) and subtracts
     fam2_ctes, eo_emits, ea_emits = [], [], []
     for p in TRANSITIVE_PREDICATES:
         qp = OD.INVERSE_PREDICATES.get(p)

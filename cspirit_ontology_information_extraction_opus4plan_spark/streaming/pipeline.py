@@ -41,7 +41,9 @@ on plain parquet, the shape Iceberg gives a table:
     restart); a maintenance commit adds `compaction` or `action`. The
     counts come from the write itself (checkpointing.observe_counts).
     A `v=N` without a marker never committed and is invisible;
-    store_history is the list of markers;
+    store_history is the pointer's version and its parent chain, so a
+    marker the pointer never reached (a crash between the two) is not
+    listed;
   * pointer: `_latest.json` is {version, parent}, published atomically
     after the marker; readers resolve the current version through it;
   * version and parent (`_commit_target`): a stream batch whose stream
@@ -480,26 +482,32 @@ def stream_daily_counts(spark: SparkSession, input_dir: str,
 # --- snapshot maintenance (the Iceberg metadata surface) ---------------------
 
 def store_history(spark: SparkSession, store_dir: str) -> list[dict]:
-    """The committed snapshot log, latest first: one dict per version
-    {version, parent, n_rows, is_current} — Iceberg's snapshot-list
-    read, reconstructed from the per-version commit markers. A version
-    dir without a marker never committed (torn write) and is invisible,
-    exactly like the pointer-based reader."""
+    """The snapshot log, latest first: one dict per version {version,
+    parent, n_rows, is_current} — Iceberg's snapshot-list read, walked
+    from the pointer's version along each marker's parent. A version
+    the pointer never reached (its writer died between the marker and
+    the pointer, and a later commit built on the pointer instead) is
+    not on that chain, and neither is a dir without a marker (a torn
+    write). The chain ends at the first version with no marker, so an
+    expired version ends it."""
     ptr = _read_pointer(spark, store_dir)
     if not ptr:
         return []
-    out = []
-    for v in reversed(_committed_versions(spark, store_dir)):
+    committed = set(_committed_versions(spark, store_dir))
+    out, v = [], ptr["version"]
+    while v in committed:
         c = _fs_read_json(spark, _marker_path(store_dir, v))
-        c["is_current"] = c["version"] == ptr["version"]
+        c["is_current"] = v == ptr["version"]
         out.append(c)
+        v = c["parent"]
     return out
 
 
 def store_at_version(spark: SparkSession, store_dir: str,
                      version: int) -> DataFrame:
     """Time-travel read: the store exactly as of snapshot `version`
-    (Iceberg's VERSION AS OF). Only committed versions are readable."""
+    (Iceberg's VERSION AS OF). Only the versions store_history lists
+    are readable."""
     committed = {c["version"] for c in store_history(spark, store_dir)}
     if version not in committed:
         raise ValueError(
@@ -541,11 +549,11 @@ def store_changes(spark: SparkSession, store_dir: str,
 def expire_store_versions(spark: SparkSession, store_dir: str,
                           keep_last: int = 2) -> list[int]:
     """Snapshot expiry (Iceberg's expire_snapshots maintenance pass,
-    deliberately OUT of the hot path): delete every committed version
-    dir + marker except the `keep_last` most recent, and never the
-    current pointer's version or its parent (while the pointer is a
-    stream batch's commit, a replay of that batch rebuilds it from that
-    parent). Returns the expired version numbers."""
+    deliberately OUT of the hot path): delete every version dir +
+    marker store_history lists except the `keep_last` most recent, and
+    never the current pointer's version or its parent (while the
+    pointer is a stream batch's commit, a replay of that batch rebuilds
+    it from that parent). Returns the expired version numbers."""
     ptr = _read_pointer(spark, store_dir)
     if not ptr:
         return []
@@ -642,38 +650,28 @@ def stream_entailment_triples(spark: SparkSession, input_dir: str,
                               store_dir: str, checkpoint_dir: str,
                               trigger_available_now: bool = True):
     """Streaming OWL entailment maintenance: each micro-batch upserts
-    its asserted edges AND brings the materialized saturation forward
-    via graphops.kg_entailment_delta — semi-naive frontiers sized by
-    the BATCH, never a re-closure of the accumulated store. Versioned
-    snapshots + atomic pointer, the same exactly-once discipline as
-    stream_merge_triples; each version commits two tables together
-    (v=N/asserted, v=N/inferred).
+    its asserted edges and re-saturates the new asserted table with
+    graphops.kg_entailment (one bounded driver solve for an
+    ontology-sized store). Versioned snapshots + atomic pointer, the
+    same exactly-once discipline as stream_merge_triples; each version
+    commits two tables together (v=N/asserted, v=N/inferred).
 
-    The inferred table is maintained at (subject, predicate, object)
-    granularity: growth is monotone on the saturation, so
-        inferred' = (inferred + delta-inferred) minus asserted'
-    — the subtraction also retires a previously-inferred edge the
-    moment it arrives asserted. Rule provenance is deliberately NOT
-    maintained here: an edge can gain additional derivations as the
-    graph grows (a transitive-only edge becomes inverse-derivable when
-    its flip is asserted), and reconstructing per-rule rows would
-    re-run the full rules over the store — the batch operator
-    kg_entailment exists for provenance audits."""
-    from ..operators.graphops import kg_entailment_delta
+    The inferred table is kept at (subject, predicate, object)
+    granularity, kg_entailment(asserted') without its rule column:
+    kg_entailment suppresses asserted edges, so an edge inferred
+    before retires the moment it arrives asserted. Rule provenance is
+    deliberately NOT kept here — the batch operator kg_entailment
+    exists for provenance audits."""
+    from ..operators.graphops import kg_entailment
     from ..operators.relations import dedup_triples
 
     def step(batch_df: DataFrame, parent) -> list[Table]:
         inc = (dedup_triples(triples_from_docs(batch_df))
                .select("subject", "predicate", "object").distinct())
-        old_a = parent("asserted", inc.limit(0))
-        old_i = parent("inferred", inc.limit(0))
-        delta_inf = (kg_entailment_delta(old_a, inc)
-                     .select("subject", "predicate", "object"))
-        asserted = (old_a.unionByName(inc).distinct()
-                    .localCheckpoint(eager=True))
-        inferred = (old_i.unionByName(delta_inf).distinct()
-                    .join(asserted, ["subject", "predicate", "object"],
-                          "left_anti"))
+        asserted = (parent("asserted", inc.limit(0)).unionByName(inc)
+                    .distinct().localCheckpoint(eager=True))
+        inferred = (kg_entailment(asserted)
+                    .select("subject", "predicate", "object").distinct())
         return [("asserted", asserted, "n_asserted"),
                 ("inferred", inferred, "n_inferred")]
 

@@ -115,6 +115,19 @@ def test_triples_ner_reads_only_relation_spans(triples_plan):
     assert all(_has_phrase_filter(sub[1:]) for sub in subs)
 
 
+def test_triples_plan_lower_cases_each_span_once(spark, sf_dir):
+    """lower(text) appears twice in the optimized triples plan: in the
+    relation-span filter, and in the one projection (lc) below the
+    phrase and endpoint expressions, which all read that column."""
+    plan = api.q_triples(spark, sf_dir)._jdf.queryExecution() \
+        .optimizedPlan().toString()
+    lines = [ln for ln in plan.splitlines() if "lower(" in ln]
+    assert [ln.count("lower(") for ln in lines] == [1, 1], lines
+    project, phrase_filter = lines
+    assert "Project" in project and " AS lc" in project, project
+    assert _has_phrase_filter([phrase_filter]), phrase_filter
+
+
 def test_ner_mentions_scans_every_span(spark, sf_dir):
     plan = _plan(api.q_ner_mentions(spark, sf_dir))
     assert plan.count("MapInPandas") == 1
@@ -1012,6 +1025,27 @@ def test_semi_naive_loops_live_in_fixpoint():
                      **_FIXPOINT_LOOP_ALLOWLIST}, found
 
 
+def test_entailment_maintenance_is_kg_entailment():
+    """kg_entailment_delta and kg_entailment_retract are compositions of
+    kg_entailment with one null-safe anti-join: neither runs a closure
+    or a fixpoint of its own."""
+    import ast
+    import pathlib
+
+    src = pathlib.Path(
+        "cspirit_ontology_information_extraction_opus4plan_spark"
+        "/operators/graphops.py").read_text()
+    fns = {fn.name: fn for fn in ast.parse(src).body
+           if isinstance(fn, ast.FunctionDef)}
+    for name in ("kg_entailment_delta", "kg_entailment_retract"):
+        called = [getattr(n.func, "id", getattr(n.func, "attr", ""))
+                  for n in ast.walk(fns[name]) if isinstance(n, ast.Call)]
+        assert "kg_entailment" in called, name
+        assert called.count("_null_safe") == 1, name
+        assert not {"fixpoint", "_closures", "_doubling_closure",
+                    "_entail_distributed"} & set(called), name
+
+
 def test_store_protocol_lives_in_one_place():
     """streaming/pipeline.py holds the versioned-store protocol once:
     the stream driver is the only foreachBatch, the commit is the only
@@ -1172,3 +1206,14 @@ def test_materialize_writes_with_at_most_one_task_per_core(spark, sf_dir,
     assert max(st.numTasks for st in write) == cores, write
     assert all(st.numTasks <= cores
                for job in stages.values() for st in job), stages
+
+
+@pytest.mark.parametrize("name,bound", [("kg_entailment_retract", 10),
+                                        ("kg_entailment_delta", 12)])
+def test_entailment_maintenance_job_count(spark, sf_dir, name, bound):
+    """Each maintenance query, from its documents to the collected
+    result, runs a handful of Spark jobs on an ontology-sized store: the
+    extraction, one bounded collection per kg_entailment and the
+    result. A closure with per-round checkpoints runs dozens."""
+    q = api.queries()[name]
+    assert _job_count(spark, lambda: q(spark, sf_dir).collect()) <= bound

@@ -908,3 +908,44 @@ def test_replay_after_maintenance_applies_batch_once(spark, sf_dir, staged,
     pd.testing.assert_frame_equal(
         _sorted(current_store(spark, store).toPandas()),
         _sorted(want.toPandas()))
+
+
+def test_commit_the_pointer_never_reached_leaves_history(spark, staged):
+    """The driver dies between batch 1's marker and its pointer, and a
+    compaction of v0 runs before the restart, which replays batch 1 on
+    top of it. Version 1 was never current and no later version holds
+    its rows: it is not in the history and not readable by time travel,
+    and its number is not reused."""
+    import os
+
+    from cspirit_ontology_information_extraction_opus4plan_spark.plans.checkpointing import (  # noqa: E501
+        _fs_write_json_atomic,
+    )
+    from cspirit_ontology_information_extraction_opus4plan_spark.streaming.pipeline import (  # noqa: E501
+        _read_pointer,
+        compact_store_version,
+        current_store,
+        store_at_version,
+        store_history,
+        stream_merge_triples,
+    )
+
+    in_dir, out_dir, ckpt = staged
+    store = out_dir + "_store"
+    stream_merge_triples(spark, in_dir, store, ckpt).awaitTermination(120)
+    os.remove(f"{ckpt}/commits/1")
+    os.remove(f"{ckpt}/commits/.1.crc")
+    _fs_write_json_atomic(spark, f"{store}/_latest.json",
+                          {"version": 0, "parent": None})
+    compact_store_version(spark, store, target_files=2)
+    stream_merge_triples(spark, in_dir, store, ckpt).awaitTermination(120)
+
+    assert _read_pointer(spark, store) == {"version": 3, "parent": 2}
+    hist = store_history(spark, store)
+    assert [h["version"] for h in hist] == [3, 2, 0]
+    assert [h["parent"] for h in hist] == [2, 0, None]
+    with pytest.raises(ValueError, match="not a committed snapshot"):
+        store_at_version(spark, store, 1)
+    assert store_at_version(spark, store, 2).count() == hist[1]["n_rows"]
+    assert current_store(spark, store).agg(
+        F.sum("support")).first()[0] == 496
